@@ -193,37 +193,56 @@ object SchemaHistory {
     * are referenced more than once and not cheap.
     */
   def deserializeEvolved(wire: DataFrame, history: History): DataFrame = {
+    val parsed = wire.select(versionParses(history, lit(true))
+      .zipWithIndex.map { case (p, i) => p.as(s"_p$i") }: _*)
+    parsed.select(canonicalEnvelope(history,
+        history.versions.indices.map(i => col(s"_p$i")), history.canonical)
+        .as("e"))
+      .select(col("e.*"))
+      .withColumn("schema_version", history.versionAt(col("ts_ms")))
+  }
+
+  /** The first projection of `deserializeEvolved`: per version, the row's
+    * envelope parsed with that version's schema — null unless the version
+    * is active for the row and `rowGuard` holds.
+    */
+  private[graft] def versionParses(history: History,
+                                   rowGuard: Column): Seq[Column] = {
     val vs = history.versions
     val tsProbe = get_json_object(col("value"), "$.ts_ms").cast("long")
-    val guards = vs.zipWithIndex.map { case (v, i) =>
+    vs.zipWithIndex.map { case (v, i) =>
       val upper =
         if (i + 1 < vs.length) tsProbe < vs(i + 1).fromTsMs else lit(true)
-      if (i == 0) upper else tsProbe >= v.fromTsMs && upper
+      val g = if (i == 0) upper else tsProbe >= v.fromTsMs && upper
+      when(rowGuard && g, from_json(col("value"), Schemas.envelope(v.schema)))
     }
-    val parsed = wire.select(
-      guards.zip(vs).zipWithIndex.map { case ((g, v), i) =>
-        when(g, from_json(col("value"), Schemas.envelope(v.schema))).as(s"_p$i")
-      }: _*)
-    val branches = vs.indices.map { i =>
-      val p = col(s"_p$i")
+  }
+
+  /** The second projection of `deserializeEvolved`: the canonical envelope
+    * built from the materialized `versionParses` columns, with
+    * `before`/`after` typed as `row` — the canonical view or a superset of
+    * it with the same field types; fields outside the canonical view are
+    * null. Null when no version parsed the row.
+    */
+  private[graft] def canonicalEnvelope(history: History, parsed: Seq[Column],
+                                       row: StructType): Column = {
+    val byName = history.canonicalFields.map { case (n, _, lin) => n -> lin }.toMap
+    val branches = parsed.zipWithIndex.map { case (p, i) =>
       def canon(side: String): Column = {
-        val fields = history.canonicalFields.map { case (name, dt, lin) =>
-          lin.local(i) match {
+        val fields = row.fields.toIndexedSeq.map { f =>
+          byName.get(f.name).flatMap(_.local(i)) match {
             case Some(local) =>
-              p.getField(side).getField(local).cast(dt).as(name)
-            case None => lit(null).cast(dt).as(name)
+              p.getField(side).getField(local).cast(f.dataType).as(f.name)
+            case None => lit(null).cast(f.dataType).as(f.name)
           }
         }
-        when(p.getField(side).isNotNull, struct(fields.toIndexedSeq: _*))
-          .as(side)
+        when(p.getField(side).isNotNull, struct(fields: _*)).as(side)
       }
       when(p.isNotNull, struct(canon("before"), canon("after"),
         p.getField("source").as("source"),
         p.getField("op").as("op"),
         p.getField("ts_ms").as("ts_ms")))
     }
-    parsed.select(coalesce(branches: _*).as("e"))
-      .select(col("e.*"))
-      .withColumn("schema_version", history.versionAt(col("ts_ms")))
+    coalesce(branches: _*)
   }
 }

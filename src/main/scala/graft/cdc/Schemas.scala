@@ -102,6 +102,24 @@ object Schemas {
       StructField("vesting_months", IntegerType),
       StructField("created_at", TimestampType))))
 
+  /** One row schema holding every column of `rows` (table -> row schema),
+    * in first-seen order, so one `from_json` can parse envelopes of all
+    * those tables. A column two tables declare with different types fails
+    * loudly, naming the column and both tables: there is no type one parse
+    * could give it for both.
+    */
+  def union(rows: Seq[(String, StructType)]): StructType = {
+    val seen = scala.collection.mutable.LinkedHashMap.empty[String, (String, StructField)]
+    for ((t, row) <- rows; f <- row.fields) seen.get(f.name) match {
+      case Some((t0, f0)) =>
+        require(f0.dataType == f.dataType,
+          s"column ${f.name} is ${f0.dataType.simpleString} in $t0 but " +
+            s"${f.dataType.simpleString} in $t: the tables cannot share one parse")
+      case None => seen(f.name) = (t, f)
+    }
+    StructType(seen.values.map(_._2).toSeq)
+  }
+
   val source: StructType = StructType(Seq(
     StructField("version", StringType),
     StructField("connector", StringType),

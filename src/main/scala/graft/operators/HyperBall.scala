@@ -209,13 +209,14 @@ object HyperBall {
         // resume: the persisted frame max-merges with fresh self-balls
         // (new nodes get their self register; old registers only grow).
         // ADVICE r15: widen() would silently DROP seed registers whose
-        // bucket falls outside [0, 2^p) — a frame persisted at a larger p
-        // must fail loudly, not lose registers
+        // bucket falls outside [0, 2^p) or is null — a frame persisted at
+        // a larger p, or a damaged one, must fail loudly, not lose
+        // registers (a null bucket makes the range test null, not true)
         val guarded = sd.select(col("node").cast("long").as("node"),
-          when(col("bucket").cast("long") < 0 ||
+          when(col("bucket").isNull || col("bucket").cast("long") < 0 ||
               col("bucket").cast("long") >= m,
             raise_error(concat(lit("HyperBall resume: seed bucket "),
-              col("bucket").cast("string"),
+              coalesce(col("bucket").cast("string"), lit("null")),
               lit(s" outside [0, $m) — the seed frame was built at a " +
                 "different p"))))
             .otherwise(col("bucket").cast("long")).as("bucket"),

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.cdc.{ChangeStream, Rules, Schemas, Validate}
+import graft.cdc.{Rules, SchemaHistory, Schemas, Validate}
 
 /** The end-to-end streaming CDC pipeline (O-1 → O-32): change-ledger source
   * → typed envelopes → single-pass rule engine → validation split →
@@ -39,15 +39,18 @@ import graft.cdc.{ChangeStream, Rules, Schemas, Validate}
   * the write exchange entirely — the whole batch is TWO stages. Large
   * batches hash-partition on (sink, dir, salt(eventId)) so a hot
   * month/subject fans out `WriteSpread` ways and files/dir stays bounded.
-  * Measured via `graft.BatchCostProbe` / `graft.StreamBenchProbe`
-  * (local[32], warm): fused 20k-event batch ~1.0 s end-to-end, streaming
-  * P95 batch latency ~1.3 s at 20k-event admission (KPI <2 s met with
-  * margin), sustained ~19k events/s on small batches, 100k-event batch
-  * ~3.2 s (~32k ev/s). The last round-4 fix: foreachBatch hands the
-  * function an `RDDScanExec` wrapper, so `batchInfo` must read planned
-  * partitions off the underlying DataSourceRDD — before that, every
-  * production batch silently paid a second full source scan in the
-  * presentTables fallback.
+  * Multi-table batches take the same single path — one parse against the
+  * union row schema and one rule `explode` for every table (`transform`),
+  * nothing cached — so a direct-write batch is 2 Spark jobs whatever its
+  * table mix (pinned in PipelineSpec). `batchInfo` reads the planned
+  * partitions off the `RDDScanExec` wrapper foreachBatch hands the
+  * function (its underlying DataSourceRDD), so the table set and byte
+  * total cost no Spark job.
+  * Measured via `graft.StreamBenchProbe` (local[32], warm, single-table):
+  * streaming P95 batch latency ~1.3 s at 20k-event admission (KPI <2 s
+  * met with margin), sustained ~19k events/s on small batches, 100k-event
+  * batch ~3.2 s (~32k ev/s); multi-table trickle latency by the `cdc`
+  * workload of `perfbench/`.
   */
 object Pipeline {
 
@@ -84,39 +87,61 @@ object Pipeline {
   val ThroughputTuning: Map[String, String] = Map.empty
   val ThroughputAdmissionEvents = 50000
 
-  /** Wire rows → domain events: typed per-table envelopes through the
-    * single-pass rule engine, unioned. For multi-table batches call on a
-    * MATERIALIZED (persisted) batch: the per-table branches then read from
-    * memory, not N× from disk.
+  /** Wire rows → domain events in ONE pass for every table of the batch:
+    * the wire is filtered to the rule tables in play (`presentTables`, or
+    * every rule table when None), each row is parsed ONCE against the
+    * union row schema of those tables (`Schemas.union` — a column two
+    * tables type differently fails loudly), and every table's rules run in
+    * one `explode` (`Rules.applyTables`). Each rule is guarded on the
+    * row's ledger `table` as well as its own dispatch, and full-image
+    * payloads list their own table's columns, so the events are exactly
+    * those of parsing and transforming each table on its own. One scan,
+    * one parse, one generator: no per-table branches, no union, no cache.
     *
     * `histories`: tables with a registered schema history decode through
-    * `SchemaHistory.deserializeEvolved` — rows written under ANY past
-    * envelope version (additive / renamed / widened fields) surface in the
-    * canonical latest view before the rules run, the Debezium
-    * schema-history semantics (decode at any binlog position). Tables
-    * without a history use the static schema as before.
+    * `SchemaHistory.deserializeEvolved`'s version-selected parse in the
+    * same projection — rows written under ANY past envelope version
+    * (additive / renamed / widened fields) surface in the canonical
+    * latest view before the rules run, the Debezium schema-history
+    * semantics (decode at any binlog position). Tables without a history
+    * use the static schema.
     */
   def transform(wire: DataFrame,
                 presentTables: Option[Seq[String]] = None,
-                histories: Map[String, graft.cdc.SchemaHistory.History] =
+                histories: Map[String, SchemaHistory.History] =
                   Map.empty): DataFrame = {
-    val tables = Rules.all.map(_.table).distinct
+    val tables = Rules.tables
       .filter(t => Schemas.tables.contains(t) || histories.contains(t))
     val active = presentTables.fold(tables)(p => tables.filter(p.contains))
-    if (active.isEmpty)
-      wire.sparkSession.createDataFrame(
-        wire.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.domainEvent)
-    else active.map { t =>
-      val byTable = wire.filter(col("table") === t)
-      val envelopes = histories.get(t) match {
-        case Some(h) =>
-          graft.cdc.SchemaHistory.deserializeEvolved(byTable, h)
-            .drop("schema_version")
-        case None => ChangeStream.deserialize(byTable, Schemas.tables(t))
+    if (active.isEmpty) return Rules.noEvents(wire.sparkSession)
+    val rows = active.map(t =>
+      t -> histories.get(t).fold(Schemas.tables(t))(_.canonical))
+    val row = Schemas.union(rows)
+    val (evolved, plain) = active.partition(histories.contains)
+    def version(k: Int, i: Int) = s"_v${k}_$i"
+    // first projection: each row's one parse — the union-schema parse for
+    // plain tables, the version-selected parse for history tables (each
+    // guarded on the ledger table, so exactly one evaluates per row)
+    val parses =
+      (if (plain.isEmpty) Nil
+       else Seq(when(col("table").isin(plain: _*),
+         from_json(col("value"), Schemas.envelope(row))).as("_u"))) ++
+      evolved.zipWithIndex.flatMap { case (t, k) =>
+        SchemaHistory.versionParses(histories(t), col("table") === t)
+          .zipWithIndex.map { case (p, i) => p.as(version(k, i)) }
       }
-      Rules.applyAll(envelopes, t)
-    }.reduce(_.unionByName(_))
+    // second projection: whichever parse fired, typed to the union row
+    val envelope = (if (plain.isEmpty) Nil else Seq(col("_u"))) ++
+      evolved.zipWithIndex.map { case (t, k) =>
+        val h = histories(t)
+        SchemaHistory.canonicalEnvelope(h,
+          h.versions.indices.map(i => col(version(k, i))), row)
+      }
+    val envelopes = wire.filter(col("table").isin(active: _*))
+      .select(col("table") +: parses: _*)
+      .select(col("table"), coalesce(envelope: _*).as("e"))
+      .select(col("table"), col("e.*"))
+    Rules.applyTables(envelopes, rows)
   }
 
   /** Idempotent batch write: land in `partitionCols + _batch_id` partitions
@@ -350,9 +375,7 @@ object Pipeline {
     val dir = new Path(publishDir(sinkRoot))
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (ids.isEmpty || !fs.exists(dir))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        Schemas.domainEvent)
+      return Rules.noEvents(spark)
     val w = ids.max
     spark.read.parquet(dir.toString)
       .where((col("_batch_id") >= 0 && col("_batch_id") <= w) ||
@@ -391,8 +414,8 @@ object Pipeline {
     * wrapper foreachBatch actually receives (production streaming — round
     * 4 found the streaming path silently hit the fallback scan every
     * batch, doubling source reads). Returns None only when neither shape
-    * exposes ChangeLogPartitions, in which case the caller falls back to
-    * scanning (and the conservative exchange-based write path).
+    * exposes ChangeLogPartitions, in which case the caller plans every
+    * rule table and takes the conservative exchange-based write path.
     */
   private[streaming] def batchInfo(wire: DataFrame): Option[(Seq[String], Long)] = {
     val parts = wire.queryExecution.executedPlan.collect {
@@ -404,9 +427,6 @@ object Pipeline {
     Some((parts.map(_.table).distinct, parts.map(_.length).sum))
       .filter(_._1.nonEmpty)
   }
-
-  private[streaming] def presentTables(wire: DataFrame): Option[Seq[String]] =
-    batchInfo(wire).map(_._1)
 
   /** Run the maintenance hooks for one micro-batch — CONCURRENTLY when
     * there is more than one (each hook is an independent idempotent
@@ -472,7 +492,7 @@ object Pipeline {
           checkpoint: String,
           maxFilesPerTrigger: Option[Int] = None,
           trigger: Trigger = Trigger.AvailableNow(),
-          histories: Map[String, graft.cdc.SchemaHistory.History] = Map.empty,
+          histories: Map[String, SchemaHistory.History] = Map.empty,
           failpoint: Long => Unit = _ => (),
           tuning: Map[String, String] = Map.empty,
           maintenance: Seq[(DataFrame, Long) => Unit] = Seq.empty,
@@ -480,7 +500,7 @@ object Pipeline {
     // Latency tuning for the micro-batch work: with the defaults, AQE
     // coalesces the dedup exchange of a small batch to ONE partition and
     // the whole dedup+explode+sort+write tail serializes into one task
-    // (measured +400 ms per 20k-event batch, graft.BatchCostProbe).
+    // (measured +400 ms per 20k-event batch, round 4).
     // parallelismFirst + a small floor keeps ~10 tasks on that stage while
     // still bounding files/dir (compaction absorbs the rest). The confs
     // apply to a CLONED session so the caller's session keeps its own
@@ -514,59 +534,52 @@ object Pipeline {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (wire: DataFrame, batchId: Long) =>
-        // plan only the per-table branches the batch actually contains —
-        // the other tables' parse+rule codegen units are never planned.
-        // The table set comes straight off the batch's planned input
+        // parse only the rule tables the batch actually contains. The
+        // table set comes straight off the batch's planned input
         // partitions (each one a ledger byte range tagged with its table):
-        // zero extra Spark jobs. Falls back to a distinct scan if the
-        // plan shape ever changes.
+        // zero extra Spark jobs. If the plan shape ever hides them, every
+        // rule table is planned — the filter on the wire's `table` column
+        // makes that correct, only a wider parse schema.
         val info = batchInfo(wire)
-        val present = info.map(_._1).getOrElse(
-          wire.select("table").distinct().collect().map(_.getString(0)).toSeq)
         // small batches (admitted bytes known and under the threshold) skip
         // the write exchange entirely: two stages, ~one file per dir
         val direct = info.exists(_._2 <= DirectWriteMaxBytes)
-        // single-table batches (the common CDC case) run ONE fused job:
-        // scan → parse → rules → validate → dedup-shuffle → sort+write
-        // → commit; only multi-table batches persist the wire so the N
-        // per-table branches read from memory instead of N× from disk
-        val multi = present.size > 1
-        if (multi) wire.persist()
-        try {
-          val events = transform(wire, Some(present), histories)
-          val valid = Validate.split(events).valid
-          // within-batch dedup on the deterministic eventId: same id ⇒
-          // identical row (rules are pure), so hash-based dropDuplicates
-          // suffices — no sort, no window. Cross-batch duplicates are
-          // handled by Dedup.withinWatermark or absorbed by replay
-          // idempotence.
-          val deduped = valid.dropDuplicates("eventId")
-          // publish FIRST: consumers see the batch as soon as the
-          // marker lands; the idempotent state writers trail inside
-          // the same (uncommitted) micro-batch
-          storeThenPublish(deduped, batchId, sinkRoot, direct, failpoint)
-          postPublishFailpoint(batchId)
-          if (maintenance.nonEmpty && storeHasData(
-              deduped.sparkSession, sinkRoot)) {
-            // hooks read the batch BACK from the store partition that
-            // just committed, not from a persist of the upstream plan:
-            // a persist would materialize its cache inside the sink
-            // scan and tax the publish latency (~+0.4 s per 50k-event
-            // batch, Round13StreamMaintProbe), while the columnar
-            // read-back costs ~0.3 s in the trailing phase and keeps
-            // one ledger parse per batch. Persisted across the N
-            // concurrent hooks so they share one scan. The storeHasData
-            // guard covers the degenerate every-batch-so-far-empty
-            // stream (an all-invalid first batch writes no parquet —
-            // nothing exists to maintain, and the read would fail on
-            // schema inference).
-            val fromStore = batchFromStore(
-              deduped.sparkSession, sinkRoot, batchId)
-            fromStore.persist()
-            try runMaintenance(maintenance, fromStore, batchId)
-            finally fromStore.unpersist()
-          }
-        } finally if (multi) wire.unpersist()
+        // every batch, single- or multi-table, is ONE fused plan: scan →
+        // parse → rules → validate → dedup-shuffle → sort+write → commit
+        // (two Spark jobs: the dedup exchange's map stage, then the write)
+        val events = transform(wire, info.map(_._1), histories)
+        val valid = Validate.split(events).valid
+        // within-batch dedup on the deterministic eventId: same id ⇒
+        // identical row (rules are pure), so hash-based dropDuplicates
+        // suffices — no sort, no window. Cross-batch duplicates are
+        // handled by Dedup.withinWatermark or absorbed by replay
+        // idempotence.
+        val deduped = valid.dropDuplicates("eventId")
+        // publish FIRST: consumers see the batch as soon as the
+        // marker lands; the idempotent state writers trail inside
+        // the same (uncommitted) micro-batch
+        storeThenPublish(deduped, batchId, sinkRoot, direct, failpoint)
+        postPublishFailpoint(batchId)
+        if (maintenance.nonEmpty && storeHasData(
+            deduped.sparkSession, sinkRoot)) {
+          // hooks read the batch BACK from the store partition that
+          // just committed, not from a persist of the upstream plan:
+          // a persist would materialize its cache inside the sink
+          // scan and tax the publish latency (~+0.4 s per 50k-event
+          // batch, Round13StreamMaintProbe), while the columnar
+          // read-back costs ~0.3 s in the trailing phase and keeps
+          // one ledger parse per batch. Persisted across the N
+          // concurrent hooks so they share one scan. The storeHasData
+          // guard covers the degenerate every-batch-so-far-empty
+          // stream (an all-invalid first batch writes no parquet —
+          // nothing exists to maintain, and the read would fail on
+          // schema inference).
+          val fromStore = batchFromStore(
+            deduped.sparkSession, sinkRoot, batchId)
+          fromStore.persist()
+          try runMaintenance(maintenance, fromStore, batchId)
+          finally fromStore.unpersist()
+        }
         ()
       }
       .start()

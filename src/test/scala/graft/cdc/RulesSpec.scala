@@ -91,6 +91,39 @@ class RulesSpec extends AnyFunSuite {
   }
 }
 
+class UnionSchemaSpec extends AnyFunSuite {
+  import org.apache.spark.sql.types._
+
+  test("a column two tables type differently fails loudly, naming it and " +
+      "both tables") {
+    val a = StructType(Seq(StructField("id", IntegerType),
+      StructField("code", StringType)))
+    val b = StructType(Seq(StructField("id", IntegerType),
+      StructField("code", LongType)))
+    val ex = intercept[IllegalArgumentException] {
+      Schemas.union(Seq("alpha" -> a, "beta" -> b))
+    }
+    assert(ex.getMessage.contains("code") && ex.getMessage.contains("alpha") &&
+      ex.getMessage.contains("beta"), ex.getMessage)
+  }
+
+  test("the shipped rule tables agree on their shared columns; positions " +
+      "(String id, no rules) stays out of the merge") {
+    val rows = Rules.tables.map(t => t -> Schemas.tables(t))
+    assert(Rules.tables.toSet == Set("employees", "departments",
+      "salary_changes", "bonuses", "stock_grants", "leave_requests",
+      "attendance_records"))
+    val union = Schemas.union(rows)
+    for ((t, row) <- rows; f <- row.fields)
+      assert(union(f.name).dataType == f.dataType, s"$t.${f.name}")
+    assert(union.fieldNames.distinct.length == union.fieldNames.length)
+    val ex = intercept[IllegalArgumentException] {
+      Schemas.union(rows :+ ("positions" -> Schemas.positions))
+    }
+    assert(ex.getMessage.contains("id") && ex.getMessage.contains("positions"))
+  }
+}
+
 class LedgerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

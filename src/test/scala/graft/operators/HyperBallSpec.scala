@@ -189,6 +189,22 @@ class HyperBallSpec extends AnyFunSuite {
       "the graph must genuinely need more than one cold round")
   }
 
+  test("fixpointRegisters: a seed register with a NULL bucket fails " +
+      "loudly instead of vanishing in the register pivot") {
+    import spark.implicits._
+    val g = sym(Seq((1L, 2L), (2L, 3L)))
+    val seed = Seq((1L, Option.empty[Long], 3), (2L, Some(1L), 2))
+      .toDF("node", "bucket", "rho")
+    val ex = intercept[Exception] {
+      HyperBall.fixpointRegisters(g.toDF("s", "d"), "s", "d", p = 4,
+        seed = Some(seed)).collect()
+    }
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(messages.exists(_.contains("seed bucket null")),
+      s"unexpected failure: $ex")
+  }
+
   test("effectiveDiameter: hand-checked interpolation on a path; q " +
       "bounds validated") {
     import spark.implicits._

@@ -383,6 +383,45 @@ class PipelineSpec extends AnyFunSuite {
     assert(seen.get._2 == bytes, s"admitted bytes ${seen.get._2} != file $bytes")
   }
 
+  test("a multi-table direct-write micro-batch runs exactly 2 Spark jobs " +
+      "and caches nothing") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    Ledger.writeCrudScenario(ledger) // employees, salary_changes, leave_requests
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = Pipeline.run(spark, ledger, root, ckpt)
+      q.awaitTermination(120000)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(Pipeline.readEventStore(spark, Pipeline.storeDir(root)).count() == 4)
+    // the dedup exchange's map stage, then the write: no cache jobs, no
+    // per-table union stage
+    assert(groups.asScala.count(_ == q.runId.toString) == 2,
+      groups.asScala.mkString(","))
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
+    val seen = plans.asScala.toSeq.flatMap(nodes)
+    assert(seen.exists(_.contains("InsertIntoHadoopFsRelationCommand")),
+      seen.distinct)
+    assert(!seen.exists(n => n.contains("InMemory") || n.contains("TableCache")),
+      seen.distinct)
+  }
+
   test("exchange-based write path (large batches) lands the same trees") {
     // tiny data through the directWrite=false branch: hash exchange on
     // (sink, pkey, salt), pinned partition count, same layout + visibility
