@@ -3,103 +3,173 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Connected components over an undirected edge list — the clustering step
-  * after near-duplicate PAIR detection: pairs (a,b),(b,c) must collapse to
-  * one keep-group {a,b,c} before a corpus can drop duplicates (the
-  * reference surface's dedup endpoint; every 100 TB dedup pipeline ends
-  * here).
+/** Iterative graph operators over edge lists: connected and strongly
+  * connected components, k-core, BFS hops, weighted shortest paths,
+  * sampled harmonic and betweenness centrality. All state lives in
+  * DataFrames keyed by node ids — no driver-side graph, no per-node
+  * collect.
   *
-  * Algorithm: iterative min-label propagation. Each round every node
-  * adopts the minimum label among itself and its neighbors — one
-  * edge-to-label equality join + groupBy-min per round, converging in
-  * O(graph diameter) rounds. Near-dup clusters are dense and tiny
-  * (diameter ≤ a few hops), so 3-5 rounds close them; the driver checks a
-  * convergence count per round (one action, same discipline as GraphX's
-  * connectedComponents Pregel loop) and `maxIter` bounds pathological
-  * chains. All state lives in (node, label) DataFrames partitioned by the
-  * join keys — no driver-side graph, no per-node collect.
+  * Two private drivers run every loop here except the k-core and SCC-trim
+  * peels:
+  *  - [[minFixpoint]], the monotone min-lattice fixpoint behind connected
+  *    components, SCC labels and SSSP. Only the rows that improved last
+  *    round (the delta) are expanded, and improvements accumulate as
+  *    checkpointed layers whose union-min is the running best. Because
+  *    values only decrease, the delta rounds produce the same frame,
+  *    round for round, as synchronous rounds that re-expand every node
+  *    (induction over rounds), so round counts and fixpoints match the
+  *    textbook form and "no improved rows" is the convergence witness.
+  *  - [[frontierBfs]], the layered BFS behind bfsHops, harmonic
+  *    centrality and the Brandes forward phase: each round expands the
+  *    last frontier and anti-joins the result against every visited key.
+  * Both read each round's row count from its checkpoint job
+  * (`IterUtil.checkpointCounted`) and fold their layers into one
+  * checkpointed frame once more than `maxLayers` pile up, so plan width
+  * stays bounded on deep graphs. Every loop frame is localCheckpointed: an
+  * iterative DataFrame loop otherwise grows its lineage each round until
+  * planning, or the plan string alone, dominates. The edge frames are not
+  * pre-partitioned: at bench scale the per-round joins broadcast the
+  * frontier side, so there is no edge-side exchange to save, and
+  * partitioning plus persisting the edges measured slower on every loop.
   */
 object Components {
 
-  // Round-15 note (measured, kept for the next optimizer): an attempt to
-  // pre-partition + sort + persist the loop-invariant edge frames by
-  // their per-round join key (so rounds skip the edge-side Exchange/Sort)
-  // REGRESSED every loop it touched at bench scale (q37 1.9×, q47 1.4×,
-  // q40 1.2× in an interleaved A/B) — at these sizes the per-round joins
-  // already BROADCAST the frontier/label side (checkpoint gives the
-  // planner accurate sizes), so no edge exchange existed to remove, and
-  // the extra exchange+sort+materialization was pure cost. At 100 TB the
-  // layout-reuse story belongs to the persisted BUCKETED tables
-  // (TextDedup.bandedIndex discipline), not in-query persists.
+  /** Layers a driver keeps as a lazy union before folding them. */
+  private val maxLayers = 12
 
-  /** (id, component) for every node appearing in `edges`, where component
-    * is the cluster's minimum node id. Columns `idA`/`idB` name the edge
-    * endpoints in `edges`.
+  /** The (src, dst) frame every operator iterates over: longs, null
+    * endpoints and self-loops dropped, duplicates collapsed, materialized
+    * once — loops read it every round, and `edges` is usually an
+    * expensive plan.
+    */
+  private def edgeList(edges: DataFrame, srcCol: String,
+                       dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull &&
+        col("src") =!= col("dst"))
+      .distinct()
+      .localCheckpoint(true)
+
+  /** Distinct non-null seed ids as one long `node` column. */
+  private def seedIds(seeds: DataFrame, seedCol: String): DataFrame =
+    seeds.select(col(seedCol).cast("long").as("node"))
+      .filter(col("node").isNotNull)
+      .distinct()
+
+  /** Min-lattice fixpoint over (node, v) rows. `init` is the checkpointed
+    * start frame with its row count; it is the first frontier. Each round
+    * `step` maps the frontier to candidate (node, v) rows, the per-node
+    * minimum candidate that beats the running best (or reaches a node
+    * with none) forms the next frontier, and the loop stops when a round
+    * improves nothing or after `maxRounds` rounds. Returns the fixpoint
+    * frame and whether it converged.
+    */
+  private def minFixpoint(init: (DataFrame, Long), maxRounds: Int)
+                         (step: DataFrame => DataFrame)
+      : (DataFrame, Boolean) = {
+    def fold(layers: Seq[DataFrame]): DataFrame =
+      if (layers.size == 1) layers.head
+      else layers.reduce(_ union _)
+        .groupBy(col("node")).agg(min(col("v")).as("v"))
+    var (frontier, n) = init
+    var layers = Vector(frontier)
+    var round = 0
+    while (n > 0 && round < maxRounds) {
+      round += 1
+      if (layers.size > maxLayers)
+        layers = Vector(fold(layers).localCheckpoint(true))
+      val best = fold(layers).withColumnRenamed("v", "cur")
+      val (next, nNext) = IterUtil.checkpointCounted(step(frontier)
+        .groupBy(col("node")).agg(min(col("v")).as("v"))
+        .join(best, Seq("node"), "left")
+        .filter(col("cur").isNull || col("v") < col("cur"))
+        .select(col("node"), col("v")))
+      n = nNext
+      if (n > 0) {
+        layers :+= next
+        frontier = next
+      }
+    }
+    (fold(layers), n == 0)
+  }
+
+  /** Min-label propagation: every node ends with the minimum start label
+    * that reaches it along `e`'s src → dst edges (dst → src when
+    * `reverse`). On a symmetrized edge list that is the minimum label of
+    * its connected component.
+    */
+  private def minLabels(e: DataFrame, reverse: Boolean,
+                        init: (DataFrame, Long),
+                        maxRounds: Int): (DataFrame, Boolean) = {
+    val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
+    minFixpoint(init, maxRounds)(frontier => e
+      .join(frontier.withColumnRenamed("node", from), Seq(from))
+      .select(col(to).as("node"), col("v")))
+  }
+
+  /** Layered BFS from the checkpointed `seed` layer (with its row count),
+    * which is the first frontier. Each round `step(frontier, round)` maps
+    * the frontier to the round's candidate layer — the `keys` columns
+    * plus its payload — and candidates whose keys were visited before are
+    * dropped. Stops when a round reaches nothing new or after `maxRounds`
+    * rounds. Returns the layers, seed first, and the last layer's row
+    * count (0 when the frontier is exhausted).
+    */
+  private def frontierBfs(seed: (DataFrame, Long), keys: Seq[String],
+                          maxRounds: Int)
+                         (step: (DataFrame, Long) => DataFrame)
+      : (Vector[DataFrame], Long) = {
+    var (frontier, n) = seed
+    var layers = Vector(frontier)
+    // visited keys are kept apart from the layers so they can be folded
+    // without touching the layers' payload columns
+    var visited = Vector(frontier.select(keys.map(col): _*))
+    var round = 0L
+    while (n > 0 && round < maxRounds) {
+      round += 1
+      if (visited.size > maxLayers)
+        visited = Vector(visited.reduce(_ union _).localCheckpoint(true))
+      val (next, nNext) = IterUtil.checkpointCounted(step(frontier, round)
+        .join(visited.reduce(_ union _), keys, "left_anti"))
+      n = nNext
+      if (n > 0) {
+        layers :+= next
+        visited :+= next.select(keys.map(col): _*)
+        frontier = next
+      }
+    }
+    (layers, n)
+  }
+
+  /** (id, component) for every node of `edges` that has an edge to a
+    * different node, where component is the cluster's minimum node id —
+    * the clustering step after near-duplicate PAIR detection: pairs
+    * (a,b),(b,c) must collapse to one keep-group {a,b,c} before a corpus
+    * can drop duplicates. Columns `idA`/`idB` name the edge endpoints;
+    * null endpoints and self-loops carry no edge.
+    *
+    * Min-label propagation ([[minLabels]]) over the symmetrized edges,
+    * converging in O(graph diameter) rounds. Near-dup clusters are dense
+    * and tiny, so a few rounds close them; `maxIter` bounds pathological
+    * chains.
     */
   def connectedComponents(edges: DataFrame, idA: String = "id_a",
                           idB: String = "id_b",
                           maxIter: Int = 20): DataFrame = {
-    // undirected: propagate along both orientations. Materialized ONCE —
-    // the loop touches the edge list every iteration, and `edges` is
-    // usually an expensive plan (the whole near-dup candidate pipeline)
-    val e = edges.select(col(idA).as("u"), col(idB).as("v"))
-      .union(edges.select(col(idB).as("u"), col(idA).as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // Round-16: FRONTIER-DELTA min-label propagation (the SCC
-      // minLabels / relaxToFixpoint discipline) — only labels that
-      // CHANGED last round flow along edges, improvements accumulate as
-      // checkpointed LAYERS, and the running best per id is a lazy
-      // union-min over the layers. Labels only decrease, so the
-      // delta-synchronous rounds produce the SAME label frame per round
-      // as the old full union+groupBy rewrite (monotone-fixpoint
-      // induction), the round count is identical, and convergence is
-      // "no improvement rows" — the per-round Σlbl 1-row witness and
-      // the per-round V-sized re-materialization are both gone.
-      // localCheckpoint, not persist: an iterative DataFrame loop grows
-      // its lineage every round and replanning (and even the plan STRING)
-      // eventually dominates or OOMs — truncate it each iteration, the
-      // same discipline as GraphX's Pregel materialization.
-      val collapseEvery = 12
-      def fold(layers: Seq[DataFrame]): DataFrame =
-        layers.reduce(_ union _)
-          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-      var layers = Vector(e.select(col("u").as("id")).distinct()
-        .withColumn("lbl", col("id"))
-        .localCheckpoint(true))
-      var delta = layers.head
-      var iter = 0
-      var converged = false
-      while (iter < maxIter && !converged) {
-        val best = if (layers.size == 1) layers.head else fold(layers)
-        // candidate labels flowing along edges: a CHANGED neighbor's
-        // label reaches me (unchanged neighbors already contributed);
-        // the convergence count rides the checkpoint job (IterUtil)
-        val (next, improved) = IterUtil.checkpointCounted(
-          e.join(delta, e("v") === delta("id"))
-            .select(e("u").as("id"), delta("lbl").as("lbl"))
-            .groupBy("id").agg(min("lbl").as("lbl"))
-            .join(best.withColumnRenamed("lbl", "cur"), Seq("id"))
-            .filter(col("lbl") < col("cur"))
-            .select(col("id"), col("lbl")))
-        converged = improved == 0L
-        if (!converged) {
-          layers :+= next
-          delta = next
-          if (layers.size > collapseEvery)
-            layers = Vector(fold(layers).localCheckpoint(true))
-        }
-        iter += 1
-      }
-      // silent non-convergence would split true clusters and let duplicates
-      // through the keep-one-per-group step — refuse instead
-      require(converged,
-        s"connectedComponents did not converge within $maxIter iterations " +
-          "(graph diameter exceeds maxIter) — raise maxIter")
-      val labels = if (layers.size == 1) layers.head else fold(layers)
-      labels.select(col("id"), col("lbl").as("component"))
-    }
+    val e = edgeList(edges.select(col(idA).as("src"), col(idB).as("dst"))
+      .union(edges.select(col(idB).as("src"), col(idA).as("dst"))),
+      "src", "dst")
+    val (labels, converged) = minLabels(e, reverse = false,
+      IterUtil.checkpointCounted(e.select(col("src").as("node")).distinct()
+        .withColumn("v", col("node"))), maxIter)
+    // silent non-convergence would split true clusters and let duplicates
+    // through the keep-one-per-group step — refuse instead
+    require(converged,
+      s"connectedComponents did not converge within $maxIter iterations " +
+        "(graph diameter exceeds maxIter) — raise maxIter")
+    labels.select(col("node").as("id"), col("v").as("component"))
   }
 
   // ---------------------------------------------------------------------
@@ -149,12 +219,8 @@ object Components {
                       batchId: Long, idA: String = "id_a",
                       idB: String = "id_b", maxIter: Int = 20): Unit = {
     val spark = edges.sparkSession
-    // consumed by endpoints + the mini-graph union: materialize the
-    // (usually expensive) delta plan once
-    val delta = edges.select(col(idA).cast("long").as("u"),
-        col(idB).cast("long").as("v"))
-      .distinct()
-      .localCheckpoint(true)
+    // consumed by endpoints + the mini-graph union: materialized once
+    val delta = edgeList(edges, idA, idB)
     val empty = delta.sparkSession.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
@@ -169,8 +235,8 @@ object Components {
     BatchTables.ensureBatchTable(empty, table, path)
 
     val membership = componentsFromTable(spark, table)
-    val endpoints = delta.select(col("u").as("id"))
-      .union(delta.select(col("v").as("id"))).distinct()
+    val endpoints = delta.select(col("src").as("id"))
+      .union(delta.select(col("dst").as("id"))).distinct()
     // components the delta touches, then ALL their members — the only
     // region whose labels can change
     val touched = membership.join(endpoints, "id")
@@ -180,8 +246,8 @@ object Components {
     // star-contract each touched component onto its label node
     // (labels are member ids, so connectivity is preserved exactly)
     val mini = delta.union(
-      affected.select(col("id").as("u"), col("component").as("v")))
-    val relabeled = connectedComponents(mini, "u", "v", maxIter)
+      affected.select(col("id").as("src"), col("component").as("dst")))
+    val relabeled = connectedComponents(mini, "src", "dst", maxIter)
       .select(col("id"), col("component"),
         lit(batchId).as("_seq"), lit(batchId).as("_batch_id"))
     BatchTables.withDynamicOverwrite(spark) {
@@ -229,14 +295,14 @@ object Components {
     * exact result (`q34_kcore` unrolls 10; the gate graphs converge in
     * 3/6 at sf0.01/sf0.1).
     *
-    * Shape per round: one semi-join of the edge frame against the
-    * survivor set on EACH endpoint + one map-side-combined degree count
-    * — all shuffles on node ids; the edge frame materializes once and
-    * each round's survivor frame is localCheckpoint-truncated with one
-    * 1-row count action as the convergence check (the iterative-loop
-    * contract). Rounds are data-dependent but each non-final round
-    * removes ≥ 1 node, and real cascades are shallow (single digits on
-    * the gate graphs).
+    * Shape per round: one semi-join of the edge frame against the nodes
+    * removed last round, a map-side-combined decrement count and one
+    * left join into the survivors' degrees — all shuffles on node ids;
+    * the edge frame materializes once and each round's degree frame is
+    * checkpointed with the next removal count read from the same job.
+    * Rounds are data-dependent but each non-final round removes ≥ 1
+    * node, and real cascades are shallow (single digits on the gate
+    * graphs).
     *
     * Output: (node BIGINT, core_degree BIGINT) for the k-core members —
     * core_degree is the degree WITHIN the core (≥ k by construction).
@@ -244,41 +310,26 @@ object Components {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    val srcNodes = e.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
-    // the peel reads degrees from src endpoints only — correct ONLY for
-    // symmetrized input. A directed edge list used to be accepted
-    // silently (dst-only nodes dropped, degrees undercounted → a wrong
-    // core with no error — ADVICE r12); fail loudly instead. The check
-    // (every dst appears as some src) is necessary for symmetry, cheap
-    // (one anti-join over the already-checkpointed frames), and catches
-    // the realistic mistake of passing one direction of an edge list.
-    val stray = e.select(col("dst").as("node"))
-      .join(srcNodes, Seq("node"), "left_anti")
+    val e = edgeList(edges, srcCol, dstCol)
+    // the peel reads degrees from src endpoints and decrements along
+    // reversed edges — correct ONLY for symmetrized input, so a directed
+    // list fails loudly instead of yielding a wrong core: one anti-join of
+    // the checkpointed edges against their reversal
+    val asymmetric = e
+      .join(e.select(col("dst").as("src"), col("src").as("dst")),
+        Seq("src", "dst"), "left_anti")
       .limit(1).count()
-    require(stray == 0L,
+    require(asymmetric == 0L,
       "kCore requires a SYMMETRIZED edge list (every edge present in " +
-        "both directions): found dst nodes that never appear as src — " +
+        "both directions): found an edge whose reverse is missing — " +
         "union the reversed edges before calling (see q34_kcore)")
-    // round-16: DELTA peeling — the old loop recounted degrees from the
-    // FULL edge frame every round (two E-sized semi-joins + an E-row
-    // groupBy per peel, even when one node fell). Degrees among the next
-    // survivor set equal the current degrees minus each survivor's edges
-    // to the JUST-REMOVED nodes (e is distinct and symmetrized), so each
-    // round now joins only the removed nodes' out-edges and decrements —
-    // work proportional to the peel, not the graph. The maintained deg
-    // frame IS degreesAmong(survivors) by induction (base: survivors =
-    // all src nodes, semi-joins are no-ops), so the returned fixpoint
-    // frame is identical to the old final recompute.
-    // the "how many fall next" statistic rides each checkpoint job
-    // (IterUtil) — one job per peel round, not two
+    // DELTA peeling: degrees among the next survivor set equal the
+    // current degrees minus each survivor's edges to the JUST-REMOVED
+    // nodes (e is distinct and symmetric), so each round joins only the
+    // removed nodes' out-edges and decrements — work proportional to the
+    // peel, not the graph. The maintained deg frame IS the degree among
+    // survivors by induction (base: every src node), and the "how many
+    // fall next" count rides each checkpoint job (IterUtil).
     val remMetric = coalesce(sum(when(col("core_degree") < k, 1L)
       .otherwise(0L)), lit(0L)).as("nrem")
     var (deg, obs0) = IterUtil.checkpointObserved(
@@ -315,13 +366,10 @@ object Components {
     * left join reads them as NULL (the documented unreachable = NULL
     * contract, spec-pinned).
     *
-    * Shape per synchronous frontier round: one semi-join of the edge
-    * frame against the frontier on src + a distinct + one anti-join
-    * against the visited set — all shuffles on node ids, the edge frame
-    * materialized once, each round's frames localCheckpoint-truncated
-    * with one 1-row count action as the convergence check (the
-    * iterative-loop contract shared with `kCore` and label propagation).
-    * Rounds are integer-exact (hop literals), so the unrolled-SQL oracle
+    * Shape: one [[frontierBfs]] round per hop — a semi-join of the edge
+    * frame against the frontier on src, a distinct and an anti-join
+    * against the visited nodes, all shuffles on node ids. Rounds are
+    * integer-exact (hop literals), so the unrolled-SQL oracle
     * replays bit-for-bit with no rounding anywhere; frontier rounds are
     * bounded by the graph's eccentricity from the seed set (measured 9
     * on the q37 tripartite gate graph at sf0.01 AND sf0.1).
@@ -330,56 +378,17 @@ object Components {
               seeds: DataFrame, seedCol: String,
               maxHops: Int = Int.MaxValue): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    // round-15: the visited set is kept as per-hop LAYERS (each
-    // checkpointed once when its round produces it) instead of one frame
-    // re-unioned and re-materialized every round — the old shape rewrote
-    // the ENTIRE visited set per hop just to add a layer (guide §1.2:
-    // don't compute things you throw away)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // seed/frontier counts ride their checkpoint jobs (IterUtil) —
-      // one job per hop, not two
-      val (seedLayer, n0) = IterUtil.checkpointCounted(seeds
-        .select(col(seedCol).cast("long").as("node"))
-        .filter(col("node").isNotNull)
-        .distinct()
-        .withColumn("hops", lit(0L)))
-      var layers = Vector(seedLayer)
-      // the visited-set UNION is tracked separately from the output
-      // layers so it can be collapsed: maxHops is unbounded by default,
-      // and a deep-diameter graph would otherwise grow the anti-join
-      // plan linearly with hop count (ADVICE r15). Collapsing merges
-      // only the node-id sets — the per-hop output layers (which carry
-      // the hops labels) are never merged.
-      var visited = Vector(seedLayer.select("node"))
-      var frontier = seedLayer.select("node")
-      var hop = 0L
-      var n = n0
-      while (n > 0 && hop < maxHops) {
-        hop += 1
-        val visitedIds = visited.reduce(_ union _)
-        val (next, nNext) = IterUtil.checkpointCounted(e
-          .join(frontier.withColumnRenamed("node", "src"), Seq("src"),
-            "left_semi")
-          .select(col("dst").as("node")).distinct()
-          .join(visitedIds, Seq("node"), "left_anti"))
-        n = nNext
-        if (n > 0) {
-          layers :+= next.withColumn("hops", lit(hop))
-          visited :+= next
-          if (visited.size > 12)
-            visited = Vector(visited.reduce(_ union _).localCheckpoint(true))
-          frontier = next
-        }
-      }
-      layers.reduce(_ union _)
-    }
+    val seed = IterUtil.checkpointCounted(
+      seedIds(seeds, seedCol).withColumn("hops", lit(0L)))
+    val e = edgeList(edges, srcCol, dstCol)
+    // a semi-join, not an inner join: the next frontier inherits the edge
+    // frame's size estimate instead of a join product, so the planner
+    // keeps broadcasting it (the inner join cost q37 ten more jobs)
+    frontierBfs(seed, Seq("node"), maxHops) { (frontier, hop) =>
+      e.join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
+        .select(col("dst").as("node")).distinct()
+        .withColumn("hops", lit(hop))
+    }._1.reduce(_ union _)
   }
 
   /** Single/multi-source WEIGHTED shortest paths (Bellman-Ford with a
@@ -395,12 +404,9 @@ object Components {
     * costing anything: at 100 TB the late rounds touch a vanishing slice
     * of the graph instead of rescanning every edge (textbook
     * Bellman-Ford is O(V·E); this is O(Σ round frontiers)). Each round
-    * is one equi-join (edges ⋈ frontier on src) + groupBy-min + one
-    * left-join filter against the running dist frame + a union-min
-    * merge — all shuffles keyed on node ids, frames
-    * localCheckpoint-truncated, ONE 1-row count action as the
-    * convergence witness (the iterative-loop contract shared with
-    * [[bfsHops]], `kCore` and label propagation).
+    * is one [[minFixpoint]] round: an equi-join (edges ⋈ frontier on
+    * src), a groupBy-min and one left-join filter against the running
+    * distances — all shuffles keyed on node ids.
     *
     * Exactness: distances are LONG sums of long weights — integer
     * arithmetic commutes, so the result is bit-identical under any
@@ -417,15 +423,9 @@ object Components {
     */
   def sssp(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: String, seeds: DataFrame, seedCol: String,
-           maxRounds: Int = 64): DataFrame = {
-    val start = seeds
-      .select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull)
-      .distinct()
-      .withColumn("dist", lit(0L))
-    relaxToFixpoint(weightedEdges(edges, srcCol, dstCol, weightCol),
-      start, maxRounds)
-  }
+           maxRounds: Int = 64): DataFrame =
+    relax(weightedEdges(edges, srcCol, dstCol, weightCol),
+      seedIds(seeds, seedCol).withColumn("v", lit(0L)), maxRounds)
 
   /** WARM-START weighted shortest paths — resume relaxation from a
     * PERSISTED distance table after the graph GREW (the incremental
@@ -448,15 +448,14 @@ object Components {
     */
   def ssspResume(edges: DataFrame, srcCol: String, dstCol: String,
                  weightCol: String, prior: DataFrame,
-                 maxRounds: Int = 64): DataFrame = {
-    val start = prior
-      .select(col("node").cast("long").as("node"),
-        col("dist").cast("long").as("dist"))
-      .filter(col("node").isNotNull && col("dist").isNotNull)
-      .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    relaxToFixpoint(weightedEdges(edges, srcCol, dstCol, weightCol),
-      start, maxRounds)
-  }
+                 maxRounds: Int = 64): DataFrame =
+    relax(weightedEdges(edges, srcCol, dstCol, weightCol),
+      prior
+        .select(col("node").cast("long").as("node"),
+          col("dist").cast("long").as("v"))
+        .filter(col("node").isNotNull && col("v").isNotNull)
+        .groupBy(col("node")).agg(min(col("v")).as("v")),
+      maxRounds)
 
   /** The (src, dst, w) frame every SSSP variant relaxes over: longs,
     * null-dropped, negative weights rejected loudly, parallel edges
@@ -478,61 +477,18 @@ object Components {
       .localCheckpoint(true)
   }
 
-  /** Delta-frontier Bellman-Ford from `start` (node, dist) upper
-    * bounds: every start node is frontier in round 1, after that only
-    * improved nodes relax — one join + groupBy-min + an improvement
-    * filter per round, one 1-row action as the convergence witness.
-    *
-    * Round-16: the distance state is kept as LAYERS of improvements
-    * (each round checkpoints only its improved rows — frontier-sized)
-    * instead of union+groupBy-rewriting and re-materializing the FULL
-    * dist frame every round — the discipline bfsHops/harmonic/brandes
-    * got in round 15, applied to the last full-state rewriter. The
-    * per-round improvement filter reads the running best as a LAZY
-    * union-min over the checkpointed layers (the same per-node minima
-    * the materialized frame held, so every round's frontier, the round
-    * count and the fixpoint are unchanged — labels only decrease, and a
-    * node's current dist is the min over the layers that ever improved
-    * it). Layers collapse into one checkpointed frame every
-    * `collapseEvery` rounds so plan width stays bounded on deep graphs
-    * (the ADVICE-r15 layer-growth concern); the final union-min fold
-    * runs once at exhaustion.
+  /** Delta-frontier Bellman-Ford from `start` (node, v) upper bounds
+    * ([[minFixpoint]]): every start node is frontier in round 1, after
+    * that only improved nodes relax. Stops silently at `maxRounds`.
     */
-  private def relaxToFixpoint(e: DataFrame, start: DataFrame,
-                              maxRounds: Int): DataFrame = {
+  private def relax(e: DataFrame, start: DataFrame,
+                    maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val collapseEvery = 12
-    def fold(layers: Seq[DataFrame]): DataFrame =
-      layers.reduce(_ union _)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    locally {
-      // the start count and every round's improvement count ride their
-      // frame's checkpoint job (IterUtil — one job per round, not two)
-      var (head0, improved) = IterUtil.checkpointCounted(start)
-      var layers = Vector(head0)
-      var frontier = layers.head
-      var round = 0
-      while (improved > 0 && round < maxRounds) {
-        round += 1
-        val best = if (layers.size == 1) layers.head else fold(layers)
-        val (next, nImp) = IterUtil.checkpointCounted(e
-          .join(frontier.select(col("node").as("src"), col("dist").as("fd")),
-            Seq("src"))
-          .select(col("dst").as("node"), (col("fd") + col("w")).as("nd"))
-          .groupBy(col("node")).agg(min(col("nd")).as("nd"))
-          .join(best, Seq("node"), "left")
-          .filter(col("dist").isNull || col("nd") < col("dist"))
-          .select(col("node"), col("nd").as("dist")))
-        improved = nImp
-        if (improved > 0) {
-          layers :+= next
-          frontier = next
-          if (layers.size > collapseEvery)
-            layers = Vector(fold(layers).localCheckpoint(true))
-        }
-      }
-      if (layers.size == 1) layers.head else fold(layers)
-    }
+    minFixpoint(IterUtil.checkpointCounted(start), maxRounds)(frontier => e
+      .join(frontier.select(col("node").as("src"), col("v").as("fd")),
+        Seq("src"))
+      .select(col("dst").as("node"), (col("fd") + col("w")).as("v")))
+      ._1.select(col("node"), col("v").as("dist"))
   }
 
   /** Sampled harmonic centrality (Boldi & Vigna 2014's axiom-clean
@@ -555,12 +511,11 @@ object Components {
     * FROM the exact numerator, one deterministic IEEE division in both
     * engines. `reach` is the exact count of sources that reach the node.
     *
-    * Shape: one BFS whose frontier is keyed (source, node) — per round
-    * one equi-join on the node id + distinct + anti-join against the
-    * visited pairs, all localCheckpoint-truncated with the shared 1-row
-    * convergence action. State is |S| × reach pairs — the sampled
-    * estimator's whole point at 100 TB: |S| stays fixed as V grows, and
-    * the estimate concentrates (Eppstein-Wang give the Hoeffding bound).
+    * Shape: one [[frontierBfs]] keyed (source, node) — per round one
+    * equi-join on the node id + distinct + anti-join against the visited
+    * pairs. State is |S| × reach pairs — the sampled estimator's whole
+    * point at 100 TB: |S| stays fixed as V grows, and the estimate
+    * concentrates (Eppstein-Wang give the Hoeffding bound).
     * Edges follow src→dst; pass a symmetrized list for undirected
     * semantics (the kCore/bfsHops contract).
     */
@@ -575,54 +530,25 @@ object Components {
         .gcd(java.math.BigInteger.valueOf(d)).longValueExact()
       l / g * d
     }
-    // round-15: visited kept as per-round LAYERS (the bfsHops discipline —
-    // no full-set re-union + re-materialization per round)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // seed/frontier counts ride their checkpoint jobs (IterUtil)
-      val (seedLayer, nSeeds) = IterUtil.checkpointCounted(seeds
-        .select(col(seedCol).cast("long").as("source"))
-        .filter(col("source").isNotNull)
-        .distinct()
-        .select(col("source"), col("source").as("node"))
-        .withColumn("d", lit(0L)))
-      // exact-numerator overflow guard: worst case every source at d=1
-      require(nSeeds <= Long.MaxValue / math.max(denom, 1L) / 2,
-        s"$nSeeds seeds at lcm denominator $denom could overflow h_num — " +
-          "sample the seed set (the estimator wants a sample anyway)")
-      var layers = Vector(seedLayer)
-      var frontier = seedLayer.select("source", "node")
-      var rnd = 0
-      var n = nSeeds
-      while (n > 0 && rnd < maxRounds) {
-        rnd += 1
-        val visitedPairs = layers.map(_.select("source", "node"))
-          .reduce(_ union _)
-        val (next, nNext) = IterUtil.checkpointCounted(e
-          .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("source"), col("dst").as("node")).distinct()
-          .join(visitedPairs, Seq("source", "node"), "left_anti"))
-        n = nNext
-        if (n > 0) {
-          layers :+= next.withColumn("d", lit(rnd.toLong))
-          frontier = next
-        }
-      }
-      layers.reduce(_ union _).filter(col("d") >= 1L)
-        .groupBy(col("node"))
-        .agg(count(lit(1)).as("reach"),
-          // `div` keeps every term an exact LONG (d divides the lcm), so
-          // the sum is integer arithmetic end to end — no double crossing
-          sum(expr(s"${denom}L div d")).as("h_num"))
-        .select(col("node"), col("reach"), col("h_num"),
-          round(col("h_num").cast("double") / lit(denom.toDouble), 6).as("h"))
-    }
+    val seed = IterUtil.checkpointCounted(seedIds(seeds, seedCol)
+      .select(col("node").as("source"), col("node"), lit(0L).as("d")))
+    // exact-numerator overflow guard: worst case every source at d=1
+    require(seed._2 <= Long.MaxValue / math.max(denom, 1L) / 2,
+      s"${seed._2} seeds at lcm denominator $denom could overflow h_num — " +
+        "sample the seed set (the estimator wants a sample anyway)")
+    val e = edgeList(edges, srcCol, dstCol)
+    frontierBfs(seed, Seq("source", "node"), maxRounds) { (frontier, d) =>
+      e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        .select(col("source"), col("dst").as("node")).distinct()
+        .withColumn("d", lit(d))
+    }._1.reduce(_ union _).filter(col("d") >= 1L)
+      .groupBy(col("node"))
+      .agg(count(lit(1)).as("reach"),
+        // `div` keeps every term an exact LONG (d divides the lcm), so
+        // the sum is integer arithmetic end to end — no double crossing
+        sum(expr(s"${denom}L div d")).as("h_num"))
+      .select(col("node"), col("reach"), col("h_num"),
+        round(col("h_num").cast("double") / lit(denom.toDouble), 6).as("h"))
   }
 
   /** Brandes forward phase from a sampled source set: per (source, node)
@@ -639,69 +565,42 @@ object Components {
     * extra groupBy-sum per round — σ(w) at level l+1 is the sum of σ(v)
     * over DAG predecessors v at level l, so each round is one equi-join
     * on the node id + groupBy (source, dst) sum + one anti-join against
-    * the visited pairs, all localCheckpoint-truncated with the shared
-    * 1-row convergence action. State is |S| × reach pairs: |S| stays
-    * fixed as V grows — the sampled estimator's 100 TB point. Edges
+    * the visited pairs. State is |S| × reach pairs: |S| stays fixed as
+    * V grows — the sampled estimator's 100 TB point. Edges
     * follow src→dst; pass a symmetrized list for undirected semantics
     * (the kCore/bfsHops contract). Self rows (d = 0, σ = 1) included.
     */
   def brandesForward(edges: DataFrame, srcCol: String, dstCol: String,
                      seeds: DataFrame, seedCol: String,
-                     maxRounds: Int = 12): DataFrame = {
+                     maxRounds: Int = 12): DataFrame =
+    brandesLayers(edgeList(edges, srcCol, dstCol), seeds, seedCol, maxRounds)
+
+  /** [[brandesForward]] over an [[edgeList]] frame. σ is summed BEFORE
+    * the visited anti-join, so the exchange carries map-side-combined
+    * (source, node, Σσ) rows instead of one row per DAG edge — the
+    * anti-join removes whole (source, node) groups, never partial sums.
+    */
+  private def brandesLayers(e: DataFrame, seeds: DataFrame, seedCol: String,
+                            maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // round-15: visited kept as per-round LAYERS (the bfsHops
-    // discipline); the σ aggregation moved BEFORE the anti-join so the
-    // exchange carries map-side-combined (source, node, Σσ) rows instead
-    // of one row per DAG edge — dropping visited pairs before or after
-    // summing σ is equivalent (the anti-join removes whole (source, node)
-    // groups, never partial contributions)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // seed/frontier counts ride their checkpoint jobs (IterUtil)
-      val (seedLayer, nSeeds) = IterUtil.checkpointCounted(seeds
-        .select(col(seedCol).cast("long").as("source"))
-        .filter(col("source").isNotNull)
-        .distinct()
-        .select(col("source"), col("source").as("node"),
-          lit(0L).as("d"), lit(1L).cast("decimal(38,0)").as("sigma")))
-      var layers = Vector(seedLayer)
-      var frontier = seedLayer
-      var rnd = 0
-      var n = nSeeds
-      while (n > 0 && rnd < maxRounds) {
-        rnd += 1
-        val visitedPairs = layers.map(_.select("source", "node"))
-          .reduce(_ union _)
-        val (next, nNext) = IterUtil.checkpointCounted(e
-          .join(frontier.withColumnRenamed("node", "src"),
-            Seq("src"))
-          .select(col("source"), col("dst").as("node"), col("sigma"))
-          .groupBy(col("source"), col("node"))
-          // exact integer σ sums commute — layout-invariant by construction
-          .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
-          .join(visitedPairs, Seq("source", "node"), "left_anti")
-          .select(col("source"), col("node"), lit(rnd.toLong).as("d"),
-            col("sigma")))
-        n = nNext
-        if (n > 0) {
-          layers :+= next
-          frontier = next
-        }
-      }
-      // the DuckDB oracle error()-asserts frontier exhaustion; mirror it —
-      // a capped BFS would silently drop every node past maxRounds from the
-      // sigma/reach aggregates
-      require(n == 0,
-        s"brandesForward: frontier still live ($n rows) after $maxRounds " +
-          "rounds (raise maxRounds)")
-      layers.reduce(_ unionByName _)
+    val seed = IterUtil.checkpointCounted(seedIds(seeds, seedCol)
+      .select(col("node").as("source"), col("node"), lit(0L).as("d"),
+        lit(1L).cast("decimal(38,0)").as("sigma")))
+    val (layers, n) = frontierBfs(seed, Seq("source", "node"),
+        maxRounds) { (frontier, d) =>
+      e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        .groupBy(col("source"), col("dst").as("node"))
+        // exact integer σ sums commute — layout-invariant by construction
+        .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
+        .select(col("source"), col("node"), lit(d).as("d"), col("sigma"))
     }
+    // the DuckDB oracle error()-asserts frontier exhaustion; mirror it —
+    // a capped BFS would silently drop every node past maxRounds from the
+    // sigma/reach aggregates
+    require(n == 0,
+      s"brandesForward: frontier still live ($n rows) after $maxRounds " +
+        "rounds (raise maxRounds)")
+    layers.reduce(_ unionByName _)
   }
 
   /** Sampled betweenness centrality (Brandes 2001, sampled sources per
@@ -734,15 +633,8 @@ object Components {
   def betweenness(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
                   maxRounds: Int = 12): DataFrame = {
-    val fwd = brandesForward(edges, srcCol, dstCol, seeds, seedCol,
-      maxRounds).localCheckpoint(true)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+    val e = edgeList(edges, srcCol, dstCol)
+    val fwd = brandesLayers(e, seeds, seedCol, maxRounds).localCheckpoint(true)
     def foldBy(terms: org.apache.spark.sql.Column, field: String) =
       aggregate(sort_array(terms), lit(0.0),
         (acc, x) => acc + x.getField(field))
@@ -811,148 +703,94 @@ object Components {
     * Exactness: labels are LONG mins — integer lattice moves only, so
     * every fixpoint is layout-invariant and the whole output replays in
     * unrolled SQL with no float anywhere (the q46/q45 gate discipline).
-    * Convergence witnesses are 1-row (count, sum) actions on frames that
-    * only shrink/decrease (the q39 discipline). At 100 TB: each round is
-    * one equi-join + groupBy-min on node ids; trim kills the DAG mass
-    * early so phases run on the cyclic core only; state is one (node,
-    * label) row per live node.
+    * Each phase's two label fixpoints are [[minLabels]] runs, overlapped
+    * on two driver threads. At 100 TB: each round is one equi-join +
+    * groupBy-min on node ids; trim kills the DAG mass early so phases
+    * run on the cyclic core only; state is one (node, label) row per
+    * live node.
     */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
                                   dstCol: String, maxPhases: Int = 64,
                                   maxRounds: Int = 64): DataFrame = {
     require(maxPhases >= 1, s"maxPhases must be >= 1, got $maxPhases")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // every remaining/keep count rides its checkpoint job (IterUtil)
-      var (remaining, nRemaining) = IterUtil.checkpointCounted(
-        e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).distinct())
-      var assigned = Seq.empty[DataFrame]
+    val e = edgeList(edges, srcCol, dstCol)
+    // every remaining/keep count rides its checkpoint job (IterUtil)
+    var (remaining, nRemaining) = IterUtil.checkpointCounted(
+      e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+    var assigned = Seq.empty[DataFrame]
 
-      // trim fixpoint: peel no-in/no-out nodes (each its own SCC)
-      def trim(): Unit = {
-        var changed = true
-        while (changed && nRemaining > 0) {
-          val er = e
-            .join(remaining.withColumnRenamed("node", "src"), Seq("src"),
-              "left_semi")
-            .join(remaining.withColumnRenamed("node", "dst"), Seq("dst"),
-              "left_semi")
-          val (keep, kc) = IterUtil.checkpointCounted(remaining
-            .join(er.select(col("src").as("node")).distinct(), Seq("node"),
-              "left_semi")
-            .join(er.select(col("dst").as("node")).distinct(), Seq("node"),
-              "left_semi"))
-          if (kc == nRemaining) changed = false
-          else {
-            assigned :+= remaining.join(keep, Seq("node"), "left_anti")
-              .select(col("node"), col("node").as("scc"))
-              .localCheckpoint(true)
-            remaining = keep
-            nRemaining = kc
-          }
-        }
-      }
-
-      // min-label propagation to a fixpoint over the restricted edge
-      // frame. Round-16: FRONTIER-DELTA form — only labels that CHANGED
-      // last round flow along edges (an unchanged neighbor's label was
-      // already applied in the round after it was attained, and labels
-      // only decrease, so re-sending it is a no-op under min). Delta-
-      // synchronous rounds produce the SAME label frame per round as the
-      // old full-synchronous union+groupBy (standard monotone-fixpoint
-      // induction: the running best per node = min over the delta layers
-      // that ever improved it), so the round count and the fixpoint are
-      // identical; the convergence witness simplifies to "no improvement
-      // rows" — the old 1-row Σ(lab) scan per round is no longer needed.
-      // Per round the join and the checkpoint are DELTA-sized, not
-      // V-sized (the relaxToFixpoint discipline).
-      def minLabels(er: DataFrame, reverse: Boolean): DataFrame = {
-        val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
-        val collapseEvery = 12
-        def fold(layers: Seq[DataFrame]): DataFrame =
-          layers.reduce(_ union _)
-            .groupBy(col("node")).agg(min(col("lab")).as("lab"))
-        // layer 0 is a trivial projection of the ALREADY-CHECKPOINTED
-        // remaining frame — no extra materialization job needed
-        var layers = Vector(remaining
-          .select(col("node"), col("node").as("lab")))
-        var delta = layers.head
-        var rnd = 0
-        var converged = false
-        while (!converged && rnd < maxRounds) {
-          rnd += 1
-          val best = if (layers.size == 1) layers.head else fold(layers)
-          val (next, improved) = IterUtil.checkpointCounted(er
-            .join(delta.withColumnRenamed("node", from), Seq(from))
-            .select(col(to).as("node"), col("lab"))
-            .groupBy(col("node")).agg(min(col("lab")).as("lab"))
-            .join(best.withColumnRenamed("lab", "cur"), Seq("node"))
-            .filter(col("lab") < col("cur"))
-            .select(col("node"), col("lab")))
-          converged = improved == 0L
-          if (!converged) {
-            layers :+= next
-            delta = next
-            if (layers.size > collapseEvery)
-              layers = Vector(fold(layers).localCheckpoint(true))
-          }
-        }
-        // a capped, non-stationary fixpoint would silently mislabel deep
-        // cycles (partial f/b mins decide only the min node, trim then
-        // shatters the rest into bogus singleton SCCs) — fail loudly like
-        // the phase loop's require instead
-        require(converged,
-          s"SCC min-label propagation did not reach a fixpoint within " +
-            s"$maxRounds rounds (raise maxRounds)")
-        if (layers.size == 1) layers.head else fold(layers)
-      }
-
-      var phase = 0
-      trim()
-      while (nRemaining > 0 && phase < maxPhases) {
-        phase += 1
+    // trim fixpoint: peel no-in/no-out nodes (each its own SCC)
+    def trim(): Unit = {
+      var changed = true
+      while (changed && nRemaining > 0) {
         val er = e
           .join(remaining.withColumnRenamed("node", "src"), Seq("src"),
             "left_semi")
           .join(remaining.withColumnRenamed("node", "dst"), Seq("dst"),
             "left_semi")
-          .localCheckpoint(true)
-        // round-16 (guide §2.6 — overlap independent jobs): the forward
-        // and backward fixpoints read the same immutable er/remaining
-        // frames and share nothing else — run them on two driver threads
-        // so each fixpoint's small driver-synchronized rounds back-fill
-        // the other's idle cores; results are unchanged (each fixpoint is
-        // a deterministic function of er alone)
-        val ec = scala.concurrent.ExecutionContext.global
-        val fF = scala.concurrent.Future(minLabels(er, reverse = false))(ec)
-        val fB = scala.concurrent.Future(minLabels(er, reverse = true))(ec)
-        val f = scala.concurrent.Await.result(fF,
-          scala.concurrent.duration.Duration.Inf)
-        val b = scala.concurrent.Await.result(fB,
-          scala.concurrent.duration.Duration.Inf)
-        val dec = f.join(b.withColumnRenamed("lab", "blab"), Seq("node"))
-          .filter(col("lab") === col("blab"))
-          .select(col("node"), col("lab").as("scc"))
-          .localCheckpoint(true)
-        assigned :+= dec
-        val (rem2, nRem2) = IterUtil.checkpointCounted(
-          remaining.join(dec, Seq("node"), "left_anti"))
-        remaining = rem2
-        nRemaining = nRem2
-        trim()
+        val (keep, kc) = IterUtil.checkpointCounted(remaining
+          .join(er.select(col("src").as("node")).distinct(), Seq("node"),
+            "left_semi")
+          .join(er.select(col("dst").as("node")).distinct(), Seq("node"),
+            "left_semi"))
+        if (kc == nRemaining) changed = false
+        else {
+          assigned :+= remaining.join(keep, Seq("node"), "left_anti")
+            .select(col("node"), col("node").as("scc"))
+            .localCheckpoint(true)
+          remaining = keep
+          nRemaining = kc
+        }
       }
-      require(nRemaining == 0,
-        s"SCC did not converge within $maxPhases phases — $nRemaining " +
-          "nodes undecided (raise maxPhases)")
-      assigned.reduce(_ unionByName _)
     }
+
+    var phase = 0
+    trim()
+    while (nRemaining > 0 && phase < maxPhases) {
+      phase += 1
+      val er = e
+        .join(remaining.withColumnRenamed("node", "src"), Seq("src"),
+          "left_semi")
+        .join(remaining.withColumnRenamed("node", "dst"), Seq("dst"),
+          "left_semi")
+        .localCheckpoint(true)
+      // start labels: a projection of the already-checkpointed remaining
+      // frame, so neither direction pays a materialization job for them
+      val init = (remaining.select(col("node"), col("node").as("v")),
+        nRemaining)
+      def labels(reverse: Boolean): DataFrame = {
+        val (lab, converged) = minLabels(er, reverse, init, maxRounds)
+        // a capped, non-stationary fixpoint would silently mislabel deep
+        // cycles (partial f/b mins decide only the min node, trim then
+        // shatters the rest into bogus singleton SCCs) — fail loudly
+        require(converged,
+          s"SCC min-label propagation did not reach a fixpoint within " +
+            s"$maxRounds rounds (raise maxRounds)")
+        lab
+      }
+      // the forward and backward fixpoints read the same immutable frames
+      // and share nothing else: overlapped, each one's small
+      // driver-synchronized rounds back-fill the other's idle cores
+      val (f, b) = Parallel.both(e.sparkSession.sparkContext)(
+        labels(reverse = false), labels(reverse = true))
+      val dec = f.join(b.withColumnRenamed("v", "bv"), Seq("node"))
+        .filter(col("v") === col("bv"))
+        .select(col("node"), col("v").as("scc"))
+        .localCheckpoint(true)
+      assigned :+= dec
+      val (rem2, nRem2) = IterUtil.checkpointCounted(
+        remaining.join(dec, Seq("node"), "left_anti"))
+      remaining = rem2
+      nRemaining = nRem2
+      trim()
+    }
+    require(nRemaining == 0,
+      s"SCC did not converge within $maxPhases phases — $nRemaining " +
+        "nodes undecided (raise maxPhases)")
+    // no edges at all leave nothing assigned: the empty remaining frame
+    assigned.reduceOption(_ unionByName _)
+      .getOrElse(remaining.select(col("node"), col("node").as("scc")))
   }
 }

@@ -323,20 +323,15 @@ object Relational {
         "l_extendedprice")
       val a = li.filter($"l_orderkey" % 2 === 0)
       val b = li.filter($"l_orderkey" % 2 === 1)
-      // round-16 (guide §2.6): the two snapshot profiles are independent
-      // (each eagerly materializes its own level-1 state) — build them on
-      // two driver threads so their scans overlap; the diff is unchanged
-      val ec = scala.concurrent.ExecutionContext.global
-      val fa = scala.concurrent.Future(graft.operators.Profiler
-        .columnStats(a, shared :+ "l_partkey", withExact = true))(ec)
-      val fb = scala.concurrent.Future(graft.operators.Profiler
-        .columnStats(b, shared :+ "l_linenumber", withExact = true))(ec)
-      graft.operators.Profiler.profileDiff(
-          scala.concurrent.Await.result(fa,
-            scala.concurrent.duration.Duration.Inf),
-          scala.concurrent.Await.result(fb,
-            scala.concurrent.duration.Duration.Inf))
-        .orderBy($"col_name")
+      // the two snapshot profiles are independent (each eagerly
+      // materializes its own level-1 state) — build them on two driver
+      // threads so their scans overlap; the diff is unchanged
+      val (pa, pb) = graft.operators.Parallel.both(s.sparkContext)(
+        graft.operators.Profiler
+          .columnStats(a, shared :+ "l_partkey", withExact = true),
+        graft.operators.Profiler
+          .columnStats(b, shared :+ "l_linenumber", withExact = true))
+      graft.operators.Profiler.profileDiff(pa, pb).orderBy($"col_name")
     }),
 
     // Declarative data-quality suite (operators.Checks): four scalar

@@ -12,6 +12,58 @@ class ComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  /** Degenerate inputs every iterative operator is checked on beside its
+    * main fixture, as nullable (s, d) pairs: a chain long enough that the
+    * layer folds of both loop drivers fire at least twice, no edges at
+    * all, self-loops only, parallel and duplicate edges, and null
+    * endpoints mixed into a small path.
+    */
+  private val edgeCases: Seq[(String, Seq[(Option[Long], Option[Long])])] = {
+    def e(a: Long, b: Long) = (Option(a), Option(b))
+    Seq(
+      "33-node chain" -> (1L to 32L).map(i => e(i, i + 1)),
+      "empty" -> Seq.empty,
+      "self-loops only" -> Seq(e(1L, 1L), e(2L, 2L), e(2L, 2L)),
+      "parallel and duplicate edges" -> Seq(e(1L, 2L), e(1L, 2L), e(2L, 1L),
+        e(2L, 3L), e(2L, 3L), e(3L, 4L), e(1L, 3L), e(1L, 3L)),
+      "null endpoints" -> Seq(e(1L, 2L), (Some(2L), None), (None, Some(3L)),
+        (None, None), e(2L, 3L), e(3L, 4L), (Some(4L), None)))
+  }
+
+  private def edgeFrame(es: Seq[(Option[Long], Option[Long])]) = {
+    import spark.implicits._
+    es.toDF("s", "d")
+  }
+
+  /** Both directions of every pair: BFS back edges then reach visited
+    * nodes, so a wrong visited set shows in the result.
+    */
+  private def symmetric(es: Seq[(Option[Long], Option[Long])]) =
+    es ++ es.map(_.swap)
+
+  /** The edges a scalar model sees: rows with a null endpoint dropped. */
+  private def nonNull(
+      es: Seq[(Option[Long], Option[Long])]): Seq[(Long, Long)] =
+    es.collect { case (Some(a), Some(b)) => (a, b) }
+
+  /** Union-find components over `edges`, labelled by the minimum member
+    * id; self-loops add no edge, so a node seen only in one is absent.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val es = edges.filter { case (a, b) => a != b }
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // the smaller root wins every union, so each root is its set's min id
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    es.flatMap(e => Seq(e._1, e._2)).distinct.map(id => id -> find(id)).toMap
+  }
+
   test("two clusters and a chain collapse to min-id components") {
     // {1,2,3} via transitive pairs, {10,11}, chain {20..24}
     val got = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L),
@@ -26,25 +78,14 @@ class ComponentsSpec extends AnyFunSuite {
       val n = 60
       val edges = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = {
-        var r = x; while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(id => id -> {
-          // canonical = min id in the component
-          val root = find(id.toInt)
-          edges.flatMap(e => Seq(e._1, e._2)).distinct
-            .filter(j => find(j.toInt) == root).min
-        }).toMap
-      assert(cc(edges) == want, s"round $round")
+      assert(cc(edges) == unionFind(edges), s"round $round")
+    }
+    // the chain needs 33 rounds, past the default maxIter
+    for ((tag, es) <- edgeCases) {
+      val got = Components.connectedComponents(edgeFrame(es), "s", "d",
+          maxIter = 40)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFind(nonNull(es)), tag)
     }
   }
 
@@ -274,6 +315,12 @@ class ComponentsSpec extends AnyFunSuite {
         Seq(0L, 17L).toDF("seed"), "seed")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rgot === rwant)
+    for ((tag, es0) <- edgeCases; es = symmetric(es0)) {
+      val got = Components.bfsHops(edgeFrame(es), "s", "d",
+          Seq(1L).toDF("seed"), "seed")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === scalarBfs(nonNull(es), Set(1L)), tag)
+    }
   }
 
   test("harmonicCentrality: exact lcm numerators match a scalar " +
@@ -331,6 +378,14 @@ class ComponentsSpec extends AnyFunSuite {
         Seq(1L).toDF("seed"), "seed", maxRounds = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(trunc === Map(2L -> 1L))
+    // the chain needs 33 rounds: run every case at the 40-round maximum
+    for ((tag, es0) <- edgeCases; es = symmetric(es0)) {
+      val got = Components.harmonicCentrality(edgeFrame(es), "s", "d",
+          Seq(1L, 3L).toDF("seed"), "seed", maxRounds = 40)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+        .toMap
+      assert(got === scalar(nonNull(es), Set(1L, 3L), 40), tag)
+    }
   }
 
   test("kCore: a DIRECTED edge list fails loudly instead of silently " +
@@ -397,6 +452,16 @@ class ComponentsSpec extends AnyFunSuite {
         "s", "d", "w", Seq(0L, 17L, 999L).toDF("seed"), "seed")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sgot === want)
+    // weights vary along each list, so parallel copies differ in cost
+    for ((tag, es) <- edgeCases) {
+      val wes = es.zipWithIndex.map { case ((a, b), i) =>
+        (a, b, Option(1L + i % 4)) }
+      val got = Components.sssp(wes.toDF("s", "d", "w"), "s", "d", "w",
+          Seq(1L).toDF("seed"), "seed")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val model = wes.collect { case (Some(a), Some(b), Some(w)) => (a, b, w) }
+      assert(got === scalarSssp(model, Set(1L)), tag)
+    }
   }
 
   test("ssspResume: resuming a persisted run over a GROWN graph equals " +
@@ -481,6 +546,14 @@ class ComponentsSpec extends AnyFunSuite {
     // alongside the direct 2->5 chord (d(5)=2 via 2, sigma 1)
     assert(want((1L, 4L)) === ((2L, BigInt(2))))
     assert(want((1L, 5L)) === ((2L, BigInt(1))))
+    for ((tag, es0) <- edgeCases; es = symmetric(es0)) {
+      val got = Components.brandesForward(edgeFrame(es), "s", "d",
+          Seq(1L, 3L).toDF("seed"), "seed", maxRounds = 40)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) ->
+          ((r.getLong(2), BigInt(r.getDecimal(3).toBigInteger)))).toMap
+      assert(got === scalar(nonNull(es), Seq(1L, 3L), 40), tag)
+    }
   }
 
   test("betweenness matches the scalar Brandes model bit-for-bit (same " +
@@ -608,6 +681,14 @@ class ComponentsSpec extends AnyFunSuite {
     val w1 = tarjan(g1)
     assert(w1(2L) === 1L && w1(4L) === 3L && w1(5L) === 3L)
     assert(w1(7L) === 7L && w1(10L) === 10L)
+    // the chain is pure trim; closed into a cycle it needs 32 label rounds
+    val cycle =
+      "33-node cycle" -> (edgeCases.head._2 :+ ((Some(33L), Some(1L))))
+    for ((tag, es) <- edgeCases :+ cycle) {
+      val got = Components.stronglyConnectedComponents(edgeFrame(es), "s", "d")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === tarjan(nonNull(es)), tag)
+    }
   }
 
   test("stronglyConnectedComponents: an acyclic graph is all singletons " +
@@ -627,6 +708,59 @@ class ComponentsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("undecided"))
   }
+
+  test("kCore: a directed cycle, whose every dst is also a src, still " +
+      "fails the symmetry guard") {
+    import spark.implicits._
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("s", "d")
+    val e = intercept[IllegalArgumentException] {
+      Components.kCore(cycle, "s", "d", 1).collect()
+    }
+    assert(e.getMessage.contains("SYMMETRIZED"))
+  }
+
+  test("stronglyConnectedComponents: a non-converging label fixpoint " +
+      "fails loudly and leaves no Spark job running") {
+    import spark.implicits._
+    val ring = (1L to 40L).map(i => (i, i % 40 + 1)).toDF("s", "d")
+    val e = intercept[IllegalArgumentException] {
+      Components.stronglyConnectedComponents(ring, "s", "d", maxRounds = 1)
+        .collect()
+    }
+    assert(e.getMessage.contains("did not reach a fixpoint"))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
+  test("job counts: connectedComponents and sssp on a fixed 20-node chain " +
+      "launch exactly the pinned number of Spark jobs") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val group = s"components-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "pinned job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      jobs.get
+    }
+    val chain = (1L until 20L).map(i => (i, i + 1))
+    sc.addSparkListener(listener)
+    try {
+      val ccJobs = jobsOf(Components.connectedComponents(
+        chain.toDF("id_a", "id_b")).collect())
+      val ssspJobs = jobsOf(Components.sssp(
+        chain.map { case (a, b) => (a, b, 1L) }.toDF("s", "d", "w"),
+        "s", "d", "w", Seq(1L).toDF("seed"), "seed").collect())
+      assert((ccJobs, ssspJobs) === ((107, 105)))
+    } finally sc.removeSparkListener(listener)
+  }
 }
-
-
