@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -15,12 +16,14 @@ object Tables {
   // round-16 (tail fixed-overhead audit): every Tables() call used to
   // re-infer the parquet schema — a footer read + file listing per call,
   // paid by every query (and 2-4× by multi-table queries) before any row
-  // moves. The SCHEMA of a testdata file is an immutable file property,
-  // so memoize it per (dir, name) and hand it to the reader explicitly.
-  // This caches metadata only — never rows or results; the scan itself
-  // re-reads the parquet on every execution exactly as before.
+  // moves. The schema is memoized per file VERSION — path, modification
+  // time and length, from one getFileStatus — and handed to the reader
+  // explicitly, so a table rewritten in the same JVM is re-inferred
+  // instead of read through its stale schema. This caches metadata only —
+  // never rows or results; the scan itself re-reads the parquet on every
+  // execution exactly as before.
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
       org.apache.spark.sql.types.StructType]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -32,9 +35,13 @@ object Tables {
     // TIMESTAMP, which preserves the stored micros and matches DuckDB's
     // naive reading). Either way downstream code sees TimestampType.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.computeIfAbsent((dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet").schema)
-    val df = spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+    val path = new Path(s"$dir/$name.parquet")
+    val st = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(path)
+    val schema = schemaCache.computeIfAbsent(
+      (st.getPath.toString, st.getModificationTime, st.getLen),
+      _ => spark.read.parquet(path.toString).schema)
+    val df = spark.read.schema(schema).parquet(path.toString)
     val nanosFixed =
       if (df.schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -24,16 +24,6 @@ object ChangeStream {
     base.select(col("after.*"), col("op"), col("ts_ms"))
   }
 
-  /** Database/table include filter (O-3). At the DataFrame layer this is a
-    * plain predicate; the streaming file source prunes whole per-table
-    * directories instead (source-level pushdown).
-    */
-  def includeOnly(envelopes: DataFrame, db: String, tables: Seq[String] = Nil): DataFrame = {
-    val byDb = envelopes.filter(col("source.db") === db)
-    if (tables.isEmpty) byDb
-    else byDb.filter(col("source.table").isin(tables: _*))
-  }
-
   /** Serialize to the wire format: JSON key (primary key) + JSON value
     * (application.properties:26-27), plus the routing subject.
     */

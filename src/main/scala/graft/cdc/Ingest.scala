@@ -69,13 +69,6 @@ object Ingest {
   def autoIncrementSparse(df: DataFrame, idCol: String, startFrom: Long): DataFrame =
     df.withColumn(idCol, (monotonically_increasing_id() + startFrom + 1).cast("bigint"))
 
-  /** DEFAULT CURRENT_TIMESTAMP on insert: fill null audit columns. */
-  def applyInsertDefaults(df: DataFrame, nowMs: Long,
-                          cols: Seq[String] = Seq("created_at", "updated_at")): DataFrame =
-    cols.filter(df.columns.contains).foldLeft(df) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), timestamp_millis(lit(nowMs))))
-    }
-
   /** Upsert with MySQL timestamp semantics (`ON UPDATE CURRENT_TIMESTAMP`):
     *  - new keys are inserted with created_at = updated_at = now,
     *  - existing keys whose compared columns changed take the incoming

@@ -25,11 +25,6 @@ object Metrics {
       approx_count_distinct(col("eventType")).as("event_types_seen"),
       max(col("timestamp")).as("max_event_time"))
 
-  /** events.published.total by event type. */
-  def byType(events: DataFrame): DataFrame =
-    events.groupBy(col("eventType"))
-      .agg(count(lit(1)).as("published_total"))
-
   /** CDC lag / end-to-end latency percentiles per minute window (O-23):
     * processing ts vs event ts.
     */

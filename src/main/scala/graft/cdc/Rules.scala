@@ -302,7 +302,8 @@ object Rules {
     * `CodegenFallback` — wrapping the rule array in it forces the whole
     * subtree (md5 event ids, to_json payloads, every `when` guard) into
     * interpreted evaluation, measured at ~0.7 ms/row vs ~0.1 ms/row for
-    * the codegen'd Generate + Filter form (`graft.StageBisectProbe`).
+    * the codegen'd Generate + Filter form (round 4 stage bisection, see
+    * git history).
     */
   private def explodeEvents(envelopes: DataFrame,
                             outputs: Option[Column]): DataFrame =

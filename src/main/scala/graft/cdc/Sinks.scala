@@ -11,8 +11,6 @@ import org.apache.spark.sql.functions._
   *    `partitionBy(event_month)` + `sortWithinPartitions` — gives downstream
   *    readers partition pruning + run-length-friendly sort order, the same
   *    physical win MergeTree buys.
-  *  - Audit trail (docs/design.md:185-197): same shape on changed_at.
-  *  - Subject sink (O-6): wire-format rows partitioned by subject.
   *  - Retention sweep (O-7): drop partitions older than max_age
   *    (stream.json:9-13) — a metadata operation, never a scan.
   */
@@ -29,28 +27,6 @@ object Sinks {
       .sortWithinPartitions(col("eventType"), col("timestamp"), col("aggregateId"))
       .write.mode(mode)
       .partitionBy("event_month")
-      .parquet(path)
-
-  def writeAudit(audit: DataFrame, path: String,
-                 mode: SaveMode = SaveMode.Append): Unit =
-    audit
-      .withColumn("changed_month", date_format(col("changed_at"), "yyyyMM"))
-      .repartitionByRange(col("changed_month"), col("entity_type"),
-        col("changed_at"), col("entity_id"))
-      .sortWithinPartitions(col("entity_type"), col("changed_at"), col("entity_id"))
-      .write.mode(mode)
-      .partitionBy("changed_month")
-      .parquet(path)
-
-  /** Outbound publish: one directory per subject (NATS fan-out analog,
-    * consumers subscribe by wildcard = partition-pruned read).
-    */
-  def writeSubjects(wire: DataFrame, path: String,
-                    mode: SaveMode = SaveMode.Append): Unit =
-    wire
-      .repartitionByRange(col("subject"), col("ts_ms"))
-      .write.mode(mode)
-      .partitionBy("subject")
       .parquet(path)
 
   /** Retention sweep (max_age, discard=old): drop month partitions strictly

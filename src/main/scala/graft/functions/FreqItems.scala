@@ -137,9 +137,6 @@ final class SpaceSavingSummary(val m: Int, val stringItems: Boolean) {
   def estimate(item: AnyRef): Long =
     pos.get(item) match { case null => minCount; case i => counts(i) }
 
-  def lowerBound(item: AnyRef): Long =
-    pos.get(item) match { case null => 0L; case i => counts(i) - errs(i) }
-
   def tracked(item: AnyRef): Boolean = pos.containsKey(item)
 
   private def swap(i: Int, j: Int): Unit = {

@@ -55,7 +55,7 @@ private[graft] object BatchTables {
     * `streaming.Pipeline.run` pins its own cloned session once at start
     * so its N maintenance writers run CONCURRENTLY (serialized, five
     * state tables pay the sum of the hooks instead of their max —
-    * Round12StreamMaintProbe).
+    * measured in round 12, see git history).
     */
   private[graft] def pinDynamicOverwrite(spark: SparkSession): Unit =
     overwriteModeLock.synchronized {

@@ -675,18 +675,18 @@ object Curation {
     * paper's 2, calibrated to keep the gate scales (<= 5,000 docs) at
     * exactly 2.
     *
-    * Measured on the sweep corpora (LineDedupProbe, gate-shaped lines:
-    * 12-word paragraphs + per-source header/footer, 2 header lines per
-    * doc): at 10x (50,000 docs) fixed minDf=2 removes 124,700 lines where
-    * autoMinDf(50k)=20 removes 100,200 — auto's removals are almost
-    * exactly the 100,000 header lines (true boilerplate, >= 5,000
-    * occurrences per header value, far above any auto threshold), while
-    * fixed 2's extra ~24,500 are duplicate-cluster CONTENT paragraphs
-    * (df in [2, 20)) already owned by the document/substring dedup
-    * passes. At 100x (500,000 docs) the same shape: fixed 2 removes
-    * 1,247,000 (35.8% of lines), auto(200) removes 1,000,000 — the
-    * 1,000,000 headers (>= 50,000 occurrences each) and nothing else;
-    * wall 2.4 s (auto) / 4.7 s (fixed) at 100x on local[32].
+    * Measured on the sweep corpora (round 9 line-dedup probe, in git
+    * history; gate-shaped lines: 12-word paragraphs + per-source
+    * header/footer, 2 header lines per doc): at 10x (50,000 docs) fixed
+    * minDf=2 removes 124,700 lines where autoMinDf(50k)=20 removes 100,200
+    * — auto's removals are almost exactly the 100,000 header lines (true
+    * boilerplate, >= 5,000 occurrences per header value, far above any auto
+    * threshold), while fixed 2's extra ~24,500 are duplicate-cluster
+    * CONTENT paragraphs (df in [2, 20)) already owned by the
+    * document/substring dedup passes. At 100x (500,000 docs) the same
+    * shape: fixed 2 removes 1,247,000 (35.8% of lines), auto(200) removes
+    * 1,000,000 — the 1,000,000 headers (>= 50,000 occurrences each) and
+    * nothing else; wall 2.4 s (auto) / 4.7 s (fixed) at 100x on local[32].
     */
   def autoMinDf(n: Long): Int = math.max(2L, (n + 2499L) / 2500L).toInt
 

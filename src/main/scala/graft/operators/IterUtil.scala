@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * `observe()` — every loop used to pay one extra driver-synchronized
   * job per round just to count/aggregate the frame it had JUST
   * checkpointed (measured on this build: 20 checkpoint+count rounds
-  * 3.07 s plain vs 1.61 s fused — `ObsProbe16`; the iterative graph
-  * family is job-count-bound at bench scale, per the r15 scaling block).
+  * 3.07 s plain vs 1.61 s fused — round 16's observe() probe, in git
+  * history; the iterative graph family is job-count-bound at bench
+  * scale, per the r15 scaling block).
   * `CollectMetrics` passes rows through untouched, so the checkpointed
   * frame — and everything computed from it — is bit-identical; only the
   * number of jobs changes.

@@ -63,8 +63,6 @@ object Moments {
         sum(x * y).as("sxy"), sum(x * x).as("sxx"), sum(y * y).as("syy"))
   }
 
-  private val MomentCols = Seq("n", "sx", "sy", "sxy", "sxx", "syy")
-
   /** Column-wise sum of moment frames (same group columns): the merge. */
   def mergeMoments(m: DataFrame, groupCols: Seq[String]): DataFrame =
     m.groupBy(groupCols.map(col): _*)

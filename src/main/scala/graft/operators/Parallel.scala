@@ -4,45 +4,46 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.SparkContext
 import scala.concurrent.{Await, ExecutionContext, Promise}
 import scala.concurrent.duration.Duration
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
-/** Two independent Spark computations overlapped on driver threads. */
+/** Independent Spark computations overlapped on driver threads. */
 private[graft] object Parallel {
 
-  /** Run `a` and `b` on two driver threads, each under its own Spark job
-    * group, and wait for BOTH. The first side to fail cancels the other's
-    * job group, its running and its future jobs, so no Spark work outlives
-    * the call; that first failure is rethrown once both sides have
-    * stopped.
+  /** Run every body on its own driver thread, each under its own Spark job
+    * group, and wait for ALL of them. The first body to fail cancels every
+    * other body's job group, its running and its future jobs, so no Spark
+    * work outlives the call; that first failure is rethrown once every body
+    * has stopped.
     */
-  def both[A, B](sc: SparkContext)(a: => A, b: => B): (A, B) = {
+  def all[A](sc: SparkContext)(bodies: Seq[() => A]): Seq[A] = {
     val tag = java.util.UUID.randomUUID.toString
-    val (groupA, groupB) = (s"graft-both-$tag-a", s"graft-both-$tag-b")
+    val groups = bodies.indices.map(i => s"graft-par-$tag-$i")
     val firstFailure = new AtomicReference[Throwable]()
     // a Promise, not Future.apply, which leaves its future incomplete on a
-    // fatal error: every failure must cancel the sibling and end the wait
-    def run[T](group: String, sibling: String, body: => T) = {
-      val p = Promise[T]()
+    // fatal error: every failure must cancel the siblings and end the wait
+    val futures = bodies.zip(groups).map { case (body, group) =>
+      val p = Promise[A]()
       ExecutionContext.global.execute { () =>
-        sc.setJobGroup(group, "graft: one of two overlapped computations",
+        sc.setJobGroup(group, "graft: one of several overlapped computations",
           interruptOnCancel = true)
-        try p.success(body)
+        try p.success(body())
         catch {
           case t: Throwable =>
             if (firstFailure.compareAndSet(null, t))
-              sc.cancelJobGroupAndFutureJobs(sibling)
+              groups.filter(_ != group).foreach(sc.cancelJobGroupAndFutureJobs)
             p.failure(t)
         } finally sc.clearJobGroup()
       }
       p.future
     }
-    val fa = run(groupA, groupB, a)
-    val fb = run(groupB, groupA, b)
-    val ra = Try(Await.result(fa, Duration.Inf))
-    val rb = Try(Await.result(fb, Duration.Inf))
-    (ra, rb) match {
-      case (Success(x), Success(y)) => (x, y)
-      case _ => throw firstFailure.get
-    }
+    val results = futures.map(f => Try(Await.result(f, Duration.Inf)))
+    if (results.forall(_.isSuccess)) results.map(_.get)
+    else throw firstFailure.get
   }
+
+  /** [[all]] for two computations of different result types. */
+  def both[A, B](sc: SparkContext)(a: => A, b: => B): (A, B) =
+    all[Any](sc)(Seq(() => a, () => b)) match {
+      case Seq(x, y) => (x.asInstanceOf[A], y.asInstanceOf[B])
+    }
 }

@@ -61,30 +61,23 @@ object Pipeline {
     */
   val WriteSpread = 8
 
-  /** THROUGHPUT-MODE deployment recipe — the configuration
-    * `graft.StreamTuneProbe` measured at 31–35.5 k ev/s sustained with
-    * P95 batch latency 1.48–1.87 s on a single local[32] instance
-    * (round 7; the <2 s KPI met at 6–7× the 5 k ev/s gate):
-    *
-    *  - `ThroughputTuning`: the session-conf overrides to pass as
-    *    `run(..., tuning = ...)`. EMPTY by measurement, not omission —
-    *    the probe ran AQE-off and AQE-off+CBO-off variants against the
-    *    defaults and all landed within run-to-run noise (addBatch
-    *    executor work is ≈95% of trigger time; queryPlanning is
-    *    8–14 ms/batch, so no planning conf can buy anything). The
-    *    defaults `run` already applies (parallelismFirst coalescing +
-    *    128k min partition size) ARE the tuned state.
-    *  - `ThroughputAdmissionEvents`: size `maxFilesPerTrigger` so one
-    *    trigger admits ~this many events (e.g. 10 × 5 k-event segments).
-    *    Bigger batches amortize the fixed per-trigger cost (offset
-    *    bookkeeping 80–130 ms + one commit) without breaching the P95
-    *    KPI; beyond ~50 k the latency KPI starts to govern.
+  /** THROUGHPUT-MODE admission: size `maxFilesPerTrigger` so one trigger
+    * admits ~this many events (e.g. 10 × 5 k-event segments). Round 7
+    * measured 31–35.5 k ev/s sustained with P95 batch latency 1.48–1.87 s
+    * on a single local[32] instance (the <2 s KPI met at 6–7× the 5 k ev/s
+    * gate); the streaming probe behind those numbers lives in git history.
+    * Bigger batches amortize the fixed per-trigger cost (offset
+    * bookkeeping 80–130 ms + one commit) without breaching the P95 KPI;
+    * beyond ~50 k the latency KPI starts to govern. No session conf beats
+    * the defaults `run` applies (parallelismFirst coalescing + 128k min
+    * partition size): AQE-off and AQE-off+CBO-off variants landed within
+    * run-to-run noise, since addBatch executor work is ≈95% of trigger
+    * time and queryPlanning is 8–14 ms/batch.
     *
     * Scale-out past one instance is the multi-instance model (one
     * pipeline per ledger shard, ~38 k ev/s/box aggregate measured,
     * near-linear to box saturation): the 100 k+ ev/s tier is ~3 workers.
     */
-  val ThroughputTuning: Map[String, String] = Map.empty
   val ThroughputAdmissionEvents = 50000
 
   /** Wire rows → domain events in ONE pass for every table of the batch:
@@ -431,25 +424,17 @@ object Pipeline {
   /** Run the maintenance hooks for one micro-batch — CONCURRENTLY when
     * there is more than one (each hook is an independent idempotent
     * writer on its own table; the batch then pays ~the slowest hook, not
-    * their sum — Round12StreamMaintProbe measures the difference). Every
-    * hook runs to completion before the batch proceeds or fails: a hook
-    * failure fails the batch (the replay re-runs ALL hooks — dynamic
-    * overwrite makes that a rewrite), but never while a sibling is still
-    * mid-write.
+    * their sum, as measured in round 12 — see git history). The hooks run
+    * through `Parallel.all`: a hook failure, fatal errors included, cancels
+    * the siblings' Spark jobs and fails the batch once every hook has
+    * stopped (the replay re-runs ALL hooks — dynamic overwrite makes that a
+    * rewrite), but never while a sibling is still mid-write.
     */
   private def runMaintenance(maintenance: Seq[(DataFrame, Long) => Unit],
                              deduped: DataFrame, batchId: Long): Unit =
     if (maintenance.size <= 1) maintenance.foreach(f => f(deduped, batchId))
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val done = Await.result(
-        Future.sequence(maintenance.map(f =>
-          Future(scala.util.Try(f(deduped, batchId))))),
-        Duration.Inf)
-      done.collectFirst { case scala.util.Failure(e) => throw e }
-    }
+    else graft.operators.Parallel.all(deduped.sparkSession.sparkContext)(
+      maintenance.map(f => () => f(deduped, batchId)))
 
   /** Launch the full pipeline as a checkpointed streaming query writing the
     * combined store+publish sink under `sinkRoot`.
@@ -494,7 +479,6 @@ object Pipeline {
           trigger: Trigger = Trigger.AvailableNow(),
           histories: Map[String, SchemaHistory.History] = Map.empty,
           failpoint: Long => Unit = _ => (),
-          tuning: Map[String, String] = Map.empty,
           maintenance: Seq[(DataFrame, Long) => Unit] = Seq.empty,
           postPublishFailpoint: Long => Unit = _ => ()): StreamingQuery = {
     // Latency tuning for the micro-batch work: with the defaults, AQE
@@ -505,8 +489,6 @@ object Pipeline {
     // still bounding files/dir (compaction absorbs the rest). The confs
     // apply to a CLONED session so the caller's session keeps its own
     // planning behavior — the pipeline never mutates shared state.
-    // `tuning` lets a deployment override per-query session confs (e.g.
-    // throughput mode disables AQE — see StreamTuneProbe measurements).
     val session = spark.newSession()
     session.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     session.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
@@ -514,15 +496,14 @@ object Pipeline {
     // session: every BatchTables maintenance writer then takes the
     // lock-free fast path and the hooks below can run CONCURRENTLY (the
     // store/publish writes are path-based with the per-write option, so
-    // the session mode does not change their semantics). Measured
-    // (Round12StreamMaintProbe): five hooks serialized cost ~0.8 s each
+    // the session mode does not change their semantics). Measured in
+    // round 12 (git history): five hooks serialized cost ~0.8 s each
     // per batch; concurrent, the batch pays ~the slowest hook. The pin
     // REGISTERS the session (BatchTables.pinDynamicOverwrite) — only
     // registered-permanent sessions get the lock-free path, so a
     // transient slow-path `dynamic` on some other session can never be
     // mistaken for a pin (the TOCTOU ADVICE r12 flagged).
     graft.operators.BatchTables.pinDynamicOverwrite(session)
-    tuning.foreach { case (k, v) => session.conf.set(k, v) }
     val reader = session.readStream.format("graft-changelog")
       .option("path", ledgerRoot)
       // small admitted batches still parse on every core
@@ -566,7 +547,7 @@ object Pipeline {
           // just committed, not from a persist of the upstream plan:
           // a persist would materialize its cache inside the sink
           // scan and tax the publish latency (~+0.4 s per 50k-event
-          // batch, Round13StreamMaintProbe), while the columnar
+          // batch, measured in round 13), while the columnar
           // read-back costs ~0.3 s in the trailing phase and keeps
           // one ledger parse per batch. Persisted across the N
           // concurrent hooks so they share one scan. The storeHasData

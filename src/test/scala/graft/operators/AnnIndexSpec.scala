@@ -127,8 +127,8 @@ class AnnIndexSpec extends AnyFunSuite {
         s"partitioned scan must be dynamically pruned:\n${plan.take(3000)}")
 
       // the nprobe sweep: recall@10 is monotone in nprobe with pinned
-      // floors (the Round12AnnRecallProbe sf1 sweep measured 0.92 /
-      // 0.94 / 0.96 mean at nprobe 1/3/8 over k=32 — here, at gate
+      // floors (round 12's sf1 recall sweep, in git history, measured
+      // 0.92 / 0.94 / 0.96 mean at nprobe 1/3/8 over k=32 — here, at gate
       // scale over k=8, pin the per-query floors 4/5/10)
       val sweep = Seq(1 -> 4, 3 -> 5, 8 -> 10).map { case (np, floor) =>
         val got = AnnIndex.searchAgainstIndex(spark, table, queries,

@@ -513,7 +513,8 @@ class TextDedupSpec extends AnyFunSuite {
     assert(SimHash.autoParams(500L) == ((13, 12)))
     assert(SimHash.autoParams(5000L) == ((13, 12))) // sf0.1 stays on the full banding
     assert(SimHash.autoParams(50000L) == ((8, 7)))  // 10x sweep: 8-bit segments
-    // 100x sweep corpus (round 8, SimHashProbe at 500k docs): (6,5) finds
+    // 100x sweep corpus (round 8 SimHash probe at 500k docs, in git
+    // history): (6,5) finds
     // 19,440 of 25,600 true J>=0.8 pairs (75.9% recall) in 13 s — the
     // candidate volume holds ~linear where fixed (13,12) would be ~10^10
     assert(SimHash.autoParams(500000L) == ((6, 5)))

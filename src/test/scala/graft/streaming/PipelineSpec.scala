@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.cdc.{ChangeStream, Dedup, Fixtures, Rules, Schemas}
@@ -175,6 +175,31 @@ class PipelineSpec extends AnyFunSuite {
       assert(got == want && got.toSeq.map(_._3).sum == 4,
         s"state must converge on replay: $got vs $want")
     } finally spark.sql(s"DROP TABLE IF EXISTS $dailyT")
+  }
+
+  test("a fatal error in one maintenance hook fails the batch and cancels " +
+      "the sibling hook's Spark jobs") {
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    Ledger.writeCrudScenario(ledger)
+    val t0 = System.nanoTime()
+    def elapsedS = (System.nanoTime() - t0) / 1e9
+    val hooks: Seq[(org.apache.spark.sql.DataFrame, Long) => Unit] = Seq(
+      (_, _) => {
+        Thread.sleep(500)
+        throw new StackOverflowError("simulated fatal error in a hook")
+      },
+      // submits job after job until its group is cancelled; the time bound
+      // ends it should the cancellation never come
+      (b, _) => while (elapsedS < 60) b.sparkSession.range(1000).count())
+    val q = Pipeline.run(spark, ledger, root, ckpt, maintenance = hooks)
+    // a hook escaping the wait would leave the batch, and the query,
+    // running forever: the bounded wait turns that into a failure
+    val e = try intercept[StreamingQueryException](q.awaitTermination(30000))
+      finally q.stop()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[StackOverflowError]), e)
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
   }
 
   test("follower maintenance (maintainFromStore): respects the publish " +
