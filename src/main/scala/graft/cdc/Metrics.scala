@@ -67,16 +67,11 @@ object Metrics {
                       eventType: org.apache.spark.sql.Column,
                       cents: org.apache.spark.sql.Column,
                       table: String, path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val rows = batch
       .groupBy(day.as("day"), eventType.as("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(cents).cast("long").as("cents"))
-      .withColumn("_batch_id", lit(batchId))
-    graft.operators.BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    graft.operators.BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    graft.operators.BatchTables.writeBatch(rows, batchId, table, path)
   }
 
   /** The maintained table's daily metrics over every absorbed batch. */

@@ -82,12 +82,8 @@ object Retract {
                    groupOf: Column => Column,
                    measureOf: Column => Column,
                    table: String, path: String, batchId: Long): Unit = {
-    val rows = mvDeltas(changelog, groupOf, measureOf)
-      .withColumn("_batch_id", lit(batchId))
-    graft.operators.BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    graft.operators.BatchTables.withDynamicOverwrite(changelog.sparkSession) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    graft.operators.BatchTables.writeBatch(
+      mvDeltas(changelog, groupOf, measureOf), batchId, table, path)
   }
 
   /** The maintained view: sum the delta vectors across every absorbed

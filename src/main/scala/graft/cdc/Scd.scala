@@ -100,18 +100,12 @@ object Scd {
   def mergeBatchLatest(batch: DataFrame, keyCols: Seq[String], tsCol: String,
                        tieCol: String, table: String, path: String,
                        batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val payload = struct(batch.columns.map(col): _*)
     val winners = batch
       .groupBy(keyCols.map(col): _*)
       .agg(max_by(payload, struct(col(tsCol), col(tieCol))).as("_winner"))
       .select(col("_winner.*"))
-      .withColumn("_batch_id", lit(batchId))
-    graft.operators.BatchTables.ensureBatchTable(
-      winners.limit(0), table, path)
-    graft.operators.BatchTables.withDynamicOverwrite(spark) {
-      winners.write.mode("overwrite").insertInto(table)
-    }
+    graft.operators.BatchTables.writeBatch(winners, batchId, table, path)
   }
 
   /** Current state over everything the maintained table has absorbed:
@@ -171,17 +165,12 @@ object Scd {
   def mergeBatchHistory(batch: DataFrame, keyCols: Seq[String], tsCol: String,
                         tieCol: String, table: String, path: String,
                         batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val rows = batch
       .withColumn("valid_from", col(tsCol))
       .withColumn("valid_to", lead(col(tsCol), 1).over(w))
-      .withColumn("_batch_id", lit(batchId))
-    graft.operators.BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    graft.operators.BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    graft.operators.BatchTables.writeBatch(rows, batchId, table, path)
   }
 
   /** The maintained table's SCD2 history over every absorbed batch:

@@ -283,7 +283,7 @@ object AnnIndex {
                     idCol: String, vecCol: String, seq: Long = 1L): Unit = {
     val cents = spark.table(s"${indexTable}_centroids")
     // append-mode insertInto only adds files to the delta's partitions —
-    // no overwrite semantics in play, so no partitionOverwriteMode scope.
+    // no overwrite semantics in play.
     // `seq` is the ingest generation (monotone per caller — a batch id):
     // a RE-EMBEDDED id must pair its append with `deleteFromIndex` at a
     // seq at or above the old row's, or the stale vector — possibly in a

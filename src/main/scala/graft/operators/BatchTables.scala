@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Shared machinery for `_batch_id`-partitioned catalog tables — the
   * incremental-state discipline the streaming dedup gate established
-  * (`TextDedup.dedupGateBatch`) and the sketch maintenance paths
-  * (`Hll.mergeBatch`, `CountMin.mergeBatch`) reuse:
+  * (`TextDedup.dedupGateBatch`) and every state family reuses:
   *
-  *  - per-batch rows land in the batch's OWN partition via dynamic
-  *    partition overwrite, so a crash-replayed batch rewrites exactly its
-  *    prior write and table contents are exactly-once;
+  *  - per-batch rows land in the batch's OWN partition through
+  *    [[writeBatch]], the one writer of every `_batch_id` table. Each
+  *    table declares dynamic partition overwrite once, at creation
+  *    ([[ensureBatchTable]]), so a crash-replayed batch rewrites exactly
+  *    its prior write and table contents are exactly-once, whatever the
+  *    session's own overwrite mode and however many writers share it;
   *  - per-batch partitions are periodically folded into one consolidated
   *    negative partition (`compactBatchPartitions`) so file count does
   *    not grow with stream age — each state family supplies its own
@@ -19,88 +21,88 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object BatchTables {
 
-  /** `insertInto` a catalog table honors only the SESSION
-    * partitionOverwriteMode (the per-write option applies to path-based
-    * saves only) — without `dynamic`, an overwrite-mode insert TRUNCATES
-    * every other partition. Scoped set-and-restore, serialized through
-    * one library-wide lock so two writers on the same session cannot
-    * interleave their set/restore windows. The lock cannot protect
-    * NON-library overwrite-mode partition writes racing on the same
-    * session — callers running such writes concurrently should give the
-    * stateful operator its own session (`spark.newSession()` shares the
-    * catalog), the same isolation `streaming.Pipeline.run` uses.
+  /** The catalog OPTION every `_batch_id` table carries from creation.
+    * An overwrite-mode `insertInto` takes its partition-overwrite mode
+    * from the table's own options, else from the session (STATIC by
+    * default); a writer `.option` on `insertInto` is ignored. Without it
+    * the insert TRUNCATES every other partition of the table.
     */
-  private val overwriteModeLock = new Object
-  private val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
+  private val OverwriteOption = "partitionOverwriteMode"
 
-  /** Sessions whose partitionOverwriteMode is pinned `dynamic` FOREVER
-    * (weak keys: a pin must not keep a finished pipeline's session
-    * alive). Only membership here authorizes the lock-free fast path —
-    * merely OBSERVING `dynamic` on the session does not: that reading
-    * could be a concurrent slow-path caller's transient set, and when
-    * its finally-restore reverts the mode mid-body, a lock-free
-    * overwrite insert would run in STATIC mode and truncate every other
-    * partition of the table (the round-12 TOCTOU).
+  /** Serializes compactions only, in this JVM: two runs over one table
+    * must not overlap (see [[compactBatchPartitions]]). Writes take no
+    * lock — each insert's overwrite mode comes from its table, not from
+    * shared session state. A write beside a compaction is no new race:
+    * the streaming pipeline's writers already ran lock-free beside
+    * compaction.
     */
-  private val pinnedDynamic = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  private val compactionLock = new Object
 
-  /** Pin `spark`'s partitionOverwriteMode to `dynamic` permanently and
-    * register it for the lock-free fast path. Taken under the library
-    * lock so no in-flight slow-path set/restore window can straddle the
-    * pin (its saved `prev` would otherwise revert the pin on restore);
-    * after the pin, every slow-path window on this session saves and
-    * restores `dynamic`, so the mode can never leave `dynamic` again —
-    * which is exactly what makes the fast path race-free.
-    * `streaming.Pipeline.run` pins its own cloned session once at start
-    * so its N maintenance writers run CONCURRENTLY (serialized, five
-    * state tables pay the sum of the hooks instead of their max —
-    * measured in round 12, see git history).
+  /** No-op. Kept for callers written when dynamic overwrite was a session
+    * setting (the benchmark harness's traced step-wise path still calls
+    * it): every `_batch_id` table now declares the mode itself, so there
+    * is nothing to pin and no session setting is touched.
     */
-  private[graft] def pinDynamicOverwrite(spark: SparkSession): Unit =
-    overwriteModeLock.synchronized {
-      spark.conf.set(overwriteModeKey, "dynamic")
-      pinnedDynamic.put(spark, java.lang.Boolean.TRUE)
-    }
+  private[graft] def pinDynamicOverwrite(spark: SparkSession): Unit = ()
 
-  private[graft] def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    // fast path ONLY for permanently-pinned sessions (see pinnedDynamic)
-    if (pinnedDynamic.containsKey(spark)) body
-    else overwriteModeLock.synchronized {
-      val prev = spark.conf.getOption(overwriteModeKey)
-      spark.conf.set(overwriteModeKey, "dynamic")
-      try body
-      finally prev.fold(spark.conf.unset(overwriteModeKey))(
-        spark.conf.set(overwriteModeKey, _))
-    }
-  }
+  private def metadata(spark: SparkSession, table: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
 
-  /** Create `table` at `path`, partitioned by `_batch_id`, from an empty
-    * frame with the state's schema (`configure` adds creation-only write
-    * options — bucketing, sort). If the table already exists, verify the
-    * caller's `path` matches its location: `path` only takes effect at
-    * creation, and a caller pointing an existing table name at a
-    * DIFFERENT path would silently keep writing to the old location.
+  private def requireDynamicOverwrite(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+      table: String): Unit =
+    require(meta.storage.properties.exists { case (k, v) =>
+      k.equalsIgnoreCase(OverwriteOption) && v.equalsIgnoreCase("dynamic") },
+      s"table $table was created without OPTIONS ('$OverwriteOption'=" +
+        "'dynamic'): an overwrite insert would truncate every other " +
+        "_batch_id partition — re-create it through BatchTables")
+
+  /** Create `table` at `path`, partitioned by `_batch_id` and declaring
+    * dynamic partition overwrite, from an empty frame with the state's
+    * schema (`configure` adds creation-only write options — bucketing,
+    * sort). If the table already exists, one catalog lookup verifies it
+    * carries the overwrite option and that the caller's `path` matches
+    * its location: `path` only takes effect at creation, and a caller
+    * pointing an existing table name at a DIFFERENT path would silently
+    * keep writing to the old location.
     */
   private[graft] def ensureBatchTable(
       empty: DataFrame, table: String, path: String,
       configure: org.apache.spark.sql.DataFrameWriter[Row] =>
         org.apache.spark.sql.DataFrameWriter[Row] = identity): Unit = {
     val spark = empty.sparkSession
-    if (!spark.catalog.tableExists(table)) {
-      configure(empty.write.option("path", path).partitionBy("_batch_id"))
-        .saveAsTable(table)
-    } else {
-      val existing = new org.apache.hadoop.fs.Path(java.net.URI.create(
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-          .location.toString))
-      val fs = existing.getFileSystem(spark.sessionState.newHadoopConf())
-      val requested = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-      require(fs.makeQualified(existing) == requested,
-        s"table $table already exists at ${fs.makeQualified(existing)}, " +
-          s"not at the requested path $requested — drop the table or pass its path")
+    val existing =
+      try Some(metadata(spark, table))
+      catch {
+        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException => None
+      }
+    existing match {
+      case None =>
+        configure(empty.write.option("path", path)
+          .option(OverwriteOption, "dynamic").partitionBy("_batch_id"))
+          .saveAsTable(table)
+      case Some(meta) =>
+        requireDynamicOverwrite(meta, table)
+        val at = new org.apache.hadoop.fs.Path(meta.location)
+        val fs = at.getFileSystem(spark.sessionState.newHadoopConf())
+        val requested = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
+        require(fs.makeQualified(at) == requested,
+          s"table $table already exists at ${fs.makeQualified(at)}, " +
+            s"not at the requested path $requested — drop the table or pass its path")
     }
+  }
+
+  /** Write one batch's `rows` into partition `_batch_id = batchId` of
+    * `table` (created at `path` on first use), replacing whatever an
+    * earlier run of the same batch wrote there and leaving every other
+    * partition untouched. `_batch_id` is appended as the last column.
+    */
+  private[graft] def writeBatch(rows: DataFrame, batchId: Long,
+                                table: String, path: String): Unit = {
+    val tagged = rows.withColumn("_batch_id", lit(batchId))
+    ensureBatchTable(tagged.limit(0), table, path)
+    tagged.write.mode("overwrite").insertInto(table)
   }
 
   /** Fold all batches `0 <= id <= upToBatchId` AND every previously
@@ -129,23 +131,21 @@ private[graft] object BatchTables {
     * returning (0, 0) — re-consolidating would regress the horizon and a
     * later replay of batches between the two horizons would duplicate.
     *
-    * Concurrency: runs for the SAME table must not overlap — the run is
-    * serialized against other library writes in this JVM (shared lock),
-    * and the staging-dir sweep only removes dirs whose horizon is at or
-    * below the committed one. Cross-JVM concurrent compaction of one
-    * table is NOT supported.
+    * Concurrency: runs for the SAME table must not overlap — compactions
+    * in this JVM are serialized (`compactionLock`), and the staging-dir
+    * sweep only removes dirs whose horizon is at or below the committed
+    * one. Cross-JVM concurrent compaction of one table is NOT supported.
     *
     * Returns (filesBefore, filesAfter) under the affected partitions.
     */
   private[graft] def compactBatchPartitions(
       spark: SparkSession, table: String, upToBatchId: Long,
       consolidate: DataFrame => DataFrame): (Int, Int) =
-    overwriteModeLock.synchronized {
+    compactionLock.synchronized {
       import org.apache.hadoop.fs.Path
-      val root = new Path(java.net.URI.create(
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-          .location.toString))
+      val meta = metadata(spark, table)
+      requireDynamicOverwrite(meta, table)
+      val root = new Path(meta.location)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(root)) return (0, 0)
       val compactedId = -(upToBatchId + 1)
@@ -226,11 +226,9 @@ private[graft] object BatchTables {
             .withColumn("_batch_id", lit(compactedId)))
           .write.mode("overwrite").parquet(staging.toString)
         // stage 2: through the table, so creation-time layout stays valid
-        withDynamicOverwrite(spark) {
-          spark.read.parquet(staging.toString)
-            .write.mode("overwrite")
-            .insertInto(table)
-        }
+        spark.read.parquet(staging.toString)
+          .write.mode("overwrite")
+          .insertInto(table)
         fs.delete(staging, true)
       }
       dropPartitions(sources ++ superseded)

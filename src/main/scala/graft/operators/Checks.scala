@@ -217,11 +217,7 @@ object Checks {
       col("_n").as("n"), lit(0L).as("viol"), col("_maxTs").as("max_us"))
     val state = one.select(explode(array(rows: _*)).as("r"))
       .select(col("r.*"))
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(state.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(batch.sparkSession) {
-      state.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(state, batchId, table, path)
   }
 
   /** The composed report from the MAINTAINED state table — schema equals

@@ -248,11 +248,8 @@ object Components {
     val mini = delta.union(
       affected.select(col("id").as("src"), col("component").as("dst")))
     val relabeled = connectedComponents(mini, "src", "dst", maxIter)
-      .select(col("id"), col("component"),
-        lit(batchId).as("_seq"), lit(batchId).as("_batch_id"))
-    BatchTables.withDynamicOverwrite(spark) {
-      relabeled.write.mode("overwrite").insertInto(table)
-    }
+      .select(col("id"), col("component"), lit(batchId).as("_seq"))
+    BatchTables.writeBatch(relabeled, batchId, table, path)
   }
 
   /** Current membership: latest (`_seq`-wise) component per node across

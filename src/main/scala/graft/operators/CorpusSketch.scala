@@ -107,13 +107,8 @@ object CorpusSketch {
   def mergeBatch(batch: DataFrame, corpusCol: String, textCol: String,
                  sigTable: String, sigPath: String, batchId: Long,
                  slotChars: Int = DefaultSlotHexChars, n: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val sig = signature(batch, corpusCol, textCol, slotChars, n)
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(sig.limit(0), sigTable, sigPath)
-    BatchTables.withDynamicOverwrite(spark) {
-      sig.write.mode("overwrite").insertInto(sigTable)
-    }
+    BatchTables.writeBatch(signature(batch, corpusCol, textCol, slotChars, n),
+      batchId, sigTable, sigPath)
   }
 
   /** The maintained table's merged signature frame. */

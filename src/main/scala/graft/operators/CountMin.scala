@@ -126,7 +126,7 @@ object CountMin {
 
   /** STREAMING counter maintenance — `Hll.mergeBatch`'s discipline for the
     * frequency sketch: each micro-batch's (row, col, cnt) frame lands in
-    * its own `_batch_id` partition via dynamic partition overwrite
+    * its own `_batch_id` partition through `BatchTables.writeBatch`
     * (crash-replay rewrites, never appends — double-counting a replayed
     * batch is the CMS failure mode, since counters SUM), and reads merge
     * at query time. Table created (partitioned, at `sketchPath`) on first
@@ -135,13 +135,8 @@ object CountMin {
   def mergeBatch(batch: DataFrame, valueCol: String, sketchTable: String,
                  sketchPath: String, batchId: Long, depth: Int = 4,
                  widthLog2: Int = 10): Unit = {
-    val spark = batch.sparkSession
-    val sk = sketch(batch, valueCol, depth, widthLog2)
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(sk.limit(0), sketchTable, sketchPath)
-    BatchTables.withDynamicOverwrite(spark) {
-      sk.write.mode("overwrite").insertInto(sketchTable)
-    }
+    BatchTables.writeBatch(sketch(batch, valueCol, depth, widthLog2),
+      batchId, sketchTable, sketchPath)
   }
 
   /** The maintained table's merged sketch (per-batch partitions collapsed

@@ -139,11 +139,7 @@ object Dsir {
     val rows = cr.join(ct, Seq("b"), "full_outer")
       .select(col("b"), coalesce(col("cr"), lit(0L)).as("cr"),
         coalesce(col("ct"), lit(0L)).as("ct"))
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(rows, batchId, table, path)
   }
 
   /** Fold batches `0..upToBatchId` into one consolidated partition:

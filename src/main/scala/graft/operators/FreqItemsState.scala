@@ -40,7 +40,6 @@ object FreqItemsState {
     */
   def mergeBatch(batch: DataFrame, itemCol: String, m: Int, table: String,
                  path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val one = batch.agg(
       count(col(itemCol)).as("_total"),
       FreqItems.freq_items(col(itemCol), m).as("_sk"))
@@ -57,11 +56,7 @@ object FreqItemsState {
         .otherwise(lit(0L)).as("err"))
     val rows = entries.unionByName(meta)
       .withColumn("_src_batch", lit(batchId))
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(rows, batchId, table, path)
   }
 
   /** The n-way mergeable-summaries combine over every per-batch summary

@@ -99,7 +99,7 @@ object Hll {
     * `TextDedup.dedupGateBatch` state discipline applied to sketches:
     *
     *  - the batch's register frame lands in its own `_batch_id` partition
-    *    via dynamic partition overwrite, so a crash-replayed batch
+    *    through `BatchTables.writeBatch`, so a crash-replayed batch
     *    rewrites exactly its prior write — table contents are
     *    exactly-once and `estimateFromTable` is byte-identical across a
     *    replay (spec-pinned in `SketchStreamSpec`);
@@ -113,13 +113,8 @@ object Hll {
   def mergeBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
                  registersTable: String, registersPath: String,
                  batchId: Long, p: Int = 12): Unit = {
-    val spark = batch.sparkSession
-    val regs = registers(batch, groupCols, valueCol, p)
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(regs.limit(0), registersTable, registersPath)
-    BatchTables.withDynamicOverwrite(spark) {
-      regs.write.mode("overwrite").insertInto(registersTable)
-    }
+    BatchTables.writeBatch(registers(batch, groupCols, valueCol, p),
+      batchId, registersTable, registersPath)
   }
 
   /** The maintained table's merged register frame (per-batch partitions

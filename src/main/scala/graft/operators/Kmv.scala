@@ -105,13 +105,8 @@ object Kmv {
     */
   def mergeBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
                  k: Int, table: String, path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val rows = sketch(batch, groupCols, valueCol, k)
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(sketch(batch, groupCols, valueCol, k),
+      batchId, table, path)
   }
 
   /** The sketch of everything the table has absorbed: the n-way merge

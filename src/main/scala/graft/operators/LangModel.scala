@@ -110,7 +110,6 @@ object LangModel {
     */
   def lmMergeBatch(batch: DataFrame, idCol: String, textCol: String,
                    table: String, path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val w = split(col(textCol), " ", -1)
     val bigrams = batch
       .select(explode(Curation.wordGrams(w, 2)).as("gram"))
@@ -124,11 +123,7 @@ object LangModel {
       .agg(count(lit(1)).as("cnt"))
       .select(lit(null).cast("string").as("gram"),
         lit(null).cast("string").as("w1"), col("word"), col("cnt"))
-    val rows = bigrams.unionByName(words).withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(bigrams.unionByName(words), batchId, table, path)
   }
 
   /** Fold batches `0..upToBatchId` of a [[lmMergeBatch]] table into one

@@ -81,13 +81,8 @@ object Moments {
   def mergeBatch(batch: DataFrame, groupCols: Seq[String], xCol: String,
                  yCol: String, table: String, path: String,
                  batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val rows = moments(batch, groupCols, xCol, yCol)
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(moments(batch, groupCols, xCol, yCol),
+      batchId, table, path)
   }
 
   /** Statistics over everything the table has absorbed: sum the stored

@@ -281,12 +281,7 @@ object Profiler {
     */
   def mergeBatch(batch: DataFrame, cols: Seq[String], table: String,
                  path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val l1 = level1(batch, cols).withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(l1.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      l1.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(level1(batch, cols), batchId, table, path)
   }
 
   /** The maintained table's profile over all absorbed batches. */

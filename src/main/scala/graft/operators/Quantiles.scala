@@ -159,13 +159,8 @@ object Quantiles {
   def mergeBatch(batch: DataFrame, groupCols: Seq[String], valueCol: String,
                  histTable: String, histPath: String, batchId: Long,
                  m: Int = DefaultSubBucketBits): Unit = {
-    val spark = batch.sparkSession
-    val h = histogram(batch, groupCols, valueCol, m)
-      .withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(h.limit(0), histTable, histPath)
-    BatchTables.withDynamicOverwrite(spark) {
-      h.write.mode("overwrite").insertInto(histTable)
-    }
+    BatchTables.writeBatch(histogram(batch, groupCols, valueCol, m),
+      batchId, histTable, histPath)
   }
 
   /** The maintained table's merged histogram (per-batch partitions

@@ -258,7 +258,6 @@ object TextAnalysis {
   def bm25MergeBatch(batch: org.apache.spark.sql.DataFrame, idCol: String,
                      textCol: String, table: String, path: String,
                      batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val base = batch
       .select(col(idCol).as("doc_id"), split(col(textCol), " ", -1).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).cast("long").as("dl"))
@@ -273,11 +272,7 @@ object TextAnalysis {
     val meta = base.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
       .select(lit(null).cast("string").as("term"),
         lit(null).cast("long").as("df"), col("n"), col("sdl"))
-    val rows = entries.unionByName(meta).withColumn("_batch_id", lit(batchId))
-    BatchTables.ensureBatchTable(rows.limit(0), table, path)
-    BatchTables.withDynamicOverwrite(spark) {
-      rows.write.mode("overwrite").insertInto(table)
-    }
+    BatchTables.writeBatch(entries.unionByName(meta), batchId, table, path)
   }
 
   /** Fold batches `0..upToBatchId` of a [[bm25MergeBatch]] table into one

@@ -282,9 +282,11 @@ object TextDedup {
     *    the corpus grows (plan-asserted in `TextDedupSpec`). A plain
     *    parquet index would re-shuffle the ENTIRE accumulated corpus
     *    sketch every micro-batch.
-    *  - partitioned by `_batch_id` and written with dynamic partition
-    *    OVERWRITE: a crash-replayed batch rewrites exactly its own
-    *    partition, so the index CONTENTS are exactly-once (a plain
+    *  - partitioned by `_batch_id` and written through
+    *    `BatchTables.writeBatch` (dynamic partition OVERWRITE, declared
+    *    by the table at creation): a crash-replayed batch rewrites
+    *    exactly its own partition, so the index CONTENTS are
+    *    exactly-once (a plain
     *    append would duplicate sketch rows on replay, inflating bucket
     *    occupancy toward `maxBucketSize` until true duplicates are
     *    silently dropped). Replay also EXCLUDES the batch's own
@@ -301,7 +303,6 @@ object TextDedup {
                      threshold: Double = 0.8, n: Int = 3,
                      numHashes: Int = 64, bands: Int = 16, rows: Int = 4,
                      maxBucketSize: Int = 1000, buckets: Int = 32): DataFrame = {
-    val spark = batch.sparkSession
     BatchTables.ensureBatchTable(
       bandedIndex(batch.limit(0), idCol, textCol, n, numHashes, bands, rows)
         .withColumn("_batch_id", lit(-1L)),
@@ -327,23 +328,10 @@ object TextDedup {
     val admittedSk = sk.join(
       dups.select(col("new_id")).distinct(),
       sk("doc_id") === col("new_id"), "left_anti")
-    withDynamicOverwrite(spark) {
-      bandRowsOf(admittedSk, bands, rows)
-        .withColumn("_batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .insertInto(indexTable)
-    }
+    BatchTables.writeBatch(bandRowsOf(admittedSk, bands, rows), batchId,
+      indexTable, indexPath)
     dups
   }
-
-  /** Dynamic-partition-overwrite scope — shared library-wide through
-    * `BatchTables` so gate writes, sketch-table writes and compactions on
-    * one session all serialize on the same lock (see
-    * `BatchTables.withDynamicOverwrite` for the full contract).
-    */
-  private def withDynamicOverwrite[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T =
-    BatchTables.withDynamicOverwrite(spark)(body)
 
   /** The gate's index-vs-batch join frame, lazy (exposed for plan
     * assertions): the bucketed index scan minus the batch's own partition
@@ -410,9 +398,9 @@ object TextDedup {
     * duplicate). Re-running AT the committed horizon stays the crash
     *-convergence path (skips consolidation, sweeps leftovers).
     *
-    * Concurrency: runs for the SAME table must not overlap — the run is
-    * serialized against other gate/compaction writes in this JVM (shared
-    * lock), and the staging-dir sweep only removes dirs whose horizon is
+    * Concurrency: runs for the SAME table must not overlap — compactions
+    * in this JVM are serialized (`BatchTables`' compaction lock), and the
+    * staging-dir sweep only removes dirs whose horizon is
     * at or below the committed one (a live concurrent run's staging dir
     * has a higher horizon and is left alone). Cross-JVM concurrent
     * compaction of one table is NOT supported.

@@ -302,11 +302,13 @@ object Pipeline {
     * DETERMINISTICALLY on replay (checkpointed offsets, pure rules), so
     * a main-pipeline crash that rewrites batch N's partition rewrites
     * identical content — a follower that already maintained N needs no
-    * action, one that hadn't reads the rewrite; (3) each hook is a
-    * `BatchTables`-style idempotent writer keyed on the store batch id,
+    * action, one that hadn't reads the rewrite; (3) each hook writes
+    * through `BatchTables.writeBatch`, idempotent per store batch id,
     * so a follower crash between hooks and the watermark write re-runs
     * the batch as a rewrite. State freshness trails publish by the
     * polling cadence — the documented trade against the in-batch mode.
+    * The hooks run concurrently on the caller's `spark` and change none
+    * of its settings: each state table declares its own overwrite mode.
     *
     * Compaction contract: `compactBatchPartitions` on the STORE tree
     * must only fold batches at or below THIS watermark (folding above
@@ -422,13 +424,15 @@ object Pipeline {
   }
 
   /** Run the maintenance hooks for one micro-batch — CONCURRENTLY when
-    * there is more than one (each hook is an independent idempotent
-    * writer on its own table; the batch then pays ~the slowest hook, not
-    * their sum, as measured in round 12 — see git history). The hooks run
-    * through `Parallel.all`: a hook failure, fatal errors included, cancels
-    * the siblings' Spark jobs and fails the batch once every hook has
-    * stopped (the replay re-runs ALL hooks — dynamic overwrite makes that a
-    * rewrite), but never while a sibling is still mid-write.
+    * there is more than one (each hook is an independent
+    * `BatchTables.writeBatch` writer on its own table, and no lock or
+    * session setting is shared between them; the batch then pays ~the
+    * slowest hook, not their sum, as measured in round 12 — see git
+    * history). The hooks run through `Parallel.all`: a hook failure,
+    * fatal errors included, cancels the siblings' Spark jobs and fails
+    * the batch once every hook has stopped (the replay re-runs ALL
+    * hooks — dynamic overwrite makes that a rewrite), but never while a
+    * sibling is still mid-write.
     */
   private def runMaintenance(maintenance: Seq[(DataFrame, Long) => Unit],
                              deduped: DataFrame, batchId: Long): Unit =
@@ -447,8 +451,8 @@ object Pipeline {
     * ledger parse per batch (hooks read the batch back from its
     * just-committed store partition — `batchFromStore` — so the sink
     * path never pays a persist and the ledger is never re-parsed),
-    * under the same crash discipline. Each hook must be a
-    * `BatchTables`-style idempotent writer keyed on the batch id
+    * under the same crash discipline. Each hook must write through
+    * `BatchTables.writeBatch`, idempotent per batch id
     * (`Scd.mergeBatchLatest`, `Hll.mergeBatch`,
     * `Metrics.mergeBatchDaily`, ...). For full decoupling — publish
     * latency AND throughput at the bare-pipeline numbers — run the
@@ -492,18 +496,6 @@ object Pipeline {
     val session = spark.newSession()
     session.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     session.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-    // pin dynamic partition-overwrite mode ONCE for the pipeline's own
-    // session: every BatchTables maintenance writer then takes the
-    // lock-free fast path and the hooks below can run CONCURRENTLY (the
-    // store/publish writes are path-based with the per-write option, so
-    // the session mode does not change their semantics). Measured in
-    // round 12 (git history): five hooks serialized cost ~0.8 s each
-    // per batch; concurrent, the batch pays ~the slowest hook. The pin
-    // REGISTERS the session (BatchTables.pinDynamicOverwrite) — only
-    // registered-permanent sessions get the lock-free path, so a
-    // transient slow-path `dynamic` on some other session can never be
-    // mistaken for a pin (the TOCTOU ADVICE r12 flagged).
-    graft.operators.BatchTables.pinDynamicOverwrite(session)
     val reader = session.readStream.format("graft-changelog")
       .option("path", ledgerRoot)
       // small admitted batches still parse on every core

@@ -22,6 +22,31 @@ import org.apache.spark.sql.functions._
   * Usage: ScaleDataGen <srcSfDir> <outDir> <copies>
   */
 object ScaleDataGen {
+  // id offsets stay DENSE (stride = max id + 1): PQ's strided codebook
+  // init validates dense 0-based vec_ids, and dense ids keep id-derived
+  // structure (mod-block tiling, stratified md5 keys) distribution-true
+  private def stride(df: DataFrame, idCol: String): Long =
+    df.agg(max(col(idCol))).head.getLong(0) + 1L
+
+  private def copiesOf(copies: Int)(mk: Int => DataFrame): DataFrame =
+    (0 until copies).map(mk).reduce(_ unionByName _)
+
+  /** `copies` disjoint copies of `src`'s documents table: ids offset by a
+    * dense stride and every word suffixed per copy, so no shingle is shared
+    * across copies and each copy keeps only its own planted near-dups.
+    */
+  def documents(spark: SparkSession, src: String, copies: Int): DataFrame = {
+    val docs = Tables(spark, src, "documents")
+    val docStride = stride(docs, "doc_id")
+    copiesOf(copies) { c =>
+      docs.select(
+        (col("doc_id") + lit(c * docStride)).as("doc_id"),
+        concat_ws(" ", transform(split(col("text"), " ", -1),
+          w => concat(w, lit(s"_$c")))).as("text"),
+        col("lang"), col("source"))
+    }.withColumn("n_chars", length(col("text")).cast("bigint"))
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(src, out, copiesS) = args.take(3)
     val copies = copiesS.toInt
@@ -33,23 +58,8 @@ object ScaleDataGen {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def union(mk: Int => DataFrame): DataFrame =
-      (0 until copies).map(mk).reduce(_ unionByName _)
-    // id offsets stay DENSE (stride = max id + 1): PQ's strided codebook
-    // init validates dense 0-based vec_ids, and dense ids keep id-derived
-    // structure (mod-block tiling, stratified md5 keys) distribution-true
-    def stride(df: DataFrame, idCol: String): Long =
-      df.agg(max(col(idCol))).head.getLong(0) + 1L
-
-    val docs = Tables(spark, src, "documents")
-    val docStride = stride(docs, "doc_id")
-    union { c =>
-      docs.select(
-        (col("doc_id") + lit(c * docStride)).as("doc_id"),
-        concat_ws(" ", transform(split(col("text"), " ", -1),
-          w => concat(w, lit(s"_$c")))).as("text"),
-        col("lang"), col("source"))
-    }.withColumn("n_chars", length(col("text")).cast("bigint"))
+    val union = copiesOf(copies) _
+    documents(spark, src, copies)
       .repartition(32).write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     val emb = Tables(spark, src, "embeddings")

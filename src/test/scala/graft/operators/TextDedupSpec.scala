@@ -501,12 +501,17 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("auto dfCap keeps recall on the 10x sweep corpus (50,000 docs)") {
     // every fixed cap <= 160 measures ZERO pairs there; auto (261) must
-    // recover the planted clusters. Guarded: bench_scale is gitignored.
-    val sf1 = new java.io.File("/root/repo/bench_scale/sf1/documents.parquet")
-    assume(sf1.exists(), "10x sweep corpus not materialized")
-    val docs = graft.Tables(spark, "/root/repo/bench_scale/sf1", "documents")
-    val auto = TextDedup.substringOverlap(docs, "doc_id", "text").count()
-    assert(auto > 0, "auto dfCap lost all substring-overlap pairs at 50,000 docs")
+    // recover the planted clusters. The corpus is ScaleDataGen's 10x copy
+    // of sf0.1's 5,000 documents, written under a temp dir.
+    val dir = java.nio.file.Files.createTempDirectory("dfcap_sweep").toString
+    try {
+      graft.ScaleDataGen.documents(spark, "/root/testdata/sf0.1", 10)
+        .write.parquet(s"$dir/documents.parquet")
+      val docs = graft.Tables(spark, dir, "documents")
+      assert(docs.count() == 50000)
+      val auto = TextDedup.substringOverlap(docs, "doc_id", "text").count()
+      assert(auto > 0, "auto dfCap lost all substring-overlap pairs at 50,000 docs")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("SimHash.autoParams: gate scales keep (13,12), larger corpora widen segments") {

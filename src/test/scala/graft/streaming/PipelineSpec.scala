@@ -257,6 +257,51 @@ class PipelineSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $dailyT")
   }
 
+  test("neither Pipeline.run nor maintainFromStore sets the partition " +
+      "overwrite mode on any session") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    val (st, wm) = (tmp("state"), tmp("wm"))
+    Ledger.writeCrudScenario(ledger)
+    val tables = Seq("graft_pipe_mode_latest", "graft_pipe_mode_daily",
+      "graft_pipe_mode_latest_fw", "graft_pipe_mode_daily_fw")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // set at all, not merely set to its default
+    def modeSet(s: org.apache.spark.sql.SparkSession): Boolean =
+      s.sessionState.conf.getAllConfs.contains(key)
+    val caller = spark.newSession()
+    assert(!modeSet(caller))
+    // the sessions the hooks ran on: the pipeline's own clone and the
+    // follower's caller
+    val hookSessions = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[org.apache.spark.sql.SparkSession]()
+    def hooks(latest: String, daily: String)
+        : Seq[(org.apache.spark.sql.DataFrame, Long) => Unit] = Seq(
+      (b, id) => {
+        hookSessions.add(b.sparkSession)
+        graft.cdc.Scd.mergeBatchLatest(b, Seq("aggregateId"), "timestamp",
+          "eventId", latest, s"$st/$latest", id)
+      },
+      (b, id) => {
+        hookSessions.add(b.sparkSession)
+        graft.cdc.Metrics.mergeBatchDaily(b, to_date(col("timestamp")),
+          col("eventType"), lit(0L), daily, s"$st/$daily", id)
+      })
+    try {
+      Pipeline.run(caller, ledger, root, ckpt,
+        maintenance = hooks(tables(0), tables(1))).awaitTermination(120000)
+      assert(!hookSessions.isEmpty && !hookSessions.contains(caller))
+      assert(caller.table(tables(1)).count() > 0)
+      assert(Pipeline.maintainFromStore(caller, root,
+        hooks(tables(2), tables(3)), wm) >= 1L)
+      assert(hookSessions.contains(caller))
+      assert(caller.table(tables(3)).count() == caller.table(tables(1)).count())
+      hookSessions.forEach(s => assert(!modeSet(s),
+        s"a hook session has $key=${s.conf.getOption(key)}"))
+      assert(!modeSet(caller))
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("drift monitor rides the pipeline: a Quantiles maintenance hook keeps " +
       "the histogram table, and driftFromTable across batch ranges equals the " +
       "one-shot drift — through a crash/replay") {
