@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Fixpoint
 
 /** Enrichment lookup joins (O-19; reference `docs/design.md:669-688`,
   * `docs/system-design.md:216-227`): after a rule fires, attach dimension
@@ -87,34 +88,35 @@ object Enrich {
 
   /** Root paths of the department hierarchy
     * (`departments.parent_department_id`, init-db.sql:30): iterative
-    * self-join fixpoint — no driver-side recursion, so it scales if the
-    * hierarchy ever stops being tiny. Converges as soon as no row still has
-    * an unresolved parent (a 2-level tree costs 2 joins, not `maxDepth`),
-    * with lineage truncated per step so the plan stays flat. Output:
-    * (dept_id, path array root→leaf, depth).
+    * self-join fixpoint run by [[graft.operators.Fixpoint]] — no
+    * driver-side recursion, so it scales if the hierarchy ever stops being
+    * tiny. Each round prepends one ancestor; the witness is the count of
+    * rows whose parent is still unresolved, read from the round's
+    * checkpoint job, and the loop stops when it reaches 0 (a 2-level tree
+    * costs 2 joins, not `maxDepth`). A cyclic hierarchy, or one deeper
+    * than `maxDepth`, fails naming `maxDepth` instead of returning
+    * truncated paths. Output: (dept_id, path array root→leaf, depth).
     */
   def deptPaths(departments: DataFrame, maxDepth: Int = 20): DataFrame = {
     val parents = departments.select(
       col("id").as("_pid"), col("parent_department_id").as("_pparent"))
-    var cur = departments.select(
+    val unresolved = Fixpoint.Witness[Long](count(col("cur_parent")))
+    val start = Fixpoint.checkpoint(departments.select(
       col("id").as("dept_id"),
       col("parent_department_id").as("cur_parent"),
-      array(col("id")).as("path"))
-    var i = 0
-    var converged = cur.filter(col("cur_parent").isNotNull).isEmpty
-    while (!converged && i < maxDepth) {
-      cur = cur
+      array(col("id")).as("path")), unresolved)
+    Fixpoint.iterate("deptPaths", start, unresolved, maxDepth,
+        hint = " — the hierarchy has a cycle or is deeper than " +
+          s"maxDepth = $maxDepth") { r =>
+      r.frame
         .join(broadcast(parents), col("cur_parent") === col("_pid"), "left")
         .select(
           col("dept_id"),
           col("_pparent").as("cur_parent"),
           when(col("_pid").isNotNull, concat(array(col("_pid")), col("path")))
             .otherwise(col("path")).as("path"))
-        .localCheckpoint()
-      converged = cur.filter(col("cur_parent").isNotNull).isEmpty
-      i += 1
-    }
-    cur.select(col("dept_id"), col("path"), size(col("path")).as("depth"))
+    }((_, n) => n == 0)._1
+      .select(col("dept_id"), col("path"), size(col("path")).as("depth"))
   }
 
   /** Pairwise org distance = depth(a) + depth(b) − 2·depth(LCA), from the

@@ -65,7 +65,10 @@ private[graft] object BatchTables {
     * carries the overwrite option and that the caller's `path` matches
     * its location: `path` only takes effect at creation, and a caller
     * pointing an existing table name at a DIFFERENT path would silently
-    * keep writing to the old location.
+    * keep writing to the old location. A table the catalog lost (a new JVM
+    * on the in-memory catalog) while `path` still holds its `_batch_id=`
+    * partitions is created empty beside `path` (CTAS refuses a non-empty
+    * location), then pointed at `path` with its partitions recovered.
     */
   private[graft] def ensureBatchTable(
       empty: DataFrame, table: String, path: String,
@@ -79,9 +82,23 @@ private[graft] object BatchTables {
       }
     existing match {
       case None =>
-        configure(empty.write.option("path", path)
-          .option(OverwriteOption, "dynamic").partitionBy("_batch_id"))
-          .saveAsTable(table)
+        val dir = new org.apache.hadoop.fs.Path(path)
+        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+        val lost = fs.exists(dir) && fs.listStatus(dir)
+          .exists(_.getPath.getName.startsWith("_batch_id="))
+        val at = if (!lost) path else new org.apache.hadoop.fs.Path(
+          dir.getParent, s".${dir.getName}-${java.util.UUID.randomUUID}")
+          .toString
+        try {
+          configure(empty.write.option("path", at)
+            .option(OverwriteOption, "dynamic").partitionBy("_batch_id"))
+            .saveAsTable(table)
+          if (lost) {
+            val qualified = fs.makeQualified(dir).toString.replace("'", "\\'")
+            spark.sql(s"ALTER TABLE $table SET LOCATION '$qualified'")
+            spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
+          }
+        } finally if (lost) fs.delete(new org.apache.hadoop.fs.Path(at), true)
       case Some(meta) =>
         requireDynamicOverwrite(meta, table)
         val at = new org.apache.hadoop.fs.Path(meta.location)

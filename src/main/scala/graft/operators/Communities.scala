@@ -55,23 +55,19 @@ object Communities {
     * pins `resume(lpa(G, r1), G, r2) == lpa(G, r1 + r2)` bit-exact).
     */
   private def vote(e: DataFrame, nodes: DataFrame, start: DataFrame,
-                   rounds: Int): DataFrame = {
-    var labels = start
-    for (_ <- 1 to rounds) {
+                   rounds: Int): DataFrame =
+    Fixpoint.repeat(start, rounds) { (labels, _) =>
       val winners = e.join(labels, e("src") === labels("node"))
         .groupBy(e("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("w"))
         .select(col("node"), (-col("w.nl")).as("_new"))
-      labels = nodes
+      nodes
         .join(winners, Seq("node"), "left")
         .join(labels, Seq("node"))
         .select(col("node"), coalesce(col("_new"), col("label")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels.select(col("node"), col("label").as("community"))
-  }
+    }.select(col("node"), col("label").as("community"))
 
   /** Labels after `rounds` synchronous votes over the DIRECTED edge
     * list (src votes into dst). Output: (node BIGINT, community BIGINT)

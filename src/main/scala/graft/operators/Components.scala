@@ -9,33 +9,22 @@ import org.apache.spark.sql.functions._
   * DataFrames keyed by node ids — no driver-side graph, no per-node
   * collect.
   *
-  * Two private drivers run every loop here except the k-core and SCC-trim
-  * peels:
-  *  - [[minFixpoint]], the monotone min-lattice fixpoint behind connected
-  *    components, SCC labels and SSSP. Only the rows that improved last
-  *    round (the delta) are expanded, and improvements accumulate as
-  *    checkpointed layers whose union-min is the running best. Because
-  *    values only decrease, the delta rounds produce the same frame,
-  *    round for round, as synchronous rounds that re-expand every node
-  *    (induction over rounds), so round counts and fixpoints match the
-  *    textbook form and "no improved rows" is the convergence witness.
-  *  - [[frontierBfs]], the layered BFS behind bfsHops, harmonic
-  *    centrality and the Brandes forward phase: each round expands the
-  *    last frontier and anti-joins the result against every visited key.
-  * Both read each round's row count from its checkpoint job
-  * (`IterUtil.checkpointCounted`) and fold their layers into one
-  * checkpointed frame once more than `maxLayers` pile up, so plan width
-  * stays bounded on deep graphs. Every loop frame is localCheckpointed: an
-  * iterative DataFrame loop otherwise grows its lineage each round until
-  * planning, or the plan string alone, dominates. The edge frames are not
-  * pre-partitioned: at bench scale the per-round joins broadcast the
-  * frontier side, so there is no edge-side exchange to save, and
-  * partitioning plus persisting the edges measured slower on every loop.
+  * Every loop here runs on [[Fixpoint]], which
+  * checkpoints each round's frame and reads its witness from that same job:
+  *  - [[Fixpoint.minFixpoint]], the monotone min-lattice fixpoint behind
+  *    connected components, SCC labels and SSSP;
+  *  - [[Fixpoint.frontierBfs]], the layered BFS behind bfsHops, harmonic
+  *    centrality and the Brandes forward phase;
+  *  - [[Fixpoint.iterate]] with a loop's own witness: the k-core peel
+  *    (nodes below k), the SCC trim (kept nodes against the last round)
+  *    and the SCC phases (nodes still undecided);
+  *  - [[Fixpoint.repeat]], the fixed count of the Brandes backward sweep.
+  * The edge frames are not pre-partitioned: at bench scale the per-round
+  * joins broadcast the frontier side, so there is no edge-side exchange to
+  * save, and partitioning plus persisting the edges measured slower on
+  * every loop.
   */
 object Components {
-
-  /** Layers a driver keeps as a lazy union before folding them. */
-  private val maxLayers = 12
 
   /** The (src, dst) frame every operator iterates over: longs, null
     * endpoints and self-loops dropped, duplicates collapsed, materialized
@@ -58,89 +47,18 @@ object Components {
       .filter(col("node").isNotNull)
       .distinct()
 
-  /** Min-lattice fixpoint over (node, v) rows. `init` is the checkpointed
-    * start frame with its row count; it is the first frontier. Each round
-    * `step` maps the frontier to candidate (node, v) rows, the per-node
-    * minimum candidate that beats the running best (or reaches a node
-    * with none) forms the next frontier, and the loop stops when a round
-    * improves nothing or after `maxRounds` rounds. Returns the fixpoint
-    * frame and whether it converged.
-    */
-  private def minFixpoint(init: (DataFrame, Long), maxRounds: Int)
-                         (step: DataFrame => DataFrame)
-      : (DataFrame, Boolean) = {
-    def fold(layers: Seq[DataFrame]): DataFrame =
-      if (layers.size == 1) layers.head
-      else layers.reduce(_ union _)
-        .groupBy(col("node")).agg(min(col("v")).as("v"))
-    var (frontier, n) = init
-    var layers = Vector(frontier)
-    var round = 0
-    while (n > 0 && round < maxRounds) {
-      round += 1
-      if (layers.size > maxLayers)
-        layers = Vector(fold(layers).localCheckpoint(true))
-      val best = fold(layers).withColumnRenamed("v", "cur")
-      val (next, nNext) = IterUtil.checkpointCounted(step(frontier)
-        .groupBy(col("node")).agg(min(col("v")).as("v"))
-        .join(best, Seq("node"), "left")
-        .filter(col("cur").isNull || col("v") < col("cur"))
-        .select(col("node"), col("v")))
-      n = nNext
-      if (n > 0) {
-        layers :+= next
-        frontier = next
-      }
-    }
-    (fold(layers), n == 0)
-  }
-
   /** Min-label propagation: every node ends with the minimum start label
     * that reaches it along `e`'s src → dst edges (dst → src when
     * `reverse`). On a symmetrized edge list that is the minimum label of
     * its connected component.
     */
   private def minLabels(e: DataFrame, reverse: Boolean,
-                        init: (DataFrame, Long),
-                        maxRounds: Int): (DataFrame, Boolean) = {
+                        init: (DataFrame, Long), maxRounds: Int,
+                        op: String, hint: String): DataFrame = {
     val (from, to) = if (reverse) ("dst", "src") else ("src", "dst")
-    minFixpoint(init, maxRounds)(frontier => e
+    Fixpoint.minFixpoint(op, init, maxRounds, hint = hint)(frontier => e
       .join(frontier.withColumnRenamed("node", from), Seq(from))
       .select(col(to).as("node"), col("v")))
-  }
-
-  /** Layered BFS from the checkpointed `seed` layer (with its row count),
-    * which is the first frontier. Each round `step(frontier, round)` maps
-    * the frontier to the round's candidate layer — the `keys` columns
-    * plus its payload — and candidates whose keys were visited before are
-    * dropped. Stops when a round reaches nothing new or after `maxRounds`
-    * rounds. Returns the layers, seed first, and the last layer's row
-    * count (0 when the frontier is exhausted).
-    */
-  private def frontierBfs(seed: (DataFrame, Long), keys: Seq[String],
-                          maxRounds: Int)
-                         (step: (DataFrame, Long) => DataFrame)
-      : (Vector[DataFrame], Long) = {
-    var (frontier, n) = seed
-    var layers = Vector(frontier)
-    // visited keys are kept apart from the layers so they can be folded
-    // without touching the layers' payload columns
-    var visited = Vector(frontier.select(keys.map(col): _*))
-    var round = 0L
-    while (n > 0 && round < maxRounds) {
-      round += 1
-      if (visited.size > maxLayers)
-        visited = Vector(visited.reduce(_ union _).localCheckpoint(true))
-      val (next, nNext) = IterUtil.checkpointCounted(step(frontier, round)
-        .join(visited.reduce(_ union _), keys, "left_anti"))
-      n = nNext
-      if (n > 0) {
-        layers :+= next
-        visited :+= next.select(keys.map(col): _*)
-        frontier = next
-      }
-    }
-    (layers, n)
   }
 
   /** (id, component) for every node of `edges` that has an edge to a
@@ -161,14 +79,13 @@ object Components {
     val e = edgeList(edges.select(col(idA).as("src"), col(idB).as("dst"))
       .union(edges.select(col(idB).as("src"), col(idA).as("dst"))),
       "src", "dst")
-    val (labels, converged) = minLabels(e, reverse = false,
-      IterUtil.checkpointCounted(e.select(col("src").as("node")).distinct()
-        .withColumn("v", col("node"))), maxIter)
     // silent non-convergence would split true clusters and let duplicates
-    // through the keep-one-per-group step — refuse instead
-    require(converged,
-      s"connectedComponents did not converge within $maxIter iterations " +
-        "(graph diameter exceeds maxIter) — raise maxIter")
+    // through the keep-one-per-group step — Fixpoint refuses instead
+    val labels = minLabels(e, reverse = false,
+      Fixpoint.checkpoint(e.select(col("src").as("node")).distinct()
+        .withColumn("v", col("node")), Fixpoint.Rows), maxIter,
+      "connectedComponents",
+      " — the graph diameter exceeds maxIter: raise maxIter")
     labels.select(col("node").as("id"), col("v").as("component"))
   }
 
@@ -325,31 +242,24 @@ object Components {
     // nodes (e is distinct and symmetric), so each round joins only the
     // removed nodes' out-edges and decrements — work proportional to the
     // peel, not the graph. The maintained deg frame IS the degree among
-    // survivors by induction (base: every src node), and the "how many
-    // fall next" count rides each checkpoint job (IterUtil).
-    val remMetric = coalesce(sum(when(col("core_degree") < k, 1L)
-      .otherwise(0L)), lit(0L)).as("nrem")
-    var (deg, obs0) = IterUtil.checkpointObserved(
-      e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("core_degree")),
-      Seq(remMetric))
-    var nRemoved = obs0("nrem").asInstanceOf[Long]
-    while (nRemoved > 0) {
-      val removed = deg.filter(col("core_degree") < k)
+    // survivors by induction (base: every src node), and the witness,
+    // how many fall next, rides each round's checkpoint job. Every
+    // non-final round removes at least one node, so the peel needs no cap.
+    val below = Fixpoint.Witness[Long](coalesce(sum(
+      when(col("core_degree") < k, 1L).otherwise(0L)), lit(0L)))
+    val start = Fixpoint.checkpoint(e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("core_degree")), below)
+    Fixpoint.iterate("kCore", start, below, Int.MaxValue) { r =>
       val dec = e
-        .join(removed.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(r.frame.filter(col("core_degree") < k)
+          .select(col("node").as("src")), Seq("src"), "left_semi")
         .groupBy(col("dst").as("node")).agg(count(lit(1)).as("_dec"))
-      val (degNext, obsN) = IterUtil.checkpointObserved(
-        deg.filter(col("core_degree") >= k)
-          .join(dec, Seq("node"), "left")
-          .select(col("node"),
-            (col("core_degree") - coalesce(col("_dec"), lit(0L)))
-              .as("core_degree")),
-        Seq(remMetric))
-      deg = degNext
-      nRemoved = obsN("nrem").asInstanceOf[Long]
-    }
-    deg
+      r.frame.filter(col("core_degree") >= k)
+        .join(dec, Seq("node"), "left")
+        .select(col("node"),
+          (col("core_degree") - coalesce(col("_dec"), lit(0L)))
+            .as("core_degree"))
+    }((_, n) => n == 0)._1
   }
 
   /** Multi-source BFS hop distance — the link-graph quality feature
@@ -363,8 +273,8 @@ object Components {
     * left join reads them as NULL (the documented unreachable = NULL
     * contract, spec-pinned).
     *
-    * Shape: one [[frontierBfs]] round per hop — a semi-join of the edge
-    * frame against the frontier on src, a distinct and an anti-join
+    * Shape: one [[Fixpoint.frontierBfs]] round per hop — a semi-join of the
+    * edge frame against the frontier on src, a distinct and an anti-join
     * against the visited nodes, all shuffles on node ids. Rounds are
     * integer-exact (hop literals), so the unrolled-SQL oracle
     * replays bit-for-bit with no rounding anywhere; frontier rounds are
@@ -375,17 +285,18 @@ object Components {
               seeds: DataFrame, seedCol: String,
               maxHops: Int = Int.MaxValue): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val seed = IterUtil.checkpointCounted(
-      seedIds(seeds, seedCol).withColumn("hops", lit(0L)))
+    val seed = Fixpoint.checkpoint(
+      seedIds(seeds, seedCol).withColumn("hops", lit(0L)), Fixpoint.Rows)
     val e = edgeList(edges, srcCol, dstCol)
     // a semi-join, not an inner join: the next frontier inherits the edge
     // frame's size estimate instead of a join product, so the planner
     // keeps broadcasting it (the inner join cost q37 ten more jobs)
-    frontierBfs(seed, Seq("node"), maxHops) { (frontier, hop) =>
+    Fixpoint.frontierBfs("bfsHops", seed, Seq("node"), maxHops,
+        strict = false) { (frontier, hop) =>
       e.join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("node")).distinct()
         .withColumn("hops", lit(hop))
-    }._1.reduce(_ union _)
+    }.reduce(_ union _)
   }
 
   /** Single/multi-source WEIGHTED shortest paths (Bellman-Ford with a
@@ -401,9 +312,9 @@ object Components {
     * costing anything: at 100 TB the late rounds touch a vanishing slice
     * of the graph instead of rescanning every edge (textbook
     * Bellman-Ford is O(V·E); this is O(Σ round frontiers)). Each round
-    * is one [[minFixpoint]] round: an equi-join (edges ⋈ frontier on
-    * src), a groupBy-min and one left-join filter against the running
-    * distances — all shuffles keyed on node ids.
+    * is one [[Fixpoint.minFixpoint]] round: an equi-join (edges ⋈
+    * frontier on src), a groupBy-min and one left-join filter against the
+    * running distances — all shuffles keyed on node ids.
     *
     * Exactness: distances are LONG sums of long weights — integer
     * arithmetic commutes, so the result is bit-identical under any
@@ -475,17 +386,18 @@ object Components {
   }
 
   /** Delta-frontier Bellman-Ford from `start` (node, v) upper bounds
-    * ([[minFixpoint]]): every start node is frontier in round 1, after
-    * that only improved nodes relax. Stops silently at `maxRounds`.
+    * ([[Fixpoint.minFixpoint]]): every start node is frontier in round 1,
+    * after that only improved nodes relax. Stops silently at `maxRounds`.
     */
   private def relax(e: DataFrame, start: DataFrame,
                     maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    minFixpoint(IterUtil.checkpointCounted(start), maxRounds)(frontier => e
+    Fixpoint.minFixpoint("sssp", Fixpoint.checkpoint(start, Fixpoint.Rows),
+        maxRounds, strict = false)(frontier => e
       .join(frontier.select(col("node").as("src"), col("v").as("fd")),
         Seq("src"))
       .select(col("dst").as("node"), (col("fd") + col("w")).as("v")))
-      ._1.select(col("node"), col("v").as("dist"))
+      .select(col("node"), col("v").as("dist"))
   }
 
   /** Sampled harmonic centrality (Boldi & Vigna 2014's axiom-clean
@@ -508,10 +420,10 @@ object Components {
     * FROM the exact numerator, one deterministic IEEE division in both
     * engines. `reach` is the exact count of sources that reach the node.
     *
-    * Shape: one [[frontierBfs]] keyed (source, node) — per round one
-    * equi-join on the node id + distinct + anti-join against the visited
-    * pairs. State is |S| × reach pairs — the sampled estimator's whole
-    * point at 100 TB: |S| stays fixed as V grows, and the estimate
+    * Shape: one [[Fixpoint.frontierBfs]] keyed (source, node) — per round
+    * one equi-join on the node id + distinct + anti-join against the
+    * visited pairs. State is |S| × reach pairs — the sampled estimator's
+    * whole point at 100 TB: |S| stays fixed as V grows, and the estimate
     * concentrates (Eppstein-Wang give the Hoeffding bound).
     * Edges follow src→dst; pass a symmetrized list for undirected
     * semantics (the kCore/bfsHops contract).
@@ -527,18 +439,20 @@ object Components {
         .gcd(java.math.BigInteger.valueOf(d)).longValueExact()
       l / g * d
     }
-    val seed = IterUtil.checkpointCounted(seedIds(seeds, seedCol)
-      .select(col("node").as("source"), col("node"), lit(0L).as("d")))
+    val seed = Fixpoint.checkpoint(seedIds(seeds, seedCol)
+      .select(col("node").as("source"), col("node"), lit(0L).as("d")),
+      Fixpoint.Rows)
     // exact-numerator overflow guard: worst case every source at d=1
     require(seed._2 <= Long.MaxValue / math.max(denom, 1L) / 2,
       s"${seed._2} seeds at lcm denominator $denom could overflow h_num — " +
         "sample the seed set (the estimator wants a sample anyway)")
     val e = edgeList(edges, srcCol, dstCol)
-    frontierBfs(seed, Seq("source", "node"), maxRounds) { (frontier, d) =>
+    Fixpoint.frontierBfs("harmonicCentrality", seed, Seq("source", "node"),
+        maxRounds, strict = false) { (frontier, d) =>
       e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("source"), col("dst").as("node")).distinct()
         .withColumn("d", lit(d))
-    }._1.reduce(_ union _).filter(col("d") >= 1L)
+    }.reduce(_ union _).filter(col("d") >= 1L)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("reach"),
         // `div` keeps every term an exact LONG (d divides the lcm), so
@@ -580,23 +494,22 @@ object Components {
   private def brandesLayers(e: DataFrame, seeds: DataFrame, seedCol: String,
                             maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val seed = IterUtil.checkpointCounted(seedIds(seeds, seedCol)
+    val seed = Fixpoint.checkpoint(seedIds(seeds, seedCol)
       .select(col("node").as("source"), col("node"), lit(0L).as("d"),
-        lit(1L).cast("decimal(38,0)").as("sigma")))
-    val (layers, n) = frontierBfs(seed, Seq("source", "node"),
-        maxRounds) { (frontier, d) =>
-      e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("source"), col("dst").as("node"))
-        // exact integer σ sums commute — layout-invariant by construction
-        .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
-        .select(col("source"), col("node"), lit(d).as("d"), col("sigma"))
+        lit(1L).cast("decimal(38,0)").as("sigma")), Fixpoint.Rows)
+    // the DuckDB oracle error()-asserts frontier exhaustion, and so does
+    // Fixpoint: a capped BFS would silently drop every node past maxRounds
+    // from the sigma/reach aggregates
+    val layers = Fixpoint.frontierBfs("brandesForward", seed,
+        Seq("source", "node"), maxRounds,
+        hint = " — the frontier is still live: raise maxRounds") {
+      (frontier, d) =>
+        e.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("source"), col("dst").as("node"))
+          // exact integer σ sums commute — layout-invariant by construction
+          .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
+          .select(col("source"), col("node"), lit(d).as("d"), col("sigma"))
     }
-    // the DuckDB oracle error()-asserts frontier exhaustion; mirror it —
-    // a capped BFS would silently drop every node past maxRounds from the
-    // sigma/reach aggregates
-    require(n == 0,
-      s"brandesForward: frontier still live ($n rows) after $maxRounds " +
-        "rounds (raise maxRounds)")
     layers.reduce(_ unionByName _)
   }
 
@@ -636,12 +549,14 @@ object Components {
       aggregate(sort_array(terms), lit(0.0),
         (acc, x) => acc + x.getField(field))
     val maxD = fwd.agg(max(col("d"))).head().getLong(0)
-    var deltas = fwd.filter(col("d") === maxD)
+    val top = fwd.filter(col("d") === maxD)
       .select(col("source"), col("node"), lit(0.0).as("delta"))
       .localCheckpoint(true)
-    var acc = if (maxD >= 1L) Seq(deltas) else Seq.empty[DataFrame]
-    var l = maxD - 1
-    while (l >= 1) {
+    // round r folds level l = maxD - r from the deltas of level l + 1
+    var levels = Vector.empty[DataFrame]
+    val last = Fixpoint.repeat(top, (maxD - 1L).toInt) { (deltas, r) =>
+      levels :+= deltas
+      val l = maxD - r
       val nextLvl = fwd.filter(col("d") === l + 1)
         .join(deltas, Seq("source", "node"))
         .select(col("source"), col("node").as("dst"),
@@ -659,16 +574,13 @@ object Components {
         .agg(foldBy(collect_list(struct(col("w"), col("c"))), "c")
           .as("delta"))
       // DAG leaves at this level (no successors) carry delta = 0
-      deltas = fwd.filter(col("d") === l).select("source", "node")
+      fwd.filter(col("d") === l).select("source", "node")
         .join(lvlDelta, Seq("source", "node"), "left")
         .select(col("source"), col("node"),
           coalesce(col("delta"), lit(0.0)).as("delta"))
-        .localCheckpoint(true)
-      acc = acc :+ deltas
-      l -= 1
     }
-    val all = acc.reduceOption(_ unionByName _)
-      .getOrElse(deltas.limit(0))
+    val all = if (maxD >= 1L) (levels :+ last).reduce(_ unionByName _)
+      else last.limit(0)
     all.filter(col("node") =!= col("source"))
       .groupBy(col("node"))
       .agg(count(lit(1)).as("reach"),
@@ -712,61 +624,45 @@ object Components {
     require(maxPhases >= 1, s"maxPhases must be >= 1, got $maxPhases")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val e = edgeList(edges, srcCol, dstCol)
-    // every remaining/keep count rides its checkpoint job (IterUtil)
-    var (remaining, nRemaining) = IterUtil.checkpointCounted(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
     var assigned = Seq.empty[DataFrame]
+    // the edges with both endpoints among the remaining nodes
+    def within(rem: DataFrame): DataFrame = e
+      .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+      .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
 
-    // trim fixpoint: peel no-in/no-out nodes (each its own SCC)
-    def trim(): Unit = {
-      var changed = true
-      while (changed && nRemaining > 0) {
-        val er = e
-          .join(remaining.withColumnRenamed("node", "src"), Seq("src"),
-            "left_semi")
-          .join(remaining.withColumnRenamed("node", "dst"), Seq("dst"),
-            "left_semi")
-        val (keep, kc) = IterUtil.checkpointCounted(remaining
+    // trim fixpoint: peel no-in/no-out nodes (each its own SCC) until a
+    // round keeps every remaining node; witness: the kept count
+    def trim(rem: (DataFrame, Long)): (DataFrame, Long) =
+      Fixpoint.iterate("SCC trim", rem, Fixpoint.Rows, Int.MaxValue) { r =>
+        val er = within(r.frame)
+        r.frame
           .join(er.select(col("src").as("node")).distinct(), Seq("node"),
             "left_semi")
           .join(er.select(col("dst").as("node")).distinct(), Seq("node"),
-            "left_semi"))
-        if (kc == nRemaining) changed = false
-        else {
-          assigned :+= remaining.join(keep, Seq("node"), "left_anti")
+            "left_semi")
+      }((prev, n) => n == 0 || prev.contains(n), (prev, next) =>
+        if (next.witness != prev.witness)
+          assigned :+= prev.frame.join(next.frame, Seq("node"), "left_anti")
             .select(col("node"), col("node").as("scc"))
-            .localCheckpoint(true)
-          remaining = keep
-          nRemaining = kc
-        }
-      }
-    }
+            .localCheckpoint(true))
 
-    var phase = 0
-    trim()
-    while (nRemaining > 0 && phase < maxPhases) {
-      phase += 1
-      val er = e
-        .join(remaining.withColumnRenamed("node", "src"), Seq("src"),
-          "left_semi")
-        .join(remaining.withColumnRenamed("node", "dst"), Seq("dst"),
-          "left_semi")
-        .localCheckpoint(true)
+    // one phase decides the nodes whose forward and backward labels agree,
+    // then trims the rest; witness: the nodes still undecided
+    val nodes = Fixpoint.checkpoint(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), Fixpoint.Rows)
+    val (remaining, _) = Fixpoint.loop("SCC", trim(nodes), maxPhases,
+        hint = " — nodes undecided: raise maxPhases") { r =>
+      val er = within(r.frame).localCheckpoint(true)
       // start labels: a projection of the already-checkpointed remaining
       // frame, so neither direction pays a materialization job for them
-      val init = (remaining.select(col("node"), col("node").as("v")),
-        nRemaining)
-      def labels(reverse: Boolean): DataFrame = {
-        val (lab, converged) = minLabels(er, reverse, init, maxRounds)
-        // a capped, non-stationary fixpoint would silently mislabel deep
-        // cycles (partial f/b mins decide only the min node, trim then
-        // shatters the rest into bogus singleton SCCs) — fail loudly
-        require(converged,
-          s"SCC min-label propagation did not reach a fixpoint within " +
-            s"$maxRounds rounds (raise maxRounds)")
-        lab
-      }
+      val init = (r.frame.select(col("node"), col("node").as("v")),
+        r.witness)
+      // a capped, non-stationary fixpoint would silently mislabel deep
+      // cycles (partial f/b mins decide only the min node, trim then
+      // shatters the rest into bogus singleton SCCs) — Fixpoint fails
+      // loudly instead
+      def labels(reverse: Boolean): DataFrame = minLabels(er, reverse, init,
+        maxRounds, "SCC min-label propagation", " — raise maxRounds")
       // the forward and backward fixpoints read the same immutable frames
       // and share nothing else: overlapped, each one's small
       // driver-synchronized rounds back-fill the other's idle cores
@@ -777,15 +673,9 @@ object Components {
         .select(col("node"), col("v").as("scc"))
         .localCheckpoint(true)
       assigned :+= dec
-      val (rem2, nRem2) = IterUtil.checkpointCounted(
-        remaining.join(dec, Seq("node"), "left_anti"))
-      remaining = rem2
-      nRemaining = nRem2
-      trim()
-    }
-    require(nRemaining == 0,
-      s"SCC did not converge within $maxPhases phases — $nRemaining " +
-        "nodes undecided (raise maxPhases)")
+      trim(Fixpoint.checkpoint(r.frame.join(dec, Seq("node"), "left_anti"),
+        Fixpoint.Rows))
+    }((_, n) => n == 0)
     // no edges at all leave nothing assigned: the empty remaining frame
     assigned.reduceOption(_ unionByName _)
       .getOrElse(remaining.select(col("node"), col("node").as("scc")))

@@ -60,36 +60,34 @@ object Hits {
     require(e.limit(1).count() > 0, "hits needs at least one edge")
 
     // exact integer L1 normalization: q = max(S div scale, 1), v div q.
-    // Round-16: materialize the contribution aggregate ONCE with the
-    // 1-row mass S observed from the SAME job (IterUtil) — the old shape
-    // executed the join+groupBy subtree TWICE per half-step (once under
-    // the mass aggregate's action, once again under the checkpoint of
-    // the normalized projection; separate actions share no exchange) AND
-    // paid a second job for the mass. The normalized projection is lazy
-    // over the checkpointed frame — same arithmetic, bit-identical
-    // scores, ONE heavy job per half-step instead of two.
-    def normalized(raw: DataFrame, scoreCol: String): DataFrame = {
-      val (m, o) = IterUtil.checkpointObserved(raw,
-        Seq(coalesce(sum(col(scoreCol)), lit(0L)).as("s")))
-      val s = o("s").asInstanceOf[Long]
-      val q = math.max(s / scale, 1L)
-      m.select(col("node"), expr(s"$scoreCol div ${q}L").as(scoreCol))
-    }
+    // Each half-step's raw aggregate is checkpointed with its mass S read
+    // from the same job, and normalized by a lazy projection over the
+    // checkpoint: one job per half-step, and the join+groupBy subtree runs
+    // once (a separate mass action would rerun it).
+    def mass(c: String) =
+      Fixpoint.Witness[Long](coalesce(sum(col(c)), lit(0L)))
+    def normalized(raw: DataFrame, c: String, s: Long): DataFrame =
+      raw.select(col("node"),
+        expr(s"$c div ${math.max(s / scale, 1L)}L").as(c))
 
-    var h = e.select(col("src").as("node")).distinct()
-      .withColumn("h", lit(scale))
-      .localCheckpoint(true)
+    // the rounds carry the raw hub half-step; each round
+    // normalizes the last one, then runs the authority half-step on its own
+    // checkpoint. The start's witness 0 makes q = 1: start hubs are scale.
     var a: DataFrame = null
-    for (_ <- 1 to iterations) {
-      a = normalized(
+    val (hRaw, hMass) = Fixpoint.iterate("hits",
+        (e.select(col("src").as("node")).distinct()
+          .withColumn("h", lit(scale)).localCheckpoint(true), 0L),
+        mass("h"), iterations, strict = false) { r =>
+      val h = normalized(r.frame, "h", r.witness)
+      val (aRaw, aMass) = Fixpoint.checkpoint(
         e.join(h.select(col("node").as("src"), col("h")), Seq("src"))
           .groupBy(col("dst").as("node")).agg(sum(col("h")).as("auth")),
-        "auth")
-      h = normalized(
-        e.join(a.select(col("node").as("dst"), col("auth")), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(sum(col("auth")).as("h")),
-        "h")
-    }
+        mass("auth"))
+      a = normalized(aRaw, "auth", aMass)
+      e.join(a.select(col("node").as("dst"), col("auth")), Seq("dst"))
+        .groupBy(col("src").as("node")).agg(sum(col("auth")).as("h"))
+    }((_, _) => false)
+    val h = normalized(hRaw, "h", hMass)
     h.join(a, Seq("node"), "full_outer")
       .select(col("node"),
         coalesce(col("h"), lit(0L)).as("hub"),

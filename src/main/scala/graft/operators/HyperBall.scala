@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.SplitMix64.{leading_zeros64, splitmix64}
 
@@ -226,26 +226,23 @@ object HyperBall {
 
       // the (count, Σrho) stationarity witness, computed from the wide
       // frame (Σ over nodes of live-register count / of Σ r_b) — the same
-      // two integers the tall frame's count(1)/sum(rho) produced.
-      // Round-16: the witness rides each round's CHECKPOINT job as
-      // observe() metrics (IterUtil) — the old shape paid a second
-      // driver-synchronized job per round just to re-aggregate the frame
-      // it had just materialized.
-      val sigMetrics = Seq(
+      // two integers the tall frame's count(1)/sum(rho) produced — and
+      // read from each round's checkpoint job
+      val sig = Fixpoint.Witness[Row](struct(
         coalesce(sum((0 until m).map(b =>
           when(col(s"r$b") > 0, 1L).otherwise(0L)).reduce(_ + _)), lit(0L))
           .as("sregs"),
         coalesce(sum((0 until m).map(b =>
-          col(s"r$b").cast("long")).reduce(_ + _)), lit(0L)).as("srho"))
-      def sigOf(o: Map[String, Any]): (Long, Long) =
-        (o("sregs").asInstanceOf[Long], o("srho").asInstanceOf[Long])
-      var (regs, obs0) = IterUtil.checkpointObserved(wide0, sigMetrics)
-      var sig = sigOf(obs0)
-      var out = Seq(readout(tallOf(regs), 0))
-      var t = 0
-      var converged = false
-      while (!converged && t < maxT) {
-        t += 1
+          col(s"r$b").cast("long")).reduce(_ + _)), lit(0L)).as("srho")))
+      val start = Fixpoint.checkpoint(wide0, sig)
+      var out = Seq(readout(tallOf(start._1), 0))
+      // callers consume the FIXPOINT (N(t) complete, persisted resume
+      // frames, signatures); a capped non-stationary frame silently breaks
+      // the resume-equals-one-shot contract — Fixpoint fails loudly
+      // unless the caller explicitly opted into truncation (strict = false)
+      Fixpoint.iterate("HyperBall", start, sig, maxT, strict,
+          " — register max-merge not stationary: raise maxT, or pass " +
+            "strict = false for a truncated run") { r =>
         // round-16: ONE aggregation for contribute+merge instead of two —
         // max is associative/commutative, so the old per-src contribution
         // groupBy before the merge groupBy only added a second Exchange;
@@ -254,27 +251,15 @@ object HyperBall {
         // operations keyed the same way share one exchange). Values are
         // identical (max over the same multiset).
         val contribRows = e
-          .join(regs.withColumnRenamed("node", "dst"), Seq("dst"))
+          .join(r.frame.withColumnRenamed("node", "dst"), Seq("dst"))
           .select(col("src").as("node") +:
             (0 until m).map(b => col(s"r$b")): _*)
-        val (next, obsN) = IterUtil.checkpointObserved(
-          regs.unionByName(contribRows)
-            .groupBy(col("node"))
-            .agg(maxes.head, maxes.tail: _*),
-          sigMetrics)
-        val nsig = sigOf(obsN)
-        converged = nsig == sig
-        sig = nsig
-        regs = next
-        if (!converged) out :+= readout(tallOf(regs), t)
-      }
-      // callers consume the FIXPOINT (N(t) complete, persisted resume
-      // frames, signatures); a capped non-stationary frame silently breaks
-      // the resume-equals-one-shot contract — fail loudly unless the
-      // caller explicitly opted into truncation (strict = false)
-      require(!strict || converged,
-        s"HyperBall: register max-merge not stationary within $maxT " +
-          "rounds (raise maxT, or pass strict = false for a truncated run)")
+        r.frame.unionByName(contribRows)
+          .groupBy(col("node"))
+          .agg(maxes.head, maxes.tail: _*)
+      }((prev, w) => prev.contains(w), (prev, next) =>
+        if (next.witness != prev.witness)
+          out :+= readout(tallOf(next.frame), next.number))
       out.reduce(_ unionByName _)
     }
   }

@@ -68,55 +68,48 @@ object PageRank {
       .join(deg.select(col("src").as("node"), lit(false).as("_dang")),
         Seq("node"), "left")
       .withColumn("_dang", coalesce(col("_dang"), lit(true)))
-    // round-16: the node count rides the checkpoint job (IterUtil)
-    val (nodesM, n) = IterUtil.checkpointCounted(nodes)
+    val (nodesM, n) = Fixpoint.checkpoint(nodes, Fixpoint.Rows)
     (eDeg, nodesM, n)
   }
 
   /** The damped rounds, a pure function of the start frame — shared by
-    * the cold start and the warm resume (which is what makes
+    * the cold start, the warm resume (which is what makes
     * resume-after-persist ≡ one-shot provable, not hoped:
     * PageRankSpec pins `resume(pageRank(G,k1), G, k2) == pageRank(G,
-    * k1+k2)` bit-exact).
+    * k1+k2)` bit-exact) and the weighted form, which passes its own
+    * per-edge `contribution` over its edge frame's columns.
     */
-  private def iterate(eDeg: DataFrame, nodes: DataFrame, n: Long,
+  private def iterate(edges: DataFrame, nodes: DataFrame, n: Long,
                       start: DataFrame, iterations: Int, scale: Long,
                       redistributeDangling: Boolean,
-                      baseOf: Column = null): DataFrame = {
-    val s0 = scale / n
+                      baseOf: Column = null,
+                      contribution: Column = expr("pr div deg")): DataFrame = {
     // the teleport term: uniform 15% by default; the personalized form
     // passes its seed-restricted expression (over the nodes frame's
     // columns) instead
-    val base = Option(baseOf).getOrElse(lit(15L * s0 / 100L))
-    // round-16: the dangling mass that round i+1 redistributes is the
-    // mass of round i's OUTPUT — observed on round i's checkpoint job
-    // (IterUtil) instead of a separate 1-row job per round (and the old
-    // first-round aggregate executed the lazy start plan a second time).
-    // Same sums over the same frames — bit-identical shares.
-    val dangMetric = coalesce(sum(when(col("_dang"), col("pr"))), lit(0L))
-      .as("dmass")
-    var pr = start
-    var share = 0L
-    if (redistributeDangling) {
-      val (m0, o0) = IterUtil.checkpointObserved(start, Seq(dangMetric))
-      pr = m0
-      share = o0("dmass").asInstanceOf[Long] / n
-    }
-    for (_ <- 1 to iterations) {
-      val in = eDeg.join(pr, eDeg("src") === pr("node"))
-        .select(eDeg("dst").as("node"), expr("pr div deg").as("c"))
+    val base = Option(baseOf).getOrElse(lit(15L * (scale / n) / 100L))
+    def damped(pr: DataFrame, share: Long): DataFrame = {
+      val in = edges.join(pr, edges("src") === pr("node"))
+        .select(edges("dst").as("node"), contribution.as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("m"))
-      val damped = nodes.join(in, Seq("node"), "left")
+      nodes.join(in, Seq("node"), "left")
         .select(nodes.columns.map(col) :+
           (base +
             expr(s"85 * (coalesce(m, 0L) + ${share}L) div 100")).as("pr"): _*)
-      if (redistributeDangling) {
-        val (m, o) = IterUtil.checkpointObserved(damped, Seq(dangMetric))
-        pr = m
-        share = o("dmass").asInstanceOf[Long] / n
-      } else pr = damped.localCheckpoint(true)
     }
-    pr.select(col("node"), col("pr"))
+    val ranks = if (!redistributeDangling)
+      Fixpoint.repeat(start, iterations)((pr, _) => damped(pr, 0L))
+    else {
+      // the dangling mass that round i+1 redistributes is the mass of
+      // round i's OUTPUT, observed on round i's checkpoint job; the stop
+      // test never fires, so the loop runs exactly `iterations` rounds
+      val dangling = Fixpoint.Witness[Long](
+        coalesce(sum(when(col("_dang"), col("pr"))), lit(0L)))
+      Fixpoint.iterate("pageRank", Fixpoint.checkpoint(start, dangling),
+          dangling, iterations, strict = false)(r =>
+        damped(r.frame, r.witness / n))((_, _) => false)._1
+    }
+    ranks.select(col("node"), col("pr"))
   }
 
   /** Ranks after `iterations` rounds over the DIRECTED edge list.
@@ -260,23 +253,12 @@ object PageRank {
         s"$scale (bound ${(1L << 62) / scale}) — rescale the weights")
     val sw = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val eW = e.join(sw, "src").localCheckpoint(true)
-    // round-16: the node count rides the checkpoint job (IterUtil)
-    val (nodes, n) = IterUtil.checkpointCounted(
+    val (nodes, n) = Fixpoint.checkpoint(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
-        .distinct())
-    val s0 = scale / n
-    var pr = nodes.withColumn("pr", lit(s0))
-    for (_ <- 1 to iterations) {
-      val in = eW.join(pr, eW("src") === pr("node"))
-        .select(eW("dst").as("node"), expr("pr * w div sw").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("m"))
-      pr = nodes.join(in, Seq("node"), "left")
-        .select(col("node"),
-          (lit(15L * s0 / 100L) +
-            expr("85 * coalesce(m, 0L) div 100")).as("pr"))
-        .localCheckpoint(true)
-    }
-    pr
+        .distinct(), Fixpoint.Rows)
+    iterate(eW, nodes, n, nodes.withColumn("pr", lit(scale / n)), iterations,
+      scale, redistributeDangling = false,
+      contribution = expr("pr * w div sw"))
   }
 }

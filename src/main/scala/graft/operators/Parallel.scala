@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.util.concurrent.atomic.AtomicReference
-import org.apache.spark.SparkContext
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import scala.concurrent.{Await, ExecutionContext, Promise}
 import scala.concurrent.duration.Duration
 import scala.util.Try
@@ -13,7 +13,7 @@ private[graft] object Parallel {
     * group, and wait for ALL of them. The first body to fail cancels every
     * other body's job group, its running and its future jobs, so no Spark
     * work outlives the call; that first failure is rethrown once every body
-    * has stopped.
+    * has stopped and the status tracker shows none of their jobs running.
     */
   def all[A](sc: SparkContext)(bodies: Seq[() => A]): Seq[A] = {
     val tag = java.util.UUID.randomUUID.toString
@@ -38,7 +38,17 @@ private[graft] object Parallel {
     }
     val results = futures.map(f => Try(Await.result(f, Duration.Inf)))
     if (results.forall(_.isSuccess)) results.map(_.get)
-    else throw firstFailure.get
+    else {
+      // a cancelled job (an AQE stage in flight) can outlive its body, and
+      // the status tracker sees its end only once the listener bus delivers
+      // it: wait, bounded, until it shows none of this call's jobs running
+      val st = sc.statusTracker
+      def running = groups.exists(st.getJobIdsForGroup(_).exists(id =>
+        st.getJobInfo(id).exists(_.status == JobExecutionStatus.RUNNING)))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (running && System.nanoTime() < deadline) Thread.sleep(10)
+      throw firstFailure.get
+    }
   }
 
   /** [[all]] for two computations of different result types. */

@@ -328,10 +328,7 @@ object Pipeline {
     val done = maintainedWatermark(spark, watermarkDir)
     var n = 0L
     for (bid <- (done + 1) to hi) {
-      val batch = batchFromStore(spark, sinkRoot, bid)
-      batch.persist()
-      try runMaintenance(maintenance, batch, bid)
-      finally batch.unpersist()
+      maintainBatch(spark, sinkRoot, bid, maintenance)
       // watermark AFTER the hooks: a crash in between re-runs the batch
       // as an idempotent rewrite. Temp-file + rename so a torn write
       // never corrupts the watermark.
@@ -423,22 +420,35 @@ object Pipeline {
       .filter(_._1.nonEmpty)
   }
 
-  /** Run the maintenance hooks for one micro-batch — CONCURRENTLY when
-    * there is more than one (each hook is an independent
-    * `BatchTables.writeBatch` writer on its own table, and no lock or
-    * session setting is shared between them; the batch then pays ~the
-    * slowest hook, not their sum, as measured in round 12 — see git
-    * history). The hooks run through `Parallel.all`: a hook failure,
-    * fatal errors included, cancels the siblings' Spark jobs and fails
-    * the batch once every hook has stopped (the replay re-runs ALL
-    * hooks — dynamic overwrite makes that a rewrite), but never while a
-    * sibling is still mid-write.
+  /** Run the maintenance hooks over store batch `batchId`, read back
+    * from the store (`batchFromStore`) and cached for the batch so the
+    * hooks share one scan. Several hooks run CONCURRENTLY (each is an
+    * independent `BatchTables.writeBatch` writer on its own table; the
+    * batch pays ~the slowest hook, not their sum, measured in round 12),
+    * after the cache is built once: a hook started before it existed
+    * would run its own AQE cache-building job. They run through
+    * `Parallel.all`: a hook failure, fatal errors included, cancels the
+    * siblings' Spark jobs and fails the batch once every hook has stopped
+    * (the replay re-runs ALL hooks — dynamic overwrite makes that a
+    * rewrite), never while a sibling is still mid-write.
     */
-  private def runMaintenance(maintenance: Seq[(DataFrame, Long) => Unit],
-                             deduped: DataFrame, batchId: Long): Unit =
-    if (maintenance.size <= 1) maintenance.foreach(f => f(deduped, batchId))
-    else graft.operators.Parallel.all(deduped.sparkSession.sparkContext)(
-      maintenance.map(f => () => f(deduped, batchId)))
+  private def maintainBatch(spark: SparkSession, sinkRoot: String,
+                            batchId: Long,
+                            maintenance: Seq[(DataFrame, Long) => Unit])
+      : Unit = {
+    val batch = batchFromStore(spark, sinkRoot, batchId).persist()
+    try {
+      if (maintenance.size <= 1) maintenance.foreach(f => f(batch, batchId))
+      else {
+        spark.sharedState.cacheManager.lookupCachedData(
+            org.apache.spark.sql.classic.ClassicConversions.castToImpl(batch))
+          .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers
+            .count())
+        graft.operators.Parallel.all(spark.sparkContext)(
+          maintenance.map(f => () => f(batch, batchId)))
+      }
+    } finally batch.unpersist()
+  }
 
   /** Launch the full pipeline as a checkpointed streaming query writing the
     * combined store+publish sink under `sinkRoot`.
@@ -541,17 +551,12 @@ object Pipeline {
           // scan and tax the publish latency (~+0.4 s per 50k-event
           // batch, measured in round 13), while the columnar
           // read-back costs ~0.3 s in the trailing phase and keeps
-          // one ledger parse per batch. Persisted across the N
-          // concurrent hooks so they share one scan. The storeHasData
-          // guard covers the degenerate every-batch-so-far-empty
-          // stream (an all-invalid first batch writes no parquet —
-          // nothing exists to maintain, and the read would fail on
-          // schema inference).
-          val fromStore = batchFromStore(
-            deduped.sparkSession, sinkRoot, batchId)
-          fromStore.persist()
-          try runMaintenance(maintenance, fromStore, batchId)
-          finally fromStore.unpersist()
+          // one ledger parse per batch. The storeHasData guard covers
+          // the degenerate every-batch-so-far-empty stream (an
+          // all-invalid first batch writes no parquet — nothing exists
+          // to maintain, and the read would fail on schema inference).
+          maintainBatch(deduped.sparkSession, sinkRoot, batchId,
+            maintenance)
         }
         ()
       }

@@ -206,6 +206,25 @@ class EnrichSpec extends AnyFunSuite {
     assert(dist((5, 3)) == 4)
   }
 
+  test("dept paths fail loudly, naming maxDepth, on a cyclic hierarchy " +
+      "or one deeper than maxDepth") {
+    import spark.implicits._
+    // 1 is a root; 2 -> 3 -> 2 never resolves
+    val cyclic = Seq((1, None: Option[Int]), (2, Some(3)), (3, Some(2)))
+      .toDF("id", "parent_department_id")
+    // a chain 1 <- 2 <- ... <- 6 needs 5 rounds to reach its root
+    val chain = (1 to 6).map(i => (i, if (i == 1) None else Some(i - 1)))
+      .toDF("id", "parent_department_id")
+    for ((depts, maxDepth) <- Seq((cyclic, 20), (chain, 4))) {
+      val e = intercept[IllegalArgumentException](
+        Enrich.deptPaths(depts, maxDepth).collect())
+      assert(e.getMessage.contains(s"maxDepth = $maxDepth"), e.getMessage)
+    }
+    assert(Enrich.deptPaths(chain, 5).collect()
+      .map(r => r.getInt(0) -> r.getInt(2)).toMap ===
+      (1 to 6).map(i => i -> i).toMap)
+  }
+
   test("PII masking: salary hashed, email partially masked") {
     val df = Fixtures.seedEmployees(spark)
     val masked = Mask(df).collect().head

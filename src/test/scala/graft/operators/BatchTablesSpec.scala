@@ -148,4 +148,40 @@ class BatchTablesSpec extends AnyFunSuite {
       assert(partitions(s, t) == want)
     } finally dropAll(t)
   }
+
+  test("a table the catalog lost is registered over its existing " +
+      "partitions, plain and bucketed: later writes and a replay keep " +
+      "every batch") {
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("bt_lost").toString
+    val plain = "graft_bt_lost_plain"
+    val bucketed = "graft_bt_lost_bucketed"
+    dropAll(plain, bucketed)
+    // the dedup gate's creation: bucketed by (band, bucket), sorted
+    def gate(): Unit = BatchTables.ensureBatchTable(
+      rows(s, 0).withColumn("_batch_id", lit(-1L)).limit(0),
+      bucketed, s"$root/$bucketed",
+      _.bucketBy(4, "band", "bucket").sortBy("bucket"))
+    try {
+      gate()
+      for (t <- Seq(plain, bucketed)) {
+        for (b <- 0L to 1L)
+          BatchTables.writeBatch(rows(s, b), b, t, s"$root/$t")
+        // the catalog forgets the table; its files stay (it is external)
+        s.sql(s"DROP TABLE $t")
+        if (t == bucketed) gate()
+        BatchTables.writeBatch(rows(s, 2), 2L, t, s"$root/$t")
+        assert(partitions(s, t) == Map(0L -> docIds(0), 1L -> docIds(1),
+          2L -> docIds(2)), s"table $t")
+        BatchTables.writeBatch(rows(s, 1, n = 1), 1L, t, s"$root/$t")
+        assert(partitions(s, t) == Map(0L -> docIds(0), 1L -> docIds(1, 1),
+          2L -> docIds(2)), s"table $t")
+      }
+      val meta = s.sessionState.catalog.getTableMetadata(
+        s.sessionState.sqlParser.parseTableIdentifier(bucketed))
+      assert(meta.bucketSpec.map(_.numBuckets).contains(4))
+      // no scratch directory is left beside the tables
+      assert(new java.io.File(root).list().toSet == Set(plain, bucketed))
+    } finally dropAll(plain, bucketed)
+  }
 }

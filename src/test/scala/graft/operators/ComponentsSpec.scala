@@ -46,24 +46,6 @@ class ComponentsSpec extends AnyFunSuite {
       es: Seq[(Option[Long], Option[Long])]): Seq[(Long, Long)] =
     es.collect { case (Some(a), Some(b)) => (a, b) }
 
-  /** Union-find components over `edges`, labelled by the minimum member
-    * id; self-loops add no edge, so a node seen only in one is absent.
-    */
-  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val es = edges.filter { case (a, b) => a != b }
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    // the smaller root wins every union, so each root is its set's min id
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    es.flatMap(e => Seq(e._1, e._2)).distinct.map(id => id -> find(id)).toMap
-  }
-
   test("two clusters and a chain collapse to min-id components") {
     // {1,2,3} via transitive pairs, {10,11}, chain {20..24}
     val got = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L),
@@ -78,14 +60,14 @@ class ComponentsSpec extends AnyFunSuite {
       val n = 60
       val edges = Seq.fill(45)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      assert(cc(edges) == unionFind(edges), s"round $round")
+      assert(cc(edges) == GraphModels.unionFind(edges), s"round $round")
     }
     // the chain needs 33 rounds, past the default maxIter
     for ((tag, es) <- edgeCases) {
       val got = Components.connectedComponents(edgeFrame(es), "s", "d",
           maxIter = 40)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == unionFind(nonNull(es)), tag)
+      assert(got == GraphModels.unionFind(nonNull(es)), tag)
     }
   }
 
@@ -210,22 +192,6 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
-  /** Scalar peel model for [[Components.kCore]]. */
-  private def kCoreRef(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
-    val e = edges.filter(p => p._1 != p._2).distinct
-    val adj = e.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    var nodes = adj.keySet ++ e.map(_._2).toSet
-    var changed = true
-    while (changed && nodes.nonEmpty) {
-      val keep = nodes.filter(n =>
-        (adj.getOrElse(n, Set.empty) & nodes).size >= k)
-      changed = keep != nodes
-      nodes = keep
-    }
-    nodes.map(n => n -> (adj.getOrElse(n, Set.empty) & nodes).size.toLong)
-      .toMap
-  }
-
   test("kCore: cascading peel matches the scalar model; cores nest; " +
       "empty core handled") {
     import spark.implicits._
@@ -238,7 +204,7 @@ class ComponentsSpec extends AnyFunSuite {
     for (k <- 1 to 5) {
       val got = Components.kCore(g.toDF("s", "d"), "s", "d", k)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === kCoreRef(g, k), s"k=$k")
+      assert(got === GraphModels.kCorePeel(g, k), s"k=$k")
     }
     // k=2: the whole pendant path cascades away (3 peel rounds), the
     // clique survives
@@ -254,7 +220,7 @@ class ComponentsSpec extends AnyFunSuite {
       val got = Components.kCore(rg.toDF("s", "d").repartition(parts),
           "s", "d", k)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === kCoreRef(rg, k), s"k=$k parts=$parts")
+      assert(got === GraphModels.kCorePeel(rg, k), s"k=$k parts=$parts")
     }
   }
 
@@ -268,21 +234,7 @@ class ComponentsSpec extends AnyFunSuite {
     def sym(e: Seq[(Long, Long)]) = e ++ e.map(_.swap)
     val g = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (11L, 12L), (12L, 10L)))
-    def scalarBfs(edges: Seq[(Long, Long)], seeds: Set[Long]): Map[Long, Long] = {
-      val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      var dist = seeds.map(_ -> 0L).toMap
-      var frontier = seeds
-      var hop = 0L
-      while (frontier.nonEmpty) {
-        hop += 1
-        val next = frontier.flatMap(n => adj.getOrElse(n, Seq.empty))
-          .filterNot(dist.contains)
-        next.foreach(n => dist += n -> hop)
-        frontier = next
-      }
-      dist
-    }
-    val want = scalarBfs(g, Set(1L, 4L))
+    val want = GraphModels.bfs(g, Set(1L, 4L))
     for (parts <- Seq(1, 5)) {
       val got = Components.bfsHops(g.toDF("s", "d").repartition(parts),
           "s", "d", Seq(1L, 4L).toDF("seed"), "seed")
@@ -310,7 +262,7 @@ class ComponentsSpec extends AnyFunSuite {
     // a pseudo-random graph vs the scalar model, min-over-seeds
     val rnd = (0 until 300).map(i =>
       ((i * 13L) % 60, (i * 29L + 5) % 60)).filter(p => p._1 != p._2)
-    val rwant = scalarBfs(rnd, Set(0L, 17L))
+    val rwant = GraphModels.bfs(rnd, Set(0L, 17L))
     val rgot = Components.bfsHops(rnd.toDF("s", "d"), "s", "d",
         Seq(0L, 17L).toDF("seed"), "seed")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -319,7 +271,7 @@ class ComponentsSpec extends AnyFunSuite {
       val got = Components.bfsHops(edgeFrame(es), "s", "d",
           Seq(1L).toDF("seed"), "seed")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === scalarBfs(nonNull(es), Set(1L)), tag)
+      assert(got === GraphModels.bfs(nonNull(es), Set(1L)), tag)
     }
   }
 
@@ -618,50 +570,6 @@ class ComponentsSpec extends AnyFunSuite {
   test("stronglyConnectedComponents: matches a scalar Tarjan model on " +
       "random directed graphs; layout-invariant; min-id labels") {
     import spark.implicits._
-    // scalar Tarjan (iterative), labels = min node id per SCC
-    def tarjan(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val es = edges.filter(e => e._1 != e._2).distinct
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
-      val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val index = scala.collection.mutable.Map[Long, Int]()
-      val low = scala.collection.mutable.Map[Long, Int]()
-      val onStk = scala.collection.mutable.Set[Long]()
-      val stk = scala.collection.mutable.Stack[Long]()
-      val out = scala.collection.mutable.Map[Long, Long]()
-      var counter = 0
-      def strongconnect(v0: Long): Unit = {
-        // explicit work stack (deep chains would blow the JVM stack)
-        case class Frame(v: Long, var i: Int)
-        val work = scala.collection.mutable.Stack(Frame(v0, 0))
-        index(v0) = counter; low(v0) = counter; counter += 1
-        stk.push(v0); onStk += v0
-        while (work.nonEmpty) {
-          val fr = work.top
-          val succ = adj.getOrElse(fr.v, Seq.empty)
-          if (fr.i < succ.length) {
-            val w = succ(fr.i); fr.i += 1
-            if (!index.contains(w)) {
-              index(w) = counter; low(w) = counter; counter += 1
-              stk.push(w); onStk += w
-              work.push(Frame(w, 0))
-            } else if (onStk(w)) low(fr.v) = math.min(low(fr.v), index(w))
-          } else {
-            work.pop()
-            if (work.nonEmpty)
-              low(work.top.v) = math.min(low(work.top.v), low(fr.v))
-            if (low(fr.v) == index(fr.v)) {
-              var comp = List.empty[Long]
-              var w = 0L
-              do { w = stk.pop(); onStk -= w; comp ::= w } while (w != fr.v)
-              val m = comp.min
-              comp.foreach(n => out(n) = m)
-            }
-          }
-        }
-      }
-      nodes.foreach(v => if (!index.contains(v)) strongconnect(v))
-      out.toMap
-    }
     // 2-cycle + 3-cycle bridged one-way + dangling chain + isolate pair
     val g1 = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 5L),
       (5L, 3L), (5L, 6L), (6L, 7L), (10L, 11L))
@@ -670,7 +578,7 @@ class ComponentsSpec extends AnyFunSuite {
       ((i * 13L) % 40, (i * 29L + 7) % 40)).filter(p => p._1 != p._2)
     for ((g, tag) <- Seq((g1, "structured"), (g2, "random"));
          parts <- Seq(1, 7)) {
-      val want = tarjan(g)
+      val want = GraphModels.tarjan(g)
       val got = Components.stronglyConnectedComponents(
           g.toDF("s", "d").repartition(parts), "s", "d")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -678,7 +586,7 @@ class ComponentsSpec extends AnyFunSuite {
     }
     // the structured graph's condensation: {1,2} and {3,4,5} cycles,
     // 6/7/10/11 trimmed singletons
-    val w1 = tarjan(g1)
+    val w1 = GraphModels.tarjan(g1)
     assert(w1(2L) === 1L && w1(4L) === 3L && w1(5L) === 3L)
     assert(w1(7L) === 7L && w1(10L) === 10L)
     // the chain is pure trim; closed into a cycle it needs 32 label rounds
@@ -687,7 +595,7 @@ class ComponentsSpec extends AnyFunSuite {
     for ((tag, es) <- edgeCases :+ cycle) {
       val got = Components.stronglyConnectedComponents(edgeFrame(es), "s", "d")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === tarjan(nonNull(es)), tag)
+      assert(got === GraphModels.tarjan(nonNull(es)), tag)
     }
   }
 

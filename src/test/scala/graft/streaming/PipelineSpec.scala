@@ -302,6 +302,56 @@ class PipelineSpec extends AnyFunSuite {
     } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("concurrent maintenance hooks start no more Spark jobs than the " +
+      "same hooks run one at a time") {
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    val st = tmp("state")
+    Ledger.writeCrudScenario(ledger)
+    Pipeline.run(spark, ledger, root, ckpt).awaitTermination(120000)
+    val tables = Seq("graft_pipe_jobs_latest_s", "graft_pipe_jobs_daily_s",
+      "graft_pipe_jobs_latest_c", "graft_pipe_jobs_daily_c")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    def hooks(latest: String, daily: String)
+        : Seq[(org.apache.spark.sql.DataFrame, Long) => Unit] = Seq(
+      (b, id) => graft.cdc.Scd.mergeBatchLatest(b, Seq("aggregateId"),
+        "timestamp", "eventId", latest, s"$st/$latest", id),
+      (b, id) => graft.cdc.Metrics.mergeBatchDaily(b,
+        to_date(col("timestamp")), col("eventType"), lit(0L), daily,
+        s"$st/$daily", id))
+    val jobs = new AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(maintenance: Seq[(org.apache.spark.sql.DataFrame, Long) => Unit])
+        : Int = {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.set(0)
+      assert(Pipeline.maintainFromStore(spark, root, maintenance,
+        tmp("wm")) >= 1L)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // three rounds: the first creates the tables, the others rewrite
+      // them; a hook racing the cache build shows in any of them
+      for (round <- 1 to 3) {
+        val serial = hooks(tables(0), tables(1))
+        val oneAtATime = jobsOf(Seq((b, id) => serial.foreach(_(b, id))))
+        val concurrent = jobsOf(hooks(tables(2), tables(3)))
+        assert(concurrent <= oneAtATime, s"round $round: concurrent " +
+          s"hooks ran $concurrent jobs, one at a time $oneAtATime")
+      }
+      assert(spark.table(tables(3)).count() ===
+        spark.table(tables(1)).count())
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("drift monitor rides the pipeline: a Quantiles maintenance hook keeps " +
       "the histogram table, and driftFromTable across batch ranges equals the " +
       "one-shot drift — through a crash/replay") {
