@@ -46,8 +46,8 @@ final case class TransformerRule(
 
   /** The domain-event output as ONE struct column (Schemas.domainEvent
     * shape), so N rules can be evaluated in a single projection over a
-    * single scan (see `Rules.applyAll`). `row`: this rule table's own row
-    * schema.
+    * single scan (see `Rules.applyTables`). `row`: this rule table's own
+    * row schema.
     */
   def outputStruct(row: StructType): Column = struct(
     // Deterministic id = idempotency key (docs/system-design.md:367):
@@ -247,14 +247,6 @@ object Rules {
   def noEvents(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.domainEvent)
 
-  /** Run every enabled rule whose table matches this envelope stream, in a
-    * SINGLE pass (see `explodeEvents`).
-    */
-  def applyAll(envelopes: DataFrame, table: String,
-               rules: Seq[TransformerRule] = all): DataFrame =
-    explodeEvents(envelopes, outputs(
-      rules.filter(r => r.enabled && r.table == table), afterRow(envelopes)))
-
   /** Every table's rules in ONE pass over a multi-table envelope frame.
     * `envelopes` types `before`/`after` as the union of the row schemas in
     * `rows` (`Schemas.union`) and carries the wire's ledger `table` column.
@@ -285,7 +277,7 @@ object Rules {
   /** The array of `rules`' guarded output structs; None without rules
     * (e.g. "positions": captured but no rules).
     */
-  private def outputs(rules: Seq[TransformerRule], row: StructType): Option[Column] =
+  private[cdc] def outputs(rules: Seq[TransformerRule], row: StructType): Option[Column] =
     if (rules.isEmpty) None
     else Some(array(rules.map(r => when(r.fires, r.outputStruct(row))): _*))
 
@@ -305,19 +297,11 @@ object Rules {
     * the codegen'd Generate + Filter form (round 4 stage bisection, see
     * git history).
     */
-  private def explodeEvents(envelopes: DataFrame,
-                            outputs: Option[Column]): DataFrame =
+  private[cdc] def explodeEvents(envelopes: DataFrame,
+                                 outputs: Option[Column]): DataFrame =
     outputs.fold(noEvents(envelopes.sparkSession))(o =>
       envelopes
         .select(explode(o).as("_e"))
         .filter(col("_e").isNotNull)
         .select(col("_e.*")))
-
-  /** Multi-table entry: map of table -> envelope DataFrame (each with that
-    * table's before/after schema) → single unioned domain-event stream.
-    */
-  def applyAll(byTable: Map[String, DataFrame]): DataFrame =
-    byTable.collect {
-      case (t, df) if all.exists(r => r.enabled && r.table == t) => applyAll(df, t)
-    }.reduceLeft(_.unionByName(_))
 }

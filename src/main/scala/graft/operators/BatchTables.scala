@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared machinery for `_batch_id`-partitioned catalog tables — the
   * incremental-state discipline the streaming dedup gate established
@@ -58,23 +61,22 @@ private[graft] object BatchTables {
         "'dynamic'): an overwrite insert would truncate every other " +
         "_batch_id partition — re-create it through BatchTables")
 
-  /** Create `table` at `path`, partitioned by `_batch_id` and declaring
-    * dynamic partition overwrite, from an empty frame with the state's
-    * schema (`configure` adds creation-only write options — bucketing,
-    * sort). If the table already exists, one catalog lookup verifies it
-    * carries the overwrite option and that the caller's `path` matches
-    * its location: `path` only takes effect at creation, and a caller
-    * pointing an existing table name at a DIFFERENT path would silently
-    * keep writing to the old location. A table the catalog lost (a new JVM
-    * on the in-memory catalog) while `path` still holds its `_batch_id=`
-    * partitions is created empty beside `path` (CTAS refuses a non-empty
-    * location), then pointed at `path` with its partitions recovered.
+  /** Create `table` at `path` with `schema` (whose last column is
+    * `_batch_id`), partitioned by `_batch_id` and declaring dynamic
+    * partition overwrite, by one catalog DDL that runs no Spark job;
+    * `bucketing` is the creation-only layout (bucket and in-bucket sort
+    * columns). If the table already exists, one catalog lookup verifies it
+    * carries the overwrite option and that the caller's `path` matches its
+    * location: `path` only takes effect at creation, and a caller pointing
+    * an existing table name at a DIFFERENT path would silently keep
+    * writing to the old location. A table the catalog lost (a new JVM on
+    * the in-memory catalog) while `path` still holds its `_batch_id=`
+    * partitions is re-registered over them by the same DDL, its
+    * partitions recovered.
     */
   private[graft] def ensureBatchTable(
-      empty: DataFrame, table: String, path: String,
-      configure: org.apache.spark.sql.DataFrameWriter[Row] =>
-        org.apache.spark.sql.DataFrameWriter[Row] = identity): Unit = {
-    val spark = empty.sparkSession
+      spark: SparkSession, schema: StructType, table: String, path: String,
+      bucketing: Option[BucketSpec] = None): Unit = {
     val existing =
       try Some(metadata(spark, table))
       catch {
@@ -82,28 +84,28 @@ private[graft] object BatchTables {
       }
     existing match {
       case None =>
-        val dir = new org.apache.hadoop.fs.Path(path)
+        val dir = new Path(path)
         val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        val lost = fs.exists(dir) && fs.listStatus(dir)
-          .exists(_.getPath.getName.startsWith("_batch_id="))
-        val at = if (!lost) path else new org.apache.hadoop.fs.Path(
-          dir.getParent, s".${dir.getName}-${java.util.UUID.randomUUID}")
-          .toString
-        try {
-          configure(empty.write.option("path", at)
-            .option(OverwriteOption, "dynamic").partitionBy("_batch_id"))
-            .saveAsTable(table)
-          if (lost) {
-            val qualified = fs.makeQualified(dir).toString.replace("'", "\\'")
-            spark.sql(s"ALTER TABLE $table SET LOCATION '$qualified'")
-            spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-          }
-        } finally if (lost) fs.delete(new org.apache.hadoop.fs.Path(at), true)
+        def names(cs: Seq[String]) =
+          cs.map(c => s"`${c.replace("`", "``")}`").mkString(", ")
+        val layout = bucketing.fold("") { b =>
+          s"CLUSTERED BY (${names(b.bucketColumnNames)}) " +
+            (if (b.sortColumnNames.isEmpty) ""
+             else s"SORTED BY (${names(b.sortColumnNames)}) ") +
+            s"INTO ${b.numBuckets} BUCKETS "
+        }
+        val location = fs.makeQualified(dir).toString.replace("'", "\\'")
+        spark.sql(s"CREATE TABLE $table (${schema.toNullable.toDDL}) " +
+          s"USING parquet PARTITIONED BY (_batch_id) $layout" +
+          s"LOCATION '$location' OPTIONS ('$OverwriteOption'='dynamic')")
+        if (fs.exists(dir) && fs.listStatus(dir)
+            .exists(_.getPath.getName.startsWith("_batch_id=")))
+          spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
       case Some(meta) =>
         requireDynamicOverwrite(meta, table)
-        val at = new org.apache.hadoop.fs.Path(meta.location)
+        val at = new Path(meta.location)
         val fs = at.getFileSystem(spark.sessionState.newHadoopConf())
-        val requested = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
+        val requested = fs.makeQualified(new Path(path))
         require(fs.makeQualified(at) == requested,
           s"table $table already exists at ${fs.makeQualified(at)}, " +
             s"not at the requested path $requested — drop the table or pass its path")
@@ -118,7 +120,7 @@ private[graft] object BatchTables {
   private[graft] def writeBatch(rows: DataFrame, batchId: Long,
                                 table: String, path: String): Unit = {
     val tagged = rows.withColumn("_batch_id", lit(batchId))
-    ensureBatchTable(tagged.limit(0), table, path)
+    ensureBatchTable(rows.sparkSession, tagged.schema, table, path)
     tagged.write.mode("overwrite").insertInto(table)
   }
 
@@ -159,7 +161,6 @@ private[graft] object BatchTables {
       spark: SparkSession, table: String, upToBatchId: Long,
       consolidate: DataFrame => DataFrame): (Int, Int) =
     compactionLock.synchronized {
-      import org.apache.hadoop.fs.Path
       val meta = metadata(spark, table)
       requireDynamicOverwrite(meta, table)
       val root = new Path(meta.location)

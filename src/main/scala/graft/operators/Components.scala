@@ -138,18 +138,10 @@ object Components {
     val spark = edges.sparkSession
     // consumed by endpoints + the mini-graph union: materialized once
     val delta = edgeList(edges, idA, idB)
-    val empty = delta.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("component",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_seq",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_batch_id",
-          org.apache.spark.sql.types.LongType))))
-    BatchTables.ensureBatchTable(empty, table, path)
+    BatchTables.ensureBatchTable(spark, org.apache.spark.sql.types.StructType(
+      Seq("id", "component", "_seq", "_batch_id").map(c =>
+        org.apache.spark.sql.types.StructField(c,
+          org.apache.spark.sql.types.LongType))), table, path)
 
     val membership = componentsFromTable(spark, table)
     val endpoints = delta.select(col("src").as("id"))

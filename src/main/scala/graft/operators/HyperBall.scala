@@ -146,7 +146,8 @@ object HyperBall {
     * frame is) or `maxT`, and emits `readout(regs, t)` per distinct
     * round, t = 0 first.
     *
-    * Round-15 optimization (guide §2.3/§2.4, plan-diffed in plans/r15/):
+    * Round-15 optimization (guide §2.3/§2.4, plan diff summarized in
+    * OPTIMIZATION_r15.md):
     * register state is carried WIDE — one row per node with 2^p register
     * columns r0..r{m-1} (absent register = 0; a live rho is always ≥ 1)
     * instead of one (node, bucket, rho) row per live register. The

@@ -2,28 +2,31 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.{JobExecutionStatus, SparkContext}
-import scala.concurrent.{Await, ExecutionContext, Promise}
+import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration.Duration
 import scala.util.Try
 
 /** Independent Spark computations overlapped on driver threads. */
 private[graft] object Parallel {
 
-  /** Run every body on its own driver thread, each under its own Spark job
-    * group, and wait for ALL of them. The first body to fail cancels every
-    * other body's job group, its running and its future jobs, so no Spark
-    * work outlives the call; that first failure is rethrown once every body
-    * has stopped and the status tracker shows none of their jobs running.
+  /** Run every body at once, each on a driver thread of its own for the
+    * call's duration (a shared pool sized to the core count would queue a
+    * body beyond it behind the others' blocking waits), each under its own
+    * Spark job group, and wait for ALL of them. The first body to fail
+    * cancels every other body's job group, its running and its future jobs,
+    * so no Spark work outlives the call; that first failure is rethrown once
+    * every body has stopped and the status tracker shows none of their jobs
+    * running.
     */
   def all[A](sc: SparkContext)(bodies: Seq[() => A]): Seq[A] = {
     val tag = java.util.UUID.randomUUID.toString
     val groups = bodies.indices.map(i => s"graft-par-$tag-$i")
     val firstFailure = new AtomicReference[Throwable]()
-    // a Promise, not Future.apply, which leaves its future incomplete on a
-    // fatal error: every failure must cancel the siblings and end the wait
+    // a Promise completed in a catch-all: every failure, fatal errors
+    // included, must cancel the siblings and end the wait
     val futures = bodies.zip(groups).map { case (body, group) =>
       val p = Promise[A]()
-      ExecutionContext.global.execute { () =>
+      val th = new Thread(() => {
         sc.setJobGroup(group, "graft: one of several overlapped computations",
           interruptOnCancel = true)
         try p.success(body())
@@ -33,7 +36,9 @@ private[graft] object Parallel {
               groups.filter(_ != group).foreach(sc.cancelJobGroupAndFutureJobs)
             p.failure(t)
         } finally sc.clearJobGroup()
-      }
+      }, group)
+      th.setDaemon(true)
+      th.start()
       p.future
     }
     val results = futures.map(f => Try(Await.result(f, Duration.Inf)))

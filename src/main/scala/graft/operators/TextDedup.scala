@@ -303,11 +303,11 @@ object TextDedup {
                      threshold: Double = 0.8, n: Int = 3,
                      numHashes: Int = 64, bands: Int = 16, rows: Int = 4,
                      maxBucketSize: Int = 1000, buckets: Int = 32): DataFrame = {
-    BatchTables.ensureBatchTable(
-      bandedIndex(batch.limit(0), idCol, textCol, n, numHashes, bands, rows)
-        .withColumn("_batch_id", lit(-1L)),
-      indexTable, indexPath,
-      _.bucketBy(buckets, "band", "bucket").sortBy("bucket"))
+    BatchTables.ensureBatchTable(batch.sparkSession,
+      bandedIndex(batch, idCol, textCol, n, numHashes, bands, rows)
+        .withColumn("_batch_id", lit(-1L)).schema,
+      indexTable, indexPath, Some(org.apache.spark.sql.catalyst.catalog
+        .BucketSpec(buckets, Seq("band", "bucket"), Seq("bucket"))))
     // round-16: the batch's sketch (shingling + MinHash signature — the
     // batch's heaviest expression work) materializes ONCE and is shared
     // by all three consumers; the old shape recomputed it from the raw

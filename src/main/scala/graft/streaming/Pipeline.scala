@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.cdc.{Rules, SchemaHistory, Schemas, Validate}
 
 /** The end-to-end streaming CDC pipeline (O-1 → O-32): change-ledger source
@@ -33,7 +34,7 @@ import graft.cdc.{Rules, SchemaHistory, Schemas, Validate}
   * interpreted `array_compact` rule subtree at ~0.7 ms/row. Round 4
   * removes all three: `minBatchPartitions` splits a small admitted batch
   * into byte ranges so the parse uses every core; the rule engine stays
-  * fully codegen (see `Rules.applyAll`); and the combined tagged-union
+  * fully codegen (see `Rules.applyTables`); and the combined tagged-union
   * sink does one commit for both trees. Small batches (admitted bytes ≤
   * `DirectWriteMaxBytes`, known from the checkpointed offset range) skip
   * the write exchange entirely — the whole batch is TWO stages. Large
@@ -46,11 +47,11 @@ import graft.cdc.{Rules, SchemaHistory, Schemas, Validate}
   * partitions off the `RDDScanExec` wrapper foreachBatch hands the
   * function (its underlying DataSourceRDD), so the table set and byte
   * total cost no Spark job.
-  * Measured via `graft.StreamBenchProbe` (local[32], warm, single-table):
-  * streaming P95 batch latency ~1.3 s at 20k-event admission (KPI <2 s
-  * met with margin), sustained ~19k events/s on small batches, 100k-event
-  * batch ~3.2 s (~32k ev/s); multi-table trickle latency by the `cdc`
-  * workload of `perfbench/`.
+  * Historical round-4 figures (local[32], warm, single-table, from a
+  * streaming probe since retired): P95 batch latency ~1.3 s at 20k-event
+  * admission, ~19k events/s sustained on small batches, a 100k-event
+  * batch in ~3.2 s. Measure today's trickle latency and catch-up drain
+  * with `python3 perfbench/run.py --workload cdc`.
   */
 object Pipeline {
 
@@ -245,18 +246,25 @@ object Pipeline {
   }
 
   /** One store batch read back as the domain-event frame the maintenance
-    * hooks contract on (the bookkeeping columns dropped): `_batch_id`
-    * prunes to exactly the batch's partitions, and the read is the
-    * columnar mirror of the deduplicated frame the sink just wrote —
-    * the batch is replanned deterministically on replay, so the
-    * read-back IS the batch.
+    * hooks contract on: only the batch's own partition dirs
+    * (`_batch_id=<id>` under every `_pkey`), read with the supplied
+    * `schema` (the domain-event columns; the bookkeeping ones are never
+    * read), so the read costs neither a listing of the store tree nor a
+    * schema-inference job. The read is the columnar mirror of the
+    * deduplicated frame the sink wrote — the batch is replanned
+    * deterministically on replay, so the read-back IS the batch. A batch
+    * that stored no events reads as an empty frame.
     */
-  private[streaming] def batchFromStore(spark: SparkSession,
-                                        sinkRoot: String,
-                                        batchId: Long): DataFrame =
-    spark.read.parquet(storeDir(sinkRoot))
-      .filter(col("_batch_id") === batchId)
-      .drop("_batch_id", "_pkey", "event_month")
+  private[streaming] def batchFromStore(spark: SparkSession, sinkRoot: String,
+                                        batchId: Long,
+                                        schema: StructType): DataFrame = {
+    val dirs = new Path(storeDir(sinkRoot), s"_pkey=*/_batch_id=$batchId")
+    val fs = dirs.getFileSystem(spark.sessionState.newHadoopConf())
+    Option(fs.globStatus(dirs)).toSeq.flatten.map(_.getPath.toString) match {
+      case Seq() => spark.createDataFrame(java.util.List.of[Row](), schema)
+      case found => spark.read.schema(schema).parquet(found: _*)
+    }
+  }
 
   /** Whether the store tree holds any data file — false only while every
     * batch so far stored zero events (then there is nothing to maintain
@@ -326,9 +334,15 @@ object Pipeline {
     if (!storeHasData(spark, sinkRoot)) return 0L
     val hi = published.max
     val done = maintainedWatermark(spark, watermarkDir)
+    if (done >= hi) return 0L
+    // the store's schema, inferred once per pass: each batch then reads
+    // only its own partition dirs, whatever the store's age
+    val schema = readEventStore(spark, storeDir(sinkRoot))
+      .drop("event_month").schema
     var n = 0L
     for (bid <- (done + 1) to hi) {
-      maintainBatch(spark, sinkRoot, bid, maintenance)
+      maintainBatch(batchFromStore(spark, sinkRoot, bid, schema), bid,
+        maintenance)
       // watermark AFTER the hooks: a crash in between re-runs the batch
       // as an idempotent rewrite. Temp-file + rename so a torn write
       // never corrupts the watermark.
@@ -420,35 +434,22 @@ object Pipeline {
       .filter(_._1.nonEmpty)
   }
 
-  /** Run the maintenance hooks over store batch `batchId`, read back
-    * from the store (`batchFromStore`) and cached for the batch so the
-    * hooks share one scan. Several hooks run CONCURRENTLY (each is an
-    * independent `BatchTables.writeBatch` writer on its own table; the
-    * batch pays ~the slowest hook, not their sum, measured in round 12),
-    * after the cache is built once: a hook started before it existed
-    * would run its own AQE cache-building job. They run through
-    * `Parallel.all`: a hook failure, fatal errors included, cancels the
-    * siblings' Spark jobs and fails the batch once every hook has stopped
-    * (the replay re-runs ALL hooks — dynamic overwrite makes that a
-    * rewrite), never while a sibling is still mid-write.
+  /** Run the maintenance hooks over one store batch. Several hooks all
+    * start at once (each is an independent `BatchTables.writeBatch`
+    * writer on its own table, and each scans the batch's store files for
+    * the columns it needs; the batch pays ~the slowest hook, not their
+    * sum, measured in round 12). They run through `Parallel.all`: a hook
+    * failure, fatal errors included, cancels the siblings' Spark jobs and
+    * fails the batch once every hook has stopped (the replay re-runs ALL
+    * hooks — dynamic overwrite makes that a rewrite), never while a
+    * sibling is still mid-write.
     */
-  private def maintainBatch(spark: SparkSession, sinkRoot: String,
-                            batchId: Long,
+  private def maintainBatch(batch: DataFrame, batchId: Long,
                             maintenance: Seq[(DataFrame, Long) => Unit])
-      : Unit = {
-    val batch = batchFromStore(spark, sinkRoot, batchId).persist()
-    try {
-      if (maintenance.size <= 1) maintenance.foreach(f => f(batch, batchId))
-      else {
-        spark.sharedState.cacheManager.lookupCachedData(
-            org.apache.spark.sql.classic.ClassicConversions.castToImpl(batch))
-          .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers
-            .count())
-        graft.operators.Parallel.all(spark.sparkContext)(
-          maintenance.map(f => () => f(batch, batchId)))
-      }
-    } finally batch.unpersist()
-  }
+      : Unit =
+    if (maintenance.size <= 1) maintenance.foreach(f => f(batch, batchId))
+    else graft.operators.Parallel.all(batch.sparkSession.sparkContext)(
+      maintenance.map(f => () => f(batch, batchId)))
 
   /** Launch the full pipeline as a checkpointed streaming query writing the
     * combined store+publish sink under `sinkRoot`.
@@ -458,11 +459,12 @@ object Pipeline {
     * batch's domain events, AFTER the store+publish commit — the
     * one-stream-maintains-everything shape: the event store AND its
     * sketches/state/profile/metrics tables advance together off ONE
-    * ledger parse per batch (hooks read the batch back from its
-    * just-committed store partition — `batchFromStore` — so the sink
-    * path never pays a persist and the ledger is never re-parsed),
-    * under the same crash discipline. Each hook must write through
-    * `BatchTables.writeBatch`, idempotent per batch id
+    * ledger parse per batch, under the same crash discipline. The hooks
+    * read the batch's own just-committed store files (`batchFromStore`)
+    * with the schema of the frame the sink wrote: the sink path never
+    * pays a persist, the ledger is never re-parsed, and the read-back
+    * runs no Spark job before the hooks start — all at once. Each hook
+    * must write through `BatchTables.writeBatch`, idempotent per batch id
     * (`Scd.mergeBatchLatest`, `Hll.mergeBatch`,
     * `Metrics.mergeBatchDaily`, ...). For full decoupling — publish
     * latency AND throughput at the bare-pipeline numbers — run the
@@ -549,14 +551,14 @@ object Pipeline {
           // just committed, not from a persist of the upstream plan:
           // a persist would materialize its cache inside the sink
           // scan and tax the publish latency (~+0.4 s per 50k-event
-          // batch, measured in round 13), while the columnar
-          // read-back costs ~0.3 s in the trailing phase and keeps
-          // one ledger parse per batch. The storeHasData guard covers
-          // the degenerate every-batch-so-far-empty stream (an
-          // all-invalid first batch writes no parquet — nothing exists
-          // to maintain, and the read would fail on schema inference).
-          maintainBatch(deduped.sparkSession, sinkRoot, batchId,
-            maintenance)
+          // batch, measured in round 13). The read-back takes the
+          // schema of the frame the sink wrote, so the hooks start
+          // right after the marker, with no Spark job of its own, and
+          // the ledger is parsed once per batch. The storeHasData
+          // guard keeps the degenerate every-batch-so-far-empty stream
+          // (an all-invalid first batch writes no parquet) hook-free.
+          maintainBatch(batchFromStore(deduped.sparkSession, sinkRoot,
+            batchId, deduped.schema), batchId, maintenance)
         }
         ()
       }

@@ -10,7 +10,7 @@ class MetricsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("observe() counters ride the job and surface via listener (O-22)") {
-    val events = Rules.applyAll(Fixtures.crudScenario(spark))
+    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
     @volatile var observed: Map[String, Any] = Map.empty
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
@@ -50,7 +50,7 @@ class MetricsSpec extends AnyFunSuite {
 
   test("daily volumes materialized view (O-24)") {
     import spark.implicits._
-    val events = Rules.applyAll(Fixtures.crudScenario(spark))
+    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
     val vols = Metrics.dailyVolumes(events)
       .collect().map(r => r.getAs[String]("eventCategory") -> r.getAs[Long]("n")).toMap
     // crud scenario: employee (Hired + DataUpdated), compensation

@@ -35,7 +35,7 @@ class ValidateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("valid events pass, broken events go to dead-letter with reason") {
-    val good = Rules.applyAll(Fixtures.crudScenario(spark))
+    val good = TestRules.applyAll(Fixtures.crudScenario(spark))
     val broken = good.withColumn("aggregateId",
       when(col("eventType") === "EmployeeHired", lit(null).cast("string"))
         .otherwise(col("aggregateId")))
@@ -47,7 +47,7 @@ class ValidateSpec extends AnyFunSuite {
   }
 
   test("unparseable payload is structural dead-letter") {
-    val good = Rules.applyAll(Fixtures.crudScenario(spark))
+    val good = TestRules.applyAll(Fixtures.crudScenario(spark))
     val broken = good.withColumn("payload", lit("{not json"))
     assert(Validate.split(broken).deadLetter.count() == good.count())
   }
@@ -126,7 +126,7 @@ class RuleDispatchSpec extends AnyFunSuite {
       Fixtures.env("positions",
         "c", "null", Fixtures.pos("IC9", "Distinguished", "300000", "400000"),
         Fixtures.T0)))
-    val out = Rules.applyAll(envs, "positions")
+    val out = TestRules.applyAll(envs, "positions")
     assert(out.count() == 0)
     assert(out.schema == Schemas.domainEvent)
   }
@@ -135,7 +135,7 @@ class RuleDispatchSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("envstore").toString
     Fixtures.crudScenario(spark)("employees").write.mode("overwrite").parquet(out)
     val envs = spark.read.parquet(out)
-    val events = Rules.applyAll(envs, "employees")
+    val events = TestRules.applyAll(envs, "employees")
     val scans = events.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -156,7 +156,7 @@ class RuleDispatchSpec extends AnyFunSuite {
       Fixtures.emp(posId = "IC3", salary = "null")
     val envs = Fixtures.parse(spark, "employees", Seq(
       Fixtures.env("employees", "u", nullSalaryBefore, nullSalaryAfter, Fixtures.T0)))
-    val fired = Rules.applyAll(envs, "employees")
+    val fired = TestRules.applyAll(envs, "employees")
       .select("eventType").collect().map(_.getString(0)).toSet
     assert(fired == Set("EmployeeDataUpdated"))
   }
@@ -167,7 +167,7 @@ class EnrichSpec extends AnyFunSuite {
 
   test("promotion enriched with position titles and department name") {
     val envs = Fixtures.parse(spark, "employees", Seq(Fixtures.promotionFiring))
-    val events = Rules.applyAll(envs, "employees")
+    val events = TestRules.applyAll(envs, "employees")
       .filter(col("eventType") === "EmployeePromoted")
     val enriched = Enrich.promotions(events,
       Fixtures.seedPositions(spark), Fixtures.seedDepartments(spark),
@@ -179,7 +179,7 @@ class EnrichSpec extends AnyFunSuite {
 
   test("termination enrichment computes tenure in months") {
     val envs = Fixtures.parse(spark, "employees", Seq(Fixtures.terminationFiring))
-    val events = Rules.applyAll(envs, "employees")
+    val events = TestRules.applyAll(envs, "employees")
       .filter(col("eventType") === "EmployeeTerminated")
     val t = Enrich.terminations(events).collect().head
     // hire 2024-06-10 (fixture default), term 2024-06-10 => 0 months
@@ -238,7 +238,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("event store is month-partitioned and readable with pruning") {
     val out = java.nio.file.Files.createTempDirectory("eventstore").toString
-    val events = Rules.applyAll(Fixtures.crudScenario(spark))
+    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
     Sinks.writeEventStore(events, out)
     val back = spark.read.parquet(out)
     assert(back.count() == events.count())
@@ -249,7 +249,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("retention sweep drops only expired month partitions") {
     val out = java.nio.file.Files.createTempDirectory("retention").toString
-    val events = Rules.applyAll(Fixtures.crudScenario(spark))
+    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
     Sinks.writeEventStore(events, out)
     // 13 months after the fixture month -> partition expired at max_age=12mo
     val nowMs = Fixtures.T0 + 13L * 31 * 24 * 3600 * 1000
@@ -261,7 +261,7 @@ class SinksSpec extends AnyFunSuite {
   test("compaction merges batch partitions exactly; rerun is a no-op; crash converges") {
     import org.apache.spark.sql.functions.{col, date_format}
     val out = java.nio.file.Files.createTempDirectory("compact").toString
-    val events = Rules.applyAll(Fixtures.crudScenario(spark))
+    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
       .withColumn("event_month", date_format(col("timestamp"), "yyyyMM"))
     // three micro-batches land three _batch_id partitions
     (0L to 2L).foreach { b =>

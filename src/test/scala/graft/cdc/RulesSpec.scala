@@ -9,7 +9,7 @@ class RulesSpec extends AnyFunSuite {
 
   private def eventTypes(table: String, rows: Seq[String]): Seq[String] = {
     val envs = Fixtures.parse(spark, table, rows)
-    Rules.applyAll(envs, table).select("eventType")
+    TestRules.applyAll(envs, table).select("eventType")
       .collect().map(_.getString(0)).toSeq.sorted
   }
 
@@ -79,8 +79,8 @@ class RulesSpec extends AnyFunSuite {
 
   test("deterministic eventId: same input, same id across runs") {
     val envs = Fixtures.parse(spark, "employees", Seq(Fixtures.promotionFiring))
-    val id1 = Rules.applyAll(envs, "employees").select("eventId").collect().head.getString(0)
-    val id2 = Rules.applyAll(envs, "employees").select("eventId").collect().head.getString(0)
+    val id1 = TestRules.applyAll(envs, "employees").select("eventId").collect().head.getString(0)
+    val id2 = TestRules.applyAll(envs, "employees").select("eventId").collect().head.getString(0)
     assert(id1 == id2 && id1.nonEmpty)
   }
 
@@ -140,7 +140,7 @@ class LedgerSpec extends AnyFunSuite {
   }
 
   test("full pipeline over the scenario yields the expected domain events") {
-    val domain = Rules.applyAll(Fixtures.crudScenario(spark))
+    val domain = TestRules.applyAll(Fixtures.crudScenario(spark))
     val got = domain.select("eventType").collect().map(_.getString(0)).toSeq.sorted
     assert(got == Seq("EmployeeDataUpdated", "EmployeeHired",
       "LeaveRequested", "SalaryAdjusted"))

@@ -23,7 +23,7 @@ class WindowedRulesSpec extends AnyFunSuite {
       transferEnv(1, 1, 3, Fixtures.T0 + 1 * min),
       transferEnv(2, 1, 3, Fixtures.T0 + 10 * min),
       transferEnv(3, 2, 3, Fixtures.T0 + 20 * min)))
-    val transfers = Rules.applyAll(envs, "employees")
+    val transfers = TestRules.applyAll(envs, "employees")
       .filter(col("eventType") === "EmployeeTransferred")
     assert(transfers.count() == 3)
     val changed = WindowedRules.teamCompositionChanged(transfers).collect()
@@ -42,7 +42,7 @@ class WindowedRulesSpec extends AnyFunSuite {
       transferEnv(1, 1, 3, Fixtures.T0),
       transferEnv(2, 1, 3, Fixtures.T0 + 2 * hour),
       transferEnv(3, 2, 3, Fixtures.T0 + 4 * hour)))
-    val transfers = Rules.applyAll(envs, "employees")
+    val transfers = TestRules.applyAll(envs, "employees")
     assert(WindowedRules.teamCompositionChanged(transfers).count() == 0)
   }
 
@@ -61,7 +61,7 @@ class WindowedRulesSpec extends AnyFunSuite {
       transferEnv(9, 4, 5, Fixtures.T0 + 5 * 3600000L)))
     val wire = spark.readStream.format("graft-changelog")
       .option("path", ledger).load()
-    val events = Rules.applyAll(
+    val events = TestRules.applyAll(
       ChangeStream.deserialize(wire.filter(col("table") === "employees"),
         Schemas.employees), "employees")
     val changed = WindowedRules.teamCompositionChangedStream(events)

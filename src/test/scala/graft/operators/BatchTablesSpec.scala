@@ -6,6 +6,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -53,10 +54,10 @@ class BatchTablesSpec extends AnyFunSuite {
     dropAll(plain, bucketed)
     try {
       // the dedup gate's creation: bucketed by (band, bucket), sorted
-      BatchTables.ensureBatchTable(
-        rows(s, 0).withColumn("_batch_id", lit(-1L)).limit(0),
+      BatchTables.ensureBatchTable(s,
+        rows(s, 0).withColumn("_batch_id", lit(-1L)).schema,
         bucketed, s"$root/$bucketed",
-        _.bucketBy(4, "band", "bucket").sortBy("bucket"))
+        Some(BucketSpec(4, Seq("band", "bucket"), Seq("bucket"))))
       for (t <- Seq(plain, bucketed)) {
         for (b <- 0L to 2L) BatchTables.writeBatch(rows(s, b), b, t, s"$root/$t")
         assert(partitions(s, t) == Map(0L -> docIds(0), 1L -> docIds(1),
@@ -81,8 +82,8 @@ class BatchTablesSpec extends AnyFunSuite {
     val tables = Seq("graft_bt_conc_a", "graft_bt_conc_b")
     dropAll(tables: _*)
     try {
-      tables.foreach(t => BatchTables.ensureBatchTable(
-        rows(s, 0).withColumn("_batch_id", lit(-1L)).limit(0), t, s"$root/$t"))
+      tables.foreach(t => BatchTables.ensureBatchTable(s,
+        rows(s, 0).withColumn("_batch_id", lit(-1L)).schema, t, s"$root/$t"))
       val start = new CountDownLatch(1)
       val done = new CountDownLatch(4)
       val errors = new ConcurrentLinkedQueue[Throwable]()
@@ -132,8 +133,8 @@ class BatchTablesSpec extends AnyFunSuite {
       assert(partitions(s, t) == want)
       val refused = Seq(
         intercept[IllegalArgumentException] {
-          BatchTables.ensureBatchTable(
-            rows(s, 0).withColumn("_batch_id", lit(-1L)).limit(0), t, path)
+          BatchTables.ensureBatchTable(s,
+            rows(s, 0).withColumn("_batch_id", lit(-1L)).schema, t, path)
         },
         intercept[IllegalArgumentException] {
           BatchTables.writeBatch(rows(s, 2), 2L, t, path)
@@ -158,10 +159,10 @@ class BatchTablesSpec extends AnyFunSuite {
     val bucketed = "graft_bt_lost_bucketed"
     dropAll(plain, bucketed)
     // the dedup gate's creation: bucketed by (band, bucket), sorted
-    def gate(): Unit = BatchTables.ensureBatchTable(
-      rows(s, 0).withColumn("_batch_id", lit(-1L)).limit(0),
+    def gate(): Unit = BatchTables.ensureBatchTable(s,
+      rows(s, 0).withColumn("_batch_id", lit(-1L)).schema,
       bucketed, s"$root/$bucketed",
-      _.bucketBy(4, "band", "bucket").sortBy("bucket"))
+      Some(BucketSpec(4, Seq("band", "bucket"), Seq("bucket"))))
     try {
       gate()
       for (t <- Seq(plain, bucketed)) {

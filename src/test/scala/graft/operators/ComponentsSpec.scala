@@ -671,4 +671,47 @@ class ComponentsSpec extends AnyFunSuite {
       assert((ccJobs, ssspJobs) === ((107, 105)))
     } finally sc.removeSparkListener(listener)
   }
+
+  test("job count: betweenness on a seeded 8-node graph, through the " +
+      "forward BFS rounds and the backward sweep, launches the pinned " +
+      "number of Spark jobs, the same on two runs (AQE off)") {
+    // AQE off, as QueryProbeSpec measures: planned up front, the count is
+    // a function of the plan and the rounds alone
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    import s.implicits._
+    val sc = s.sparkContext
+    val group = s"betweenness-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    // the betweenness fixture's graph: the farthest node a seed reaches
+    // is 5 hops away, so the forward BFS runs 5 rounds and the backward
+    // sweep 4
+    val half = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (2L, 5L), (6L, 7L), (7L, 8L))
+    val g = (half ++ half.map(_.swap)).toDF("s", "d")
+    val seeds = Seq(1L, 6L, 8L).toDF("seed")
+    assert(Components.brandesForward(g, "s", "d", seeds, "seed")
+      .agg(org.apache.spark.sql.functions.max("d")).head().getLong(0) === 5L)
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "pinned job count")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val runs = Seq.fill(2)(jobsOf(Components.betweenness(g, "s", "d",
+        seeds, "seed").collect()))
+      assert(runs === Seq(29, 29))
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -33,5 +35,18 @@ class ParallelSpec extends AnyFunSuite {
     assert(e.getMessage === "boom")
     assert(elapsedS < 30, "the sibling must stop once its group is cancelled")
     assert(sc.statusTracker.getActiveJobIds.isEmpty)
+  }
+
+  test("all: more bodies than cores all run at once") {
+    // one body more than the cores: each counts the latch down and waits
+    // for all the others, so a body that queues for a thread behind the
+    // waiting ones starts only once one of them times out
+    val n = Runtime.getRuntime.availableProcessors + 1
+    val started = new CountDownLatch(n)
+    val met = Parallel.all(spark.sparkContext)(Seq.fill(n)(() => {
+      started.countDown()
+      started.await(20, TimeUnit.SECONDS)
+    }))
+    assert(met === Seq.fill(n)(true))
   }
 }

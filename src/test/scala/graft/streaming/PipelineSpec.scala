@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.cdc.{ChangeStream, Dedup, Fixtures, Rules, Schemas}
+import graft.cdc.{ChangeStream, Dedup, Fixtures, Schemas, TestRules}
 import graft.sources.Ledger
 
 class PipelineSpec extends AnyFunSuite {
@@ -352,6 +352,108 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("follower: a pass over 3 batches starts the same number of jobs " +
+      "per batch as a pass over 1 batch") {
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    Ledger.writeCrudScenario(ledger)
+    // one ledger segment per trigger: three batches, each storing events
+    Pipeline.run(spark, ledger, root, ckpt, maxFilesPerTrigger = Some(1))
+      .awaitTermination(120000)
+    val hi = Pipeline.publishedBatchIds(spark, root).max
+    assert(hi === 2L)
+    // the hook reads its batch in one job
+    val hook: Seq[(org.apache.spark.sql.DataFrame, Long) => Unit] =
+      Seq((b, _) => assert(b.select("eventId").collect().nonEmpty))
+    val jobs = new AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOfPass(batches: Int): Int = {
+      val wm = tmp("wm")
+      java.nio.file.Files.write(java.nio.file.Paths.get(wm, "_maintained"),
+        (hi - batches).toString.getBytes("UTF-8"))
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.set(0)
+      assert(Pipeline.maintainFromStore(spark, root, hook, wm) === batches)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // one schema inference per pass, then one job per batch: the hook's
+      val (one, three) = (jobsOfPass(1), jobsOfPass(3))
+      assert((one, three) === ((2, 4)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("an in-batch pass of two hooks on fresh tables creates them with no " +
+      "Spark job: no CTAS, no schema inference, as many jobs as on " +
+      "existing tables (AQE off)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val st = tmp("state")
+    val tables = Seq("graft_pipe_ddl_latest", "graft_pipe_ddl_daily")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val hooks: Seq[(org.apache.spark.sql.DataFrame, Long) => Unit] = Seq(
+      (b, id) => graft.cdc.Scd.mergeBatchLatest(b, Seq("aggregateId"),
+        "timestamp", "eventId", tables(0), s"$st/latest", id),
+      (b, id) => graft.cdc.Metrics.mergeBatchDaily(b,
+        to_date(col("timestamp")), col("eventType"), lit(0L), tables(1),
+        s"$st/daily", id))
+    // per job: its group and its stages' RDDs (a parquet schema inference
+    // runs over a ParallelCollectionRDD, and so does a CTAS of an empty
+    // local frame); per SQL execution: the node names of its plan
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")),
+          e.stageInfos.flatMap(_.rddInfos.map(_.name)).mkString(";")))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          def nodes(p: SparkPlanInfo): Seq[String] =
+            p.nodeName +: p.children.flatMap(nodes)
+          execs.addAll(nodes(s.sparkPlanInfo).asJava)
+        case _ =>
+      }
+    }
+    // one batch (every segment in one AvailableNow trigger) on a fresh sink
+    def pass(): (String, Seq[(String, String)], Seq[String]) = {
+      val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+      Ledger.writeCrudScenario(ledger)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      jobs.clear()
+      execs.clear()
+      val q = Pipeline.run(spark, ledger, root, ckpt, maintenance = hooks)
+      q.awaitTermination(120000)
+      assert(q.exception.isEmpty && q.recentProgress.count(_.numInputRows > 0) == 1)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (q.runId.toString, jobs.asScala.toSeq, execs.asScala.toSeq)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ((runFresh, fresh, freshExecs), (_, existing, _)) =
+        org.apache.spark.TestConf.withContextConf(spark.sparkContext,
+          "spark.sql.adaptive.enabled", "false")((pass(), pass()))
+      val ctas = freshExecs.filter(n => n.contains("SaveAsV1TableCommand") ||
+        n.contains("CreateDataSourceTableAsSelectCommand"))
+      assert(ctas.isEmpty, freshExecs.distinct)
+      val inference = fresh.filter(_._2.contains("ParallelCollectionRDD"))
+      assert(inference.isEmpty, fresh.map(_._2))
+      val sink = fresh.count(_._1 == runFresh)
+      assert(fresh.size === existing.size, s"fresh tables: ${fresh.map(_._2)}" +
+        s"; existing tables: ${existing.map(_._2)}; sink jobs $sink")
+      assert(tables.forall(t => spark.table(t).count() > 0))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("drift monitor rides the pipeline: a Quantiles maintenance hook keeps " +
       "the histogram table, and driftFromTable across batch ranges equals the " +
       "one-shot drift — through a crash/replay") {
@@ -428,7 +530,7 @@ class PipelineSpec extends AnyFunSuite {
     val rows = mutable.ArrayBuffer.empty[String]
     val wire = spark.readStream.format("graft-changelog")
       .option("path", ledger).option("maxFilesPerTrigger", "1").load()
-    val events = Rules.applyAll(
+    val events = TestRules.applyAll(
       ChangeStream.deserialize(wire.filter(col("table") === "employees"),
         Schemas.employees), "employees")
     val deduped = Dedup.withinWatermark(events, Seq("eventId"))
@@ -546,7 +648,7 @@ class PipelineSpec extends AnyFunSuite {
     // tiny data through the directWrite=false branch: hash exchange on
     // (sink, pkey, salt), pinned partition count, same layout + visibility
     val root = tmp("sink")
-    val events = Rules.applyAll(graft.cdc.Fixtures.crudScenario(spark))
+    val events = TestRules.applyAll(graft.cdc.Fixtures.crudScenario(spark))
     Pipeline.storeThenPublish(events, batchId = 7L, root, directWrite = false)
     val stored = Pipeline.readEventStore(spark, Pipeline.storeDir(root))
     assert(stored.count() == events.count())

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.cdc.{ChangeStream, Fixtures, Rules, SchemaHistory, Schemas}
+import graft.cdc.{ChangeStream, Fixtures, Rules, SchemaHistory, Schemas, TestRules}
 import graft.sources.Ledger
 
 /** Differential check of the single-pass multi-table `Pipeline.transform`
@@ -52,7 +52,7 @@ class TransformDiffSpec extends AnyFunSuite {
       val envelopes = histories.get(t).fold(
         ChangeStream.deserialize(byTable, Schemas.tables(t)))(h =>
         SchemaHistory.deserializeEvolved(byTable, h).drop("schema_version"))
-      Rules.applyAll(envelopes, t, naiveRules)
+      TestRules.applyAll(envelopes, t, naiveRules)
     }.reduce(_.unionByName(_))
 
   private def rows(df: DataFrame): Seq[String] =
