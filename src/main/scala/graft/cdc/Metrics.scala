@@ -59,9 +59,8 @@ object Metrics {
     * Per batch: the batch's (day, event_type) partial aggregates land in
     * the batch's own `_batch_id` partition (dynamic overwrite — a
     * replayed batch rewrites exactly its prior rows); reads sum across
-    * partitions. A SUM-merge family like CMS: the compaction crash
-    * window (consolidated partition + un-swept sources both visible)
-    * shows inflated counts until the convergence re-run.
+    * partitions. A SUM-merge family like CMS; its compaction crash
+    * window is the one contract in `BatchTables.compactBatchPartitions`.
     */
   def mergeBatchDaily(batch: DataFrame, day: org.apache.spark.sql.Column,
                       eventType: org.apache.spark.sql.Column,

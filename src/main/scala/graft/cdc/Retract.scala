@@ -100,9 +100,8 @@ object Retract {
   }
 
   /** Fold batches `0..upToBatchId` into one consolidated partition; the
-    * collapse is the SUM merge (crash window between insert and sweep
-    * shows doubled deltas until the convergence re-run — same contract as
-    * `CountMin.compactSketch`).
+    * collapse is the SUM merge (crash window: the one contract in
+    * `BatchTables.compactBatchPartitions`).
     */
   def compactMv(spark: SparkSession, table: String, upToBatchId: Long): (Int, Int) =
     graft.operators.BatchTables.compactBatchPartitions(spark, table,

@@ -157,10 +157,9 @@ object Scd {
     * re-run of batch N dynamic-overwrites exactly its own partition.
     * Like CMS (and unlike the latest-wins max-merge), interval
     * assignment is NOT duplication-idempotent for untouched keys, so
-    * the compaction crash window (consolidated partition + un-swept
-    * sources both visible) can show duplicate version rows until the
-    * convergence re-run; the repair path dedups by (key, ts, tie) and is
-    * immune.
+    * the compaction crash window (the one contract in
+    * `BatchTables.compactBatchPartitions`) can show duplicate version
+    * rows; the repair path dedups by (key, ts, tie) and is immune.
     */
   def mergeBatchHistory(batch: DataFrame, keyCols: Seq[String], tsCol: String,
                         tieCol: String, table: String, path: String,
@@ -210,7 +209,7 @@ object Scd {
       upToBatchId, { df =>
         val w = Window.partitionBy(keyCols.map(col): _*)
           .orderBy(col(tsCol), col(tieCol))
-        df.dropDuplicates(keyCols :+ tsCol :+ tieCol) // crash-leftover copies
+        df.dropDuplicates(keyCols :+ tsCol :+ tieCol) // as the repair read
           .withColumn("valid_from", col(tsCol))
           .withColumn("valid_to", lead(col(tsCol), 1).over(w))
           .select(df.columns.map(col): _*)

@@ -17,10 +17,11 @@ import org.apache.spark.sql.types.StructType
   *    its prior write and table contents are exactly-once, whatever the
   *    session's own overwrite mode and however many writers share it;
   *  - per-batch partitions are periodically folded into one consolidated
-  *    negative partition (`compactBatchPartitions`) so file count does
-  *    not grow with stream age — each state family supplies its own
-  *    `consolidate` collapse (full-row dedup for sketch-row tables,
-  *    register-wise max for HLL, counter-wise sum for CMS).
+  *    negative partition (`compactBatchPartitions`, the one compaction
+  *    engine) so file count does not grow with stream age — each state
+  *    family supplies its own `consolidate` collapse (full-row dedup for
+  *    sketch-row tables, register-wise max for HLL, counter-wise sum for
+  *    CMS).
   */
 private[graft] object BatchTables {
 
@@ -124,24 +125,34 @@ private[graft] object BatchTables {
     tagged.write.mode("overwrite").insertInto(table)
   }
 
-  /** Fold all batches `0 <= id <= upToBatchId` AND every previously
-    * consolidated (negative) partition into ONE partition
-    * `_batch_id = -(upToBatchId+1)`, collapsing rows with `consolidate`
-    * (applied AFTER `_batch_id` is normalized to the target). Every write
-    * goes THROUGH the table (`insertInto`) so creation-time layout
-    * (bucketing) survives compaction. Because prior consolidations are
-    * re-merged, the steady state is exactly one negative partition.
+  /** Fold the committed consolidation and every batch above its horizon
+    * up to `upToBatchId` into ONE partition `_batch_id = -(upToBatchId+1)`,
+    * collapsing rows with `consolidate` (applied AFTER `_batch_id` is
+    * normalized to the target). Every write goes THROUGH the table
+    * (`insertInto`) so creation-time layout (bucketing) survives
+    * compaction. Because the committed consolidation is re-merged, the
+    * steady state is exactly one negative partition.
     *
-    * Crash safety: (1) consolidated rows are staged to a scratch path
-    * outside the table root (partition discovery never sees it); (2) the
-    * staged rows are inserted via dynamic partition overwrite — atomic at
-    * job commit; (3) only then are source partitions deleted. A crash
-    * between (2) and (3) leaves duplicate rows visible until the re-run
-    * (which sees the consolidated partition, skips the rewrite, and
-    * sweeps the sources); what those duplicates DO to a reader depends on
-    * the state's merge algebra — see each caller's contract
-    * (`TextDedup.compactGateIndex`, `Hll.compactRegisters`,
-    * `CountMin.compactSketch`).
+    * The committed horizon is re-derived on every run from the negative
+    * partitions present (`max(-id - 1)`, -1 when there are none). The
+    * consolidation read is the committed partition plus the batches in
+    * `(committedHorizon, upToBatchId]` — nothing else. Rows of a source
+    * batch at or below the horizon already live in the committed
+    * partition, and so do a superseded negative partition's, so such
+    * leftovers are swept without being read.
+    *
+    * Crash safety — the one contract every state family shares:
+    * (1) consolidated rows are staged to a scratch path outside the table
+    * root (partition discovery never sees it); (2) the staged rows are
+    * inserted via dynamic partition overwrite — atomic at job commit, so
+    * the new partition's existence implies it is complete; (3) only then
+    * are the sources and the superseded consolidation deleted. A crash
+    * between (2) and (3) leaves both visible: a reader of a SUM-merge
+    * family (CMS, histograms, metrics, moments, ...) overcounts, one of a
+    * MAX- or set-merge family (HLL registers, the gate index) does not.
+    * The next run at this or any higher horizon sweeps the leftovers
+    * without reading them, so convergence never depends on `consolidate`
+    * absorbing duplicate rows.
     *
     * Only compact batches strictly below the streaming checkpoint's
     * committed horizon: a batch the running query may still replay must
@@ -234,13 +245,15 @@ private[graft] object BatchTables {
           s"${root.getName}_compact_${upToBatchId}_staging")
         // stage 1: consolidated rows to scratch (read is path-based and
         // the write target is a different path — no table self-read
-        // conflict). The read spans ALL prior consolidations and
-        // in-horizon batches; _batch_id is normalized BEFORE the
-        // caller's collapse so crash-leftover copies merge by the
-        // state's own algebra.
+        // conflict). The read is the committed consolidation plus the
+        // batches above its horizon (partition-pruned; with no
+        // consolidation yet, the committed id is 0, inside the range);
+        // _batch_id is normalized BEFORE the caller's collapse.
+        val id = col("_batch_id")
         consolidate(
           spark.read.parquet(root.toString)
-            .filter(col("_batch_id") <= upToBatchId) // partition-pruned
+            .filter(id === -(committedHorizon + 1) ||
+              id.between(committedHorizon + 1, upToBatchId))
             .withColumn("_batch_id", lit(compactedId)))
           .write.mode("overwrite").parquet(staging.toString)
         // stage 2: through the table, so creation-time layout stays valid

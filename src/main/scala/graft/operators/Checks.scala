@@ -248,9 +248,10 @@ object Checks {
   }
 
   /** Fold batches `0..upToBatchId` into one consolidated partition — the
-    * SUM/MAX merge; same crash-window contract as `CountMin.compactSketch`
-    * (duplicates visible between insert and sweep can only OVERCOUNT
-    * violations / totals, never hide one; re-running converges).
+    * SUM/MAX merge; its crash window is the one contract in
+    * `BatchTables.compactBatchPartitions` (duplicates visible between
+    * insert and sweep can only OVERCOUNT violations / totals, never hide
+    * one).
     */
   def compactSuite(spark: org.apache.spark.sql.SparkSession,
                    table: String, upToBatchId: Long): (Int, Int) =

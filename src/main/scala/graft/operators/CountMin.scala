@@ -152,14 +152,14 @@ object CountMin {
     * d·2^widthLog2 rows (32 KB of counters at the defaults) regardless of
     * stream age.
     *
-    * Crash note: in the window between the consolidated insert and the
-    * source sweep, duplicate rows are visible and `sketchFromTable` sums
-    * them — estimates in that window can OVERCOUNT beyond the usual CMS
-    * collision error, but never undercount (the sketch's one-sided
-    * guarantee survives the crash window; re-running the compaction
-    * converges to exact). Contrast `Hll.compactRegisters`, whose
-    * max-merge is idempotent and correct even mid-crash. Only compact
-    * batches strictly below the streaming checkpoint's committed horizon.
+    * Crash note: in the crash window of
+    * `BatchTables.compactBatchPartitions`, duplicate rows are visible and
+    * `sketchFromTable` sums them — estimates in that window can
+    * OVERCOUNT beyond the usual CMS collision error, but never undercount
+    * (the sketch's one-sided guarantee survives the crash window).
+    * Contrast `Hll.compactRegisters`, whose max-merge is idempotent and
+    * correct even mid-crash. Only compact batches strictly below the
+    * streaming checkpoint's committed horizon.
     */
   def compactSketch(spark: org.apache.spark.sql.SparkSession,
                     sketchTable: String, upToBatchId: Long): (Int, Int) =

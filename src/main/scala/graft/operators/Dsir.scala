@@ -143,10 +143,8 @@ object Dsir {
   }
 
   /** Fold batches `0..upToBatchId` into one consolidated partition:
-    * per-bucket (Σcr, Σct). SUM-merge is not duplication-idempotent —
-    * the crash window between the consolidated insert and the source
-    * sweep shows inflated counts until the convergence re-run (the CMS
-    * contract shared by every SUM-merge family).
+    * per-bucket (Σcr, Σct). A SUM-merge family; its crash window is the
+    * one contract in `BatchTables.compactBatchPartitions`.
     */
   def dsirCompactState(spark: org.apache.spark.sql.SparkSession,
                        table: String, upToBatchId: Long): (Int, Int) =

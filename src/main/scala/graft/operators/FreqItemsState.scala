@@ -28,9 +28,8 @@ import graft.functions.FreqItems
   * identity — consolidation folds per-`_src_batch` summaries into one
   * (entries + one metadata row with summed totals and the merged
   * summary's own minimum). Like CMS, the merge is NOT
-  * duplication-idempotent: the crash window between the consolidated
-  * insert and the source sweep shows inflated counts until the
-  * convergence re-run.
+  * duplication-idempotent; its compaction crash window is the one
+  * contract in `BatchTables.compactBatchPartitions`.
   */
 object FreqItemsState {
 

@@ -171,14 +171,13 @@ object Hll {
     * compaction the table holds ≤ groups × 2^p rows for the whole
     * compacted history, the "state independent of cardinality" posture.
     *
-    * Crash note (stronger than the gate index's): because HLL merge is
-    * register-wise MAX — idempotent under row duplication — even the
-    * crash window between the consolidated insert and the source-
-    * partition sweep, where duplicate rows are visible, returns CORRECT
-    * estimates from `estimateFromTable` (the gate index and CMS merely
-    * converge after the re-run; see `CountMin.compactSketch` for the
-    * one-sided contrast). Only compact batches strictly below the
-    * streaming checkpoint's committed horizon.
+    * Crash note: because HLL merge is register-wise MAX — idempotent
+    * under row duplication — even the crash window of
+    * `BatchTables.compactBatchPartitions`, where duplicate rows are
+    * visible, returns CORRECT estimates from `estimateFromTable` (see
+    * `CountMin.compactSketch` for the one-sided SUM contrast). Only
+    * compact batches strictly below the streaming checkpoint's committed
+    * horizon.
     */
   def compactRegisters(spark: org.apache.spark.sql.SparkSession,
                        registersTable: String,

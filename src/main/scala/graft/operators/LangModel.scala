@@ -128,9 +128,8 @@ object LangModel {
 
   /** Fold batches `0..upToBatchId` of a [[lmMergeBatch]] table into one
     * consolidated partition: bigram rows SUM per gram, word rows SUM per
-    * word. SUM-merge is not duplication-idempotent — the crash window
-    * between the consolidated insert and the source sweep shows inflated
-    * counts until the convergence re-run (the CMS contract).
+    * word. A SUM-merge family; its crash window is the one contract in
+    * `BatchTables.compactBatchPartitions`.
     */
   def lmCompactState(spark: SparkSession, table: String,
                      upToBatchId: Long): (Int, Int) =

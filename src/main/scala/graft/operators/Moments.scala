@@ -73,10 +73,9 @@ object Moments {
 
   /** Persist one batch's per-group moment vector into `table` under the
     * [[BatchTables]] discipline. SUM-merge family (like CMS/freq-items):
-    * replay-safe via dynamic overwrite of the batch's own partition; the
-    * crash window between a compaction insert and its source sweep shows
-    * doubled moments until the convergence re-run — same documented
-    * asymmetry as the other sum families.
+    * replay-safe via dynamic overwrite of the batch's own partition; its
+    * compaction crash window is the one contract in
+    * `BatchTables.compactBatchPartitions`.
     */
   def mergeBatch(batch: DataFrame, groupCols: Seq[String], xCol: String,
                  yCol: String, table: String, path: String,

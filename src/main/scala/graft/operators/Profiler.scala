@@ -292,10 +292,9 @@ object Profiler {
 
   /** Fold batches `0..upToBatchId` into one consolidated partition via
     * the level-1 merge algebra. The count/min/max merge is NOT
-    * duplication-idempotent (sums double-count), so like CMS the
-    * crash window between the consolidated insert and the source sweep
-    * shows inflated counts until the convergence re-run; estimates from
-    * the register half are unaffected (max-merge).
+    * duplication-idempotent (sums double-count), so like CMS its crash
+    * window is the one contract in `BatchTables.compactBatchPartitions`;
+    * estimates from the register half are unaffected (max-merge).
     */
   def compactProfile(spark: org.apache.spark.sql.SparkSession,
                      table: String, upToBatchId: Long): (Int, Int) =

@@ -177,11 +177,10 @@ object Quantiles {
     * negative partition by counter-wise sum — steady-state table size is
     * ≤ groups × 64·2^m rows for the whole compacted history.
     *
-    * Crash note: identical to `CountMin.compactSketch` — in the window
-    * between the consolidated insert and the source sweep, duplicate
-    * rows are visible and counts double, shifting quantile estimates
-    * toward whichever buckets duplicated; re-running the compaction
-    * converges to exact. Only compact batches strictly below the
+    * Crash note: a SUM-merge family like `CountMin.compactSketch` —
+    * the crash window of `BatchTables.compactBatchPartitions` doubles
+    * the leftover counts, shifting quantile estimates toward whichever
+    * buckets duplicated. Only compact batches strictly below the
     * streaming checkpoint's committed horizon.
     */
   def compactHistogram(spark: org.apache.spark.sql.SparkSession,

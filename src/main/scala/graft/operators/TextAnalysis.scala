@@ -277,9 +277,8 @@ object TextAnalysis {
 
   /** Fold batches `0..upToBatchId` of a [[bm25MergeBatch]] table into one
     * consolidated partition: per-term df sums, metadata rows sum (n, Σdl).
-    * SUM-merge is not duplication-idempotent — the crash window between
-    * the consolidated insert and the source sweep shows inflated counts
-    * until the convergence re-run (the CMS contract).
+    * A SUM-merge family; its crash window is the one contract in
+    * `BatchTables.compactBatchPartitions`.
     */
   def bm25CompactState(spark: org.apache.spark.sql.SparkSession,
                        table: String, upToBatchId: Long): (Int, Int) =

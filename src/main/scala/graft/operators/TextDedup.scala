@@ -358,71 +358,20 @@ object TextDedup {
       .filter(col("new_id") =!= col("old_id")) // replay belt-and-braces
   }
 
-  /** Small-file compaction for the gate's index table: a long-lived
-    * stream lands one `_batch_id` partition (≤ `buckets` files) per
-    * trigger, so file count grows linearly with stream age. Merges all
-    * batches `0 <= id <= upToBatchId` AND every previously consolidated
-    * (negative) partition into ONE partition `_batch_id = -(upToBatchId+1)`
-    * — the negative-horizon discipline of `cdc.Sinks.compactBatches`, but
-    * every write goes THROUGH the table (`insertInto`) so the consolidated
-    * partition keeps valid bucket files and the exchange-free join
-    * property survives compaction. Because prior consolidations are
-    * re-merged, the steady state is exactly one negative partition —
-    * partition count does NOT grow with compaction-run count (asserted in
-    * `TextDedupSpec`); the cost is that each run rewrites the consolidated
-    * history, so at scale the cadence should be sized to the index, not
-    * the trigger rate.
-    *
-    * Crash safety: (1) consolidated rows are staged to a scratch path
-    * (outside the table root, so partition discovery never sees it);
-    * (2) the staged rows are inserted via dynamic partition overwrite —
-    * atomic at job commit; (3) only then are source partitions (including
-    * superseded negative ones) deleted. A crash between (2) and (3)
-    * leaves duplicate rows visible; re-running with the same or any later
-    * `upToBatchId` converges: the consolidation read spans everything at
-    * or below the horizon and collapses crash duplicates via a FULL-ROW
-    * `dropDuplicates` (after normalizing `_batch_id` to the target
-    * partition) — crash copies are bit-identical, so they collapse, while
-    * a doc_id legitimately re-admitted in a later batch with different
-    * text keeps BOTH versions' sketch rows (deduping on (doc_id, band)
-    * would arbitrarily mix rows across the two versions).
-    *
-    * Only compact batches strictly below the streaming checkpoint's
-    * committed horizon: a batch the running query may still replay must
-    * keep its own partition (a replay dynamic-overwrites it).
-    *
-    * Calling with an `upToBatchId` BELOW an already-committed horizon is a
-    * no-op returning (0, 0): re-consolidating would move rows into a
-    * less-negative partition and silently regress the recorded horizon
-    * (a later replay of batches between the two horizons would then
-    * duplicate). Re-running AT the committed horizon stays the crash
-    *-convergence path (skips consolidation, sweeps leftovers).
-    *
-    * Concurrency: runs for the SAME table must not overlap — compactions
-    * in this JVM are serialized (`BatchTables`' compaction lock), and the
-    * staging-dir sweep only removes dirs whose horizon is
-    * at or below the committed one (a live concurrent run's staging dir
-    * has a higher horizon and is left alone). Cross-JVM concurrent
-    * compaction of one table is NOT supported.
-    *
-    * Catalog note: partition dirs are dropped through the catalog
-    * (`ALTER TABLE … DROP PARTITION`) when the catalog tracks them, and
-    * always deleted from the filesystem + `refreshTable`d — covering both
-    * filesystem-discovered (in-memory catalog) and managed-partition
-    * (Hive `manageFilesourcePartitions`) tables.
-    *
+  /** Small-file compaction for the gate's index table (one `_batch_id`
+    * partition of ≤ `buckets` files per trigger) through
+    * `BatchTables.compactBatchPartitions`, whose contract covers the
+    * horizon, crash safety and concurrency. The collapse is a FULL-ROW
+    * `dropDuplicates`: the index is a set of sketch rows, so identical
+    * rows collapse, while a doc_id legitimately re-admitted in a later
+    * batch with different text keeps BOTH versions' rows (deduping on
+    * (doc_id, band) would arbitrarily mix rows across the two versions).
     * Returns (filesBefore, filesAfter) under the affected partitions.
     */
   def compactGateIndex(spark: org.apache.spark.sql.SparkSession,
                        indexTable: String,
                        upToBatchId: Long): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, indexTable, upToBatchId,
-      // FULL-ROW dropDuplicates (after the helper normalizes _batch_id to
-      // the target partition): crash copies are bit-identical, so they
-      // collapse, while distinct sketch rows for a doc_id legitimately
-      // re-admitted in a later batch with different text all survive
-      // (deduping on (doc_id, band) would arbitrarily mix rows across the
-      // two versions).
       _.dropDuplicates())
 
   /** Exact n-gram-Jaccard near-dup via a PREFIX-FILTERED inverted index

@@ -138,26 +138,6 @@ object Pipeline {
     Rules.applyTables(envelopes, rows)
   }
 
-  /** Idempotent batch write: land in `partitionCols + _batch_id` partitions
-    * with dynamic overwrite — a replay of batch N rewrites exactly batch N's
-    * partitions. Sorted within partitions for the MergeTree-style physical
-    * order (docs/design.md:182-183).
-    */
-  def writeBatchIdempotent(df: DataFrame, path: String, batchId: Long,
-                           partitionCols: Seq[String],
-                           sortCols: Seq[String]): Unit =
-    df.withColumn("_batch_id", lit(batchId))
-      // range-partition on (partition cols ++ sort keys): clusters rows per
-      // output partition dir WITHOUT funnelling a hot partition value (a
-      // single active month!) through one task the way
-      // repartition(partitionCols) would
-      .repartitionByRange((partitionCols ++ sortCols).map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols :+ "_batch_id": _*)
-      .parquet(path)
-
   /** The two sink trees under one root. `=`-style names keep the layout
     * self-describing: reading `storeDir` discovers `_pkey`/`_batch_id` as
     * partition columns, exactly like any other partitioned parquet tree.
@@ -165,6 +145,37 @@ object Pipeline {
   def storeDir(sinkRoot: String): String = s"$sinkRoot/_sink=store"
   def publishDir(sinkRoot: String): String = s"$sinkRoot/_sink=publish"
   private def markerDir(sinkRoot: String) = new Path(sinkRoot, "_published")
+
+  /** Retention sweep (O-7; the reference stream's max_age with
+    * discard=old, stream.json:9-13): drop the store tree's `_pkey=yyyyMM`
+    * month partitions strictly older than `maxAgeMonths` before the month
+    * of `nowMs` (UTC). Purely partition-level — no data read. The publish
+    * tree and the markers are not touched. Returns the dropped directory
+    * names.
+    */
+  def sweepRetention(spark: SparkSession, sinkRoot: String,
+                     maxAgeMonths: Int, nowMs: Long): Seq[String] = {
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMM")
+    val cutoff = java.time.Instant.ofEpochMilli(nowMs)
+      .atZone(java.time.ZoneOffset.UTC).toLocalDate
+      .minusMonths(maxAgeMonths.toLong).withDayOfMonth(1)
+    // Hadoop FileSystem API, not java.io.File: the sweep must work on
+    // whatever scheme the store lives on (HDFS, S3A, local), and the
+    // recursive delete removes the nested `_batch_id=` dirs
+    val root = new Path(storeDir(sinkRoot))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return Seq.empty
+    val dropped = fs.listStatus(root)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("_pkey="))
+      .filter { d =>
+        val month = d.getPath.getName.stripPrefix("_pkey=")
+        scala.util.Try(
+          java.time.YearMonth.parse(month, fmt).atDay(1)
+            .isBefore(cutoff)).getOrElse(false)
+      }
+    dropped.foreach(d => fs.delete(d.getPath, true))
+    dropped.map(_.getPath.getName).toSeq
+  }
 
   /** Store-then-publish for one micro-batch, as ONE write job + ONE commit:
     * each event is tagged into a store row (`_pkey` = event_month, sorted by
@@ -236,9 +247,8 @@ object Pipeline {
       .foreach(old => fs.delete(new Path(dir, old.toString), false))
   }
 
-  /** Read a store tree back without the physical bookkeeping columns.
-    * Accepts either the combined root's store subtree (`storeDir(root)`) or
-    * a standalone `writeBatchIdempotent` tree.
+  /** Read the combined root's store subtree (`storeDir(root)`) back
+    * without the physical bookkeeping columns.
     */
   def readEventStore(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
@@ -318,9 +328,10 @@ object Pipeline {
     * The hooks run concurrently on the caller's `spark` and change none
     * of its settings: each state table declares its own overwrite mode.
     *
-    * Compaction contract: `compactBatchPartitions` on the STORE tree
-    * must only fold batches at or below THIS watermark (folding above
-    * it erases the per-batch identity the hooks key on).
+    * The store tree is not compacted: it is a path tree, not a catalog
+    * table, and `BatchTables.compactBatchPartitions` folds catalog
+    * tables only. Each batch keeps its own `_batch_id` dirs, which is
+    * what this pass reads.
     *
     * Returns the number of store batches maintained in this pass.
     */
@@ -502,10 +513,16 @@ object Pipeline {
     // the whole dedup+explode+sort+write tail serializes into one task
     // (measured +400 ms per 20k-event batch, round 4).
     // parallelismFirst + a small floor keeps ~10 tasks on that stage while
-    // still bounding files/dir (compaction absorbs the rest). The confs
-    // apply to a CLONED session so the caller's session keeps its own
-    // planning behavior — the pipeline never mutates shared state.
+    // still bounding files/dir. The confs apply to a CLONED session so
+    // the caller's session keeps its own planning behavior — the pipeline
+    // never mutates shared state. `newSession()` takes its SQL settings
+    // from the SparkContext conf, not from the caller's session, so the
+    // caller's runtime settings are copied in first and only the two
+    // overrides differ.
     val session = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) session.conf.set(k, v)
+    }
     session.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     session.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
     val reader = session.readStream.format("graft-changelog")

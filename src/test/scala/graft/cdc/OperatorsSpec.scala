@@ -232,82 +232,3 @@ class EnrichSpec extends AnyFunSuite {
     assert(masked.getAs[String]("salary").length == 64) // sha2-256 hex
   }
 }
-
-class SinksSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  test("event store is month-partitioned and readable with pruning") {
-    val out = java.nio.file.Files.createTempDirectory("eventstore").toString
-    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
-    Sinks.writeEventStore(events, out)
-    val back = spark.read.parquet(out)
-    assert(back.count() == events.count())
-    assert(back.columns.contains("event_month"))
-    // partition directory exists for the fixture month
-    assert(new java.io.File(out, "event_month=202406").exists())
-  }
-
-  test("retention sweep drops only expired month partitions") {
-    val out = java.nio.file.Files.createTempDirectory("retention").toString
-    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
-    Sinks.writeEventStore(events, out)
-    // 13 months after the fixture month -> partition expired at max_age=12mo
-    val nowMs = Fixtures.T0 + 13L * 31 * 24 * 3600 * 1000
-    val dropped = Sinks.sweepRetention(out, 12, nowMs)
-    assert(dropped == Seq("event_month=202406"))
-    assert(!new java.io.File(out, "event_month=202406").exists())
-  }
-
-  test("compaction merges batch partitions exactly; rerun is a no-op; crash converges") {
-    import org.apache.spark.sql.functions.{col, date_format}
-    val out = java.nio.file.Files.createTempDirectory("compact").toString
-    val events = TestRules.applyAll(Fixtures.crudScenario(spark))
-      .withColumn("event_month", date_format(col("timestamp"), "yyyyMM"))
-    // three micro-batches land three _batch_id partitions
-    (0L to 2L).foreach { b =>
-      graft.streaming.Pipeline.writeBatchIdempotent(events, out, b,
-        Seq("event_month"), Seq("eventType", "timestamp", "aggregateId"))
-    }
-    val before = graft.streaming.Pipeline.readEventStore(spark, out)
-    val beforeRows = before.count()
-    assert(beforeRows == events.count() * 3)
-
-    // compact batches 0..1, leave batch 2 (still inside the replay horizon)
-    val (nBefore, nAfter) = Sinks.compactBatches(spark, out, "event_month",
-      Seq("eventType", "timestamp", "aggregateId"), upToBatchId = 1L)
-    assert(nBefore > nAfter && nAfter > 0, s"files $nBefore -> $nAfter")
-    val after = graft.streaming.Pipeline.readEventStore(spark, out)
-    assert(after.count() == beforeRows, "compaction must not change row count")
-    assert(new java.io.File(out, "event_month=202406/_batch_id=-2").exists())
-    assert(!new java.io.File(out, "event_month=202406/_batch_id=0").exists())
-    assert(new java.io.File(out, "event_month=202406/_batch_id=2").exists())
-
-    // rerun: nothing left to compact
-    assert(Sinks.compactBatches(spark, out, "event_month",
-      Seq("eventType", "timestamp", "aggregateId"), 1L) == (0, 0))
-
-    // crash simulation: compacted marker committed but a source dir
-    // survived (crash between write and delete) -> rerun deletes it WITHOUT
-    // rewriting, converging to exact rows
-    graft.streaming.Pipeline.writeBatchIdempotent(events, out, 0L,
-      Seq("event_month"), Seq("eventType", "timestamp", "aggregateId"))
-    assert(graft.streaming.Pipeline.readEventStore(spark, out).count() > beforeRows)
-    Sinks.compactBatches(spark, out, "event_month",
-      Seq("eventType", "timestamp", "aggregateId"), 1L)
-    assert(!new java.io.File(out, "event_month=202406/_batch_id=0").exists())
-    assert(graft.streaming.Pipeline.readEventStore(spark, out).count() == beforeRows)
-
-    // ADVANCING-HORIZON crash: a leftover source batch whose rows are
-    // already committed in an earlier negative partition must NOT be
-    // re-read when the next compaction runs with a HIGHER upToBatchId
-    graft.streaming.Pipeline.writeBatchIdempotent(events, out, 1L,
-      Seq("event_month"), Seq("eventType", "timestamp", "aggregateId"))
-    Sinks.compactBatches(spark, out, "event_month",
-      Seq("eventType", "timestamp", "aggregateId"), upToBatchId = 2L)
-    assert(!new java.io.File(out, "event_month=202406/_batch_id=1").exists())
-    assert(!new java.io.File(out, "event_month=202406/_batch_id=2").exists())
-    assert(new java.io.File(out, "event_month=202406/_batch_id=-3").exists())
-    assert(graft.streaming.Pipeline.readEventStore(spark, out).count() == beforeRows,
-      "advancing-horizon rerun must not duplicate already-compacted rows")
-  }
-}

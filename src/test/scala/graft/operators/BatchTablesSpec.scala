@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +14,9 @@ import graft.TestSpark
 /** The `_batch_id` table contract: every table declares dynamic partition
   * overwrite once, at creation, so `BatchTables.writeBatch` rewrites
   * exactly its own batch's partition on a session whose overwrite mode is
-  * never set — and no write reads or changes that session setting.
+  * never set — and no write reads or changes that session setting. A
+  * compaction reads only the committed consolidation and the batches
+  * above its horizon, so crash leftovers never reach a state's merge.
   */
 class BatchTablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -184,5 +186,93 @@ class BatchTablesSpec extends AnyFunSuite {
       // no scratch directory is left beside the tables
       assert(new java.io.File(root).list().toSet == Set(plain, bucketed))
     } finally dropAll(plain, bucketed)
+  }
+
+  /** A state family as the compaction engine sees it: one batch's write,
+    * the family's compaction, and the merged read its readers get.
+    */
+  private case class Family(name: String,
+                            write: (SparkSession, Long, String, String) => Unit,
+                            compact: (SparkSession, String, Long) => (Int, Int),
+                            read: (SparkSession, String) => Seq[String])
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private val families = Seq(
+    // SUM merge: a row read twice counts twice
+    Family("metrics daily",
+      (s, b, t, path) => graft.cdc.Metrics.mergeBatchDaily(
+        s.range(10 + b).select(
+          date_add(lit("2024-06-01").cast("date"),
+            (col("id") % 2).cast("int")).as("day"),
+          (col("id") % 3).cast("string").as("type"),
+          (col("id") + lit(b)).as("cents")),
+        col("day"), col("type"), col("cents"), t, path, b),
+      graft.cdc.Metrics.compactDaily,
+      (s, t) => sorted(graft.cdc.Metrics.dailyFromTable(s, t))),
+    // MAX merge: a row read twice changes nothing
+    Family("hll registers",
+      (s, b, t, path) => Hll.mergeBatch(
+        s.range(b * 40, b * 40 + 60).select(
+          (col("id") % 2).as("g"), col("id").as("v")),
+        Seq("g"), "v", t, path, b, p = 4),
+      Hll.compactRegisters,
+      (s, t) => sorted(Hll.registersFromTable(s, t, Seq("g")))))
+
+  private def batchIds(s: SparkSession, table: String): Set[Long] =
+    s.table(table).select(col("_batch_id")).distinct().collect()
+      .map(_.getLong(0)).toSet
+
+  test("compaction reads only the committed consolidation and the batches " +
+      "above its horizon: a leftover source batch or a superseded " +
+      "consolidation is swept unread, a SUM and a MAX family alike") {
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("bt_horizon").toString
+    for (f <- families; leftover <- Seq("source batch", "consolidation")) {
+      // a table name of its own: `s` caches each table's relation, so a
+      // name re-created at another path by another session resolves stale
+      val t = s"graft_bt_horizon_${f.name}_$leftover".replace(' ', '_')
+      val path = s"$root/$t"
+      dropAll(t)
+      try {
+        for (b <- 0L to 3L) f.write(s, b, t, path)
+        val want = f.read(s, t)
+        val clue = s"${f.name}, leftover $leftover"
+        val (before, after) = f.compact(s, t, 1L)
+        assert(before > after && after > 0, s"$clue: files $before -> $after")
+        assert(f.read(s, t) == want, clue)
+        assert(batchIds(s, t) == Set(-2L, 2L, 3L), clue)
+        leftover match {
+          case "source batch" =>
+            // a rerun at the same horizon finds nothing to do
+            assert(f.compact(s, t, 1L) == ((0, 0)), clue)
+            assert(f.read(s, t) == want, clue)
+            // a crash between the insert and the sweep at the same
+            // horizon: batch 0's source is still there; the rerun sweeps it
+            f.write(s, 0L, t, path)
+            f.compact(s, t, 1L)
+            assert(f.read(s, t) == want, clue)
+            assert(batchIds(s, t) == Set(-2L, 2L, 3L), clue)
+            // the same leftover met by a compaction at a HIGHER horizon
+            f.write(s, 0L, t, path)
+            f.compact(s, t, 2L)
+            assert(batchIds(s, t) == Set(-3L, 3L), clue)
+          case "consolidation" =>
+            val committed = s.table(t).filter(col("_batch_id") === -2L)
+              .drop("_batch_id")
+            val kept = s.createDataFrame(
+              java.util.Arrays.asList(committed.collect(): _*), committed.schema)
+            f.compact(s, t, 2L)
+            assert(batchIds(s, t) == Set(-3L, 3L), clue)
+            // a crash between that insert and its sweep: the superseded
+            // consolidation is still there beside its successor
+            BatchTables.writeBatch(kept, -2L, t, path)
+            f.compact(s, t, 3L)
+            assert(batchIds(s, t) == Set(-4L), clue)
+        }
+        assert(f.read(s, t) == want, clue)
+      } finally dropAll(t)
+    }
   }
 }

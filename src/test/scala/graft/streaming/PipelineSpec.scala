@@ -421,6 +421,8 @@ class PipelineSpec extends AnyFunSuite {
         case _ =>
       }
     }
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
     // one batch (every segment in one AvailableNow trigger) on a fresh sink
     def pass(): (String, Seq[(String, String)], Seq[String]) = {
       val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
@@ -428,7 +430,7 @@ class PipelineSpec extends AnyFunSuite {
       org.apache.spark.TestBus.drain(spark.sparkContext)
       jobs.clear()
       execs.clear()
-      val q = Pipeline.run(spark, ledger, root, ckpt, maintenance = hooks)
+      val q = Pipeline.run(caller, ledger, root, ckpt, maintenance = hooks)
       q.awaitTermination(120000)
       assert(q.exception.isEmpty && q.recentProgress.count(_.numInputRows > 0) == 1)
       org.apache.spark.TestBus.drain(spark.sparkContext)
@@ -436,9 +438,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val ((runFresh, fresh, freshExecs), (_, existing, _)) =
-        org.apache.spark.TestConf.withContextConf(spark.sparkContext,
-          "spark.sql.adaptive.enabled", "false")((pass(), pass()))
+      val ((runFresh, fresh, freshExecs), (_, existing, _)) = (pass(), pass())
       val ctas = freshExecs.filter(n => n.contains("SaveAsV1TableCommand") ||
         n.contains("CreateDataSourceTableAsSelectCommand"))
       assert(ctas.isEmpty, freshExecs.distinct)
@@ -452,6 +452,60 @@ class PipelineSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
+  }
+
+  test("the pipeline and its hooks run with the caller session's SQL " +
+      "settings, and the caller's session is left unchanged") {
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    Ledger.writeCrudScenario(ledger)
+    // the two caller settings, and one of the pipeline's own overrides
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val before = caller.conf.getAll
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val q = Pipeline.run(caller, ledger, root, ckpt, maintenance = Seq(
+      (b, _) => seen.add(keys.map(b.sparkSession.conf.get))))
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq.distinct == Seq(Seq("false", "7", "128k")))
+    assert(caller.conf.getAll == before)
+  }
+
+  test("retention sweep drops only the expired month of the store tree; " +
+      "the live month and the publish tree are untouched") {
+    import scala.jdk.CollectionConverters._
+    val root = tmp("retention")
+    val june = TestRules.applyAll(Fixtures.crudScenario(spark))
+    // the same events a year later, as a second (live) month
+    val live = june
+      .withColumn("timestamp", col("timestamp") + expr("INTERVAL 365 DAYS"))
+      .withColumn("eventId", concat(col("eventId"), lit("-live")))
+    Pipeline.storeThenPublish(june, 0L, root)
+    Pipeline.storeThenPublish(live, 1L, root)
+    val store = new java.io.File(Pipeline.storeDir(root))
+    assert(new java.io.File(store, "_pkey=202406").isDirectory)
+    assert(new java.io.File(store, "_pkey=202506").isDirectory)
+    def files(dir: java.io.File): Seq[(String, Long)] =
+      java.nio.file.Files.walk(dir.toPath).iterator().asScala.toSeq
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.toString -> java.nio.file.Files.size(f)).sorted
+    val publishBefore = files(new java.io.File(Pipeline.publishDir(root)))
+    val liveBefore = files(new java.io.File(store, "_pkey=202506"))
+    val published = Pipeline.readPublished(spark, root).count()
+    // 13 months after the fixture month -> June 2024 expired at max_age=12mo
+    val nowMs = Fixtures.T0 + 13L * 31 * 24 * 3600 * 1000
+    assert(Pipeline.sweepRetention(spark, root, 12, nowMs) == Seq("_pkey=202406"))
+    val ids = Pipeline.readEventStore(spark, Pipeline.storeDir(root))
+      .select("eventId").collect().map(_.getString(0)).toSet
+    assert(ids == live.select("eventId").collect().map(_.getString(0)).toSet)
+    assert(!new java.io.File(store, "_pkey=202406").exists())
+    assert(files(new java.io.File(store, "_pkey=202506")) == liveBefore)
+    assert(files(new java.io.File(Pipeline.publishDir(root))) == publishBefore)
+    assert(Pipeline.readPublished(spark, root).count() == published)
   }
 
   test("drift monitor rides the pipeline: a Quantiles maintenance hook keeps " +
