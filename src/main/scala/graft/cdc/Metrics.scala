@@ -73,19 +73,21 @@ object Metrics {
     graft.operators.BatchTables.writeBatch(rows, batchId, table, path)
   }
 
+  /** The daily-metrics merge: (day, event_type) partials summed. The
+    * read and the compaction both apply it.
+    */
+  private def mergeDaily(t: DataFrame): DataFrame =
+    t.groupBy(col("day"), col("event_type"))
+      .agg(sum(col("n")).as("n"), sum(col("cents")).cast("long").as("cents"))
+
   /** The maintained table's daily metrics over every absorbed batch. */
   def dailyFromTable(spark: org.apache.spark.sql.SparkSession,
                      table: String): DataFrame =
-    spark.table(table)
-      .groupBy(col("day"), col("event_type"))
-      .agg(sum(col("n")).as("n"), sum(col("cents")).cast("long").as("cents"))
+    mergeDaily(spark.table(table))
 
   /** Fold batches `0..upToBatchId` into one consolidated partition. */
   def compactDaily(spark: org.apache.spark.sql.SparkSession, table: String,
                    upToBatchId: Long): (Int, Int) =
     graft.operators.BatchTables.compactBatchPartitions(spark, table,
-      upToBatchId, df => df
-        .groupBy(col("day"), col("event_type"), col("_batch_id"))
-        .agg(sum(col("n")).as("n"), sum(col("cents")).cast("long").as("cents"))
-        .select(df.columns.map(col): _*))
+      upToBatchId, mergeDaily)
 }

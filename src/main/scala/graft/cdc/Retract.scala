@@ -90,14 +90,18 @@ object Retract {
     * batch; groups whose live count has returned to zero drop out (their
     * keys all died or moved away — the retractions cancelled the adds).
     */
-  def mvFromTable(spark: SparkSession, table: String): DataFrame = {
-    val t = spark.table(table)
-    val groupCols = t.columns.filterNot(c =>
-      c == "d_n" || c == "d_sum" || c == "_batch_id").map(col).toIndexedSeq
-    t.groupBy(groupCols: _*)
-      .agg(sum(col("d_n")).as("n"), sum(col("d_sum")).cast("long").as("total"))
+  def mvFromTable(spark: SparkSession, table: String): DataFrame =
+    mergeDeltas(spark.table(table))
+      .withColumnsRenamed(Map("d_n" -> "n", "d_sum" -> "total"))
       .filter(col("n") > 0)
-  }
+
+  /** The MV merge: delta vectors summed per group (every column but the
+    * deltas and `_batch_id`). The read and the compaction both apply it.
+    */
+  private def mergeDeltas(t: DataFrame): DataFrame =
+    t.groupBy(graft.operators.BatchTables.keyColumns(t, "d_n", "d_sum")
+        .map(col): _*)
+      .agg(sum(col("d_n")).as("d_n"), sum(col("d_sum")).as("d_sum"))
 
   /** Fold batches `0..upToBatchId` into one consolidated partition; the
     * collapse is the SUM merge (crash window: the one contract in
@@ -105,11 +109,5 @@ object Retract {
     */
   def compactMv(spark: SparkSession, table: String, upToBatchId: Long): (Int, Int) =
     graft.operators.BatchTables.compactBatchPartitions(spark, table,
-      upToBatchId, { df =>
-        val groupCols = df.columns.filterNot(c =>
-          c == "d_n" || c == "d_sum").map(col).toIndexedSeq
-        df.groupBy(groupCols: _*)
-          .agg(sum(col("d_n")).as("d_n"), sum(col("d_sum")).as("d_sum"))
-          .select(df.columns.map(col).toIndexedSeq: _*)
-      })
+      upToBatchId, mergeDeltas)
 }

@@ -99,13 +99,21 @@ object Scd {
     */
   def mergeBatchLatest(batch: DataFrame, keyCols: Seq[String], tsCol: String,
                        tieCol: String, table: String, path: String,
-                       batchId: Long): Unit = {
-    val payload = struct(batch.columns.map(col): _*)
-    val winners = batch
-      .groupBy(keyCols.map(col): _*)
+                       batchId: Long): Unit =
+    graft.operators.BatchTables.writeBatch(
+      winners(batch, keyCols, tsCol, tieCol), batchId, table, path)
+
+  /** The latest-wins merge: each key's max-(ts, tie) row over every column
+    * but `_batch_id`, tombstones included. The batch write, the read and
+    * the compaction all apply it.
+    */
+  private def winners(rows: DataFrame, keyCols: Seq[String], tsCol: String,
+                      tieCol: String): DataFrame = {
+    val t = rows.drop("_batch_id")
+    val payload = struct(t.columns.map(col): _*)
+    t.groupBy(keyCols.map(col): _*)
       .agg(max_by(payload, struct(col(tsCol), col(tieCol))).as("_winner"))
       .select(col("_winner.*"))
-    graft.operators.BatchTables.writeBatch(winners, batchId, table, path)
   }
 
   /** Current state over everything the maintained table has absorbed:
@@ -113,14 +121,9 @@ object Scd {
     */
   def stateFromTable(spark: org.apache.spark.sql.SparkSession,
                      table: String, keyCols: Seq[String], tsCol: String,
-                     tieCol: String, opCol: String): DataFrame = {
-    val t = spark.table(table).drop("_batch_id")
-    val payload = struct(t.columns.map(col): _*)
-    t.groupBy(keyCols.map(col): _*)
-      .agg(max_by(payload, struct(col(tsCol), col(tieCol))).as("_winner"))
-      .select(col("_winner.*"))
+                     tieCol: String, opCol: String): DataFrame =
+    winners(spark.table(table), keyCols, tsCol, tieCol)
       .filter(notDelete(opCol))
-  }
 
   /** Fold batches `0..upToBatchId` into one consolidated partition of
     * per-key winners (tombstones included).
@@ -129,14 +132,7 @@ object Scd {
                    upToBatchId: Long, keyCols: Seq[String], tsCol: String,
                    tieCol: String): (Int, Int) =
     graft.operators.BatchTables.compactBatchPartitions(spark, table,
-      upToBatchId, { df =>
-        val payload = struct(df.columns.map(col): _*)
-        df.groupBy(keyCols.map(col): _*)
-          .agg(max_by(payload, struct(col(tsCol), col(tieCol)))
-            .as("_winner"))
-          .select(col("_winner.*"))
-          .select(df.columns.map(col): _*)
-      })
+      upToBatchId, winners(_, keyCols, tsCol, tieCol))
 
   /** INCREMENTAL SCD2 history maintenance — `history` under the
     * `BatchTables` discipline, so a 100 TB dimension never re-windows its
@@ -185,16 +181,25 @@ object Scd {
     val touched = t.filter(col("_batch_id") >= 0)
       .select(keyCols.map(col): _*).distinct()
     val untouched = t.join(touched, keyCols, "left_anti")
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(tsCol), col(tieCol))
-    val repaired = t.join(touched, keyCols, "left_semi")
-      .dropDuplicates(keyCols :+ tsCol :+ tieCol)
-      .withColumn("valid_from", col(tsCol))
-      .withColumn("valid_to", lead(col(tsCol), 1).over(w))
+    val repaired = rewindow(t.join(touched, keyCols, "left_semi"),
+      keyCols, tsCol, tieCol)
     untouched.unionByName(repaired)
       .filter(notDelete(opCol))
       .withColumn("is_current", col("valid_to").isNull)
       .drop("_batch_id")
+  }
+
+  /** The history merge: change rows deduped by (key, ts, tie) and
+    * re-windowed, so each version closes at its successor's timestamp.
+    * The read applies it to the touched keys, the compaction to all.
+    */
+  private def rewindow(rows: DataFrame, keyCols: Seq[String], tsCol: String,
+                       tieCol: String): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*)
+      .orderBy(col(tsCol), col(tieCol))
+    rows.dropDuplicates(keyCols :+ tsCol :+ tieCol)
+      .withColumn("valid_from", col(tsCol))
+      .withColumn("valid_to", lead(col(tsCol), 1).over(w))
   }
 
   /** Fold batches `0..upToBatchId` into one consolidated partition whose
@@ -206,14 +211,7 @@ object Scd {
                      upToBatchId: Long, keyCols: Seq[String], tsCol: String,
                      tieCol: String): (Int, Int) =
     graft.operators.BatchTables.compactBatchPartitions(spark, table,
-      upToBatchId, { df =>
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(tsCol), col(tieCol))
-        df.dropDuplicates(keyCols :+ tsCol :+ tieCol) // as the repair read
-          .withColumn("valid_from", col(tsCol))
-          .withColumn("valid_to", lead(col(tsCol), 1).over(w))
-          .select(df.columns.map(col): _*)
-      })
+      upToBatchId, rewindow(_, keyCols, tsCol, tieCol))
 
   /** Snapshot DIFF between two points in time, derived from ONE history
     * pass: which keys were added, removed, or changed between `t1` and

@@ -18,10 +18,12 @@ import org.apache.spark.sql.types.StructType
   *    session's own overwrite mode and however many writers share it;
   *  - per-batch partitions are periodically folded into one consolidated
   *    negative partition (`compactBatchPartitions`, the one compaction
-  *    engine) so file count does not grow with stream age — each state
-  *    family supplies its own `consolidate` collapse (full-row dedup for
-  *    sketch-row tables, register-wise max for HLL, counter-wise sum for
-  *    CMS).
+  *    engine) so file count does not grow with stream age. The engine
+  *    owns `_batch_id`: it normalizes it before the fold, re-tags the
+  *    folded rows with the consolidated id and puts them in table column
+  *    order. A state family supplies only its merge — the same function
+  *    its read applies (register-wise max for HLL, counter-wise sum for
+  *    CMS, full-row dedup for the gate index).
   */
 private[graft] object BatchTables {
 
@@ -49,9 +51,11 @@ private[graft] object BatchTables {
     */
   private[graft] def pinDynamicOverwrite(spark: SparkSession): Unit = ()
 
+  private def ident(spark: SparkSession, table: String) =
+    spark.sessionState.sqlParser.parseTableIdentifier(table)
+
   private def metadata(spark: SparkSession, table: String) =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    spark.sessionState.catalog.getTableMetadata(ident(spark, table))
 
   private def requireDynamicOverwrite(
       meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
@@ -99,6 +103,10 @@ private[graft] object BatchTables {
         spark.sql(s"CREATE TABLE $table (${schema.toNullable.toDDL}) " +
           s"USING parquet PARTITIONED BY (_batch_id) $layout" +
           s"LOCATION '$location' OPTIONS ('$OverwriteOption'='dynamic')")
+        // this session may still cache the relation of an earlier table of
+        // the same name, dropped through another session: writes would
+        // resolve it and land under the old location
+        spark.sessionState.catalog.invalidateCachedTable(ident(spark, table))
         if (fs.exists(dir) && fs.listStatus(dir)
             .exists(_.getPath.getName.startsWith("_batch_id=")))
           spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
@@ -112,6 +120,12 @@ private[graft] object BatchTables {
             s"not at the requested path $requested — drop the table or pass its path")
     }
   }
+
+  /** The columns of a state frame other than `valueCols` and `_batch_id`:
+    * the group key of a family whose compaction is not handed it.
+    */
+  private[graft] def keyColumns(t: DataFrame, valueCols: String*): Seq[String] =
+    t.columns.toSeq.filterNot(c => c == "_batch_id" || valueCols.contains(c))
 
   /** Write one batch's `rows` into partition `_batch_id = batchId` of
     * `table` (created at `path` on first use), replacing whatever an
@@ -127,11 +141,15 @@ private[graft] object BatchTables {
 
   /** Fold the committed consolidation and every batch above its horizon
     * up to `upToBatchId` into ONE partition `_batch_id = -(upToBatchId+1)`,
-    * collapsing rows with `consolidate` (applied AFTER `_batch_id` is
-    * normalized to the target). Every write goes THROUGH the table
-    * (`insertInto`) so creation-time layout (bucketing) survives
-    * compaction. Because the committed consolidation is re-merged, the
-    * steady state is exactly one negative partition.
+    * collapsing rows with `consolidate`, the family's merge. The engine
+    * owns `_batch_id`: `consolidate` sees the read with `_batch_id`
+    * normalized to the target id, may group without it or drop it, and
+    * its output is re-tagged with the target id and selected in table
+    * column order (`insertInto` matches columns by position). Every write
+    * goes THROUGH the table (`insertInto`) so creation-time layout
+    * (bucketing) survives compaction. Because the committed
+    * consolidation is re-merged, the steady state is exactly one
+    * negative partition.
     *
     * The committed horizon is re-derived on every run from the negative
     * partitions present (`max(-id - 1)`, -1 when there are none). The
@@ -248,13 +266,16 @@ private[graft] object BatchTables {
         // conflict). The read is the committed consolidation plus the
         // batches above its horizon (partition-pruned; with no
         // consolidation yet, the committed id is 0, inside the range);
-        // _batch_id is normalized BEFORE the caller's collapse.
+        // _batch_id is normalized before the family's merge and re-tagged
+        // after it, then the table's column order is restored.
         val id = col("_batch_id")
         consolidate(
           spark.read.parquet(root.toString)
             .filter(id === -(committedHorizon + 1) ||
               id.between(committedHorizon + 1, upToBatchId))
             .withColumn("_batch_id", lit(compactedId)))
+          .withColumn("_batch_id", lit(compactedId))
+          .select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
           .write.mode("overwrite").parquet(staging.toString)
         // stage 2: through the table, so creation-time layout stays valid
         spark.read.parquet(staging.toString)

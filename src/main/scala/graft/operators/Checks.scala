@@ -233,19 +233,25 @@ object Checks {
     val t0 = spark.table(table)
     val t = batchIds.map(ids => t0.filter(col("_batch_id").isin(ids: _*)))
       .getOrElse(t0)
-    t.groupBy(col("check_name"), col("target"))
-      .agg(sum(col("n")).as("_n"), sum(col("viol")).as("_viol"),
-        max(col("max_us")).as("_max"))
+    mergeSuite(t)
       .select(col("check_name"), col("target"),
         when(col("check_name") === "fresh",
-          coalesce(lit(asOfUs) - col("_max"), lit(-1L)))
-          .otherwise(col("_n")).as("total"),
+          coalesce(lit(asOfUs) - col("max_us"), lit(-1L)))
+          .otherwise(col("n")).as("total"),
         when(col("check_name") === "fresh",
-          when(col("_max").isNotNull &&
-            lit(asOfUs) - col("_max") <= maxLagUs, 0L).otherwise(1L))
-          .otherwise(col("_viol")).as("violations"))
+          when(col("max_us").isNotNull &&
+            lit(asOfUs) - col("max_us") <= maxLagUs, 0L).otherwise(1L))
+          .otherwise(col("viol")).as("violations"))
       .withColumn("passed", col("violations") === 0L)
   }
+
+  /** The suite-state merge per (check, target): counts SUM, the freshness
+    * watermark MAX. The read and the compaction both apply it.
+    */
+  private def mergeSuite(t: DataFrame): DataFrame =
+    t.groupBy(col("check_name"), col("target"))
+      .agg(sum(col("n")).as("n"), sum(col("viol")).as("viol"),
+        max(col("max_us")).as("max_us"))
 
   /** Fold batches `0..upToBatchId` into one consolidated partition — the
     * SUM/MAX merge; its crash window is the one contract in
@@ -255,11 +261,7 @@ object Checks {
     */
   def compactSuite(spark: org.apache.spark.sql.SparkSession,
                    table: String, upToBatchId: Long): (Int, Int) =
-    BatchTables.compactBatchPartitions(spark, table, upToBatchId,
-      df => df.groupBy(col("check_name"), col("target"), col("_batch_id"))
-        .agg(sum(col("n")).as("n"), sum(col("viol")).as("viol"),
-          max(col("max_us")).as("max_us"))
-        .select(df.columns.map(col).toIndexedSeq: _*))
+    BatchTables.compactBatchPartitions(spark, table, upToBatchId, mergeSuite)
 
   /** The assembled suite: one scalar pass + the declared key/FK checks +
     * optional freshness, unioned into a single deterministic report.

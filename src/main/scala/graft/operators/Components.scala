@@ -165,9 +165,15 @@ object Components {
     * every batch partition — (id, component).
     */
   def componentsFromTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-      .groupBy(col("id"))
-      .agg(max_by(col("component"), col("_seq")).as("component"))
+    latestMembership(spark.table(table)).drop("_seq")
+
+  /** The membership merge: each id's newest (`_seq`-wise) row. The read
+    * and the compaction both apply it.
+    */
+  private def latestMembership(t: DataFrame): DataFrame =
+    t.groupBy(col("id"))
+      .agg(max_by(col("component"), col("_seq")).as("component"),
+        max(col("_seq")).as("_seq"))
 
   /** Fold batch partitions `0..upToBatchId` into one consolidated
     * partition, keeping each id's newest row — `_seq` lives in the row,
@@ -178,10 +184,7 @@ object Components {
   def compactComponents(spark: SparkSession, table: String,
                         upToBatchId: Long): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, table, upToBatchId,
-      df => df.groupBy(col("id"), col("_batch_id"))
-        .agg(max(col("_seq")).as("_seq"),
-          max_by(col("component"), col("_seq")).as("component"))
-        .select(col("id"), col("component"), col("_seq"), col("_batch_id")))
+      latestMembership)
 
   /** k-core decomposition by iterative peeling (Seidman 1983; the
     * Batagelj–Zaveršnik cascade, synchronous form): repeatedly drop

@@ -124,7 +124,5 @@ object CorpusSketch {
   def compactSignature(spark: org.apache.spark.sql.SparkSession,
                        sigTable: String, upToBatchId: Long): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, sigTable, upToBatchId,
-      df => df.groupBy(df.columns.filterNot(_ == "min_h").map(col): _*)
-        .agg(min(col("min_h")).as("min_h"))
-        .select(df.columns.map(col): _*))
+      df => mergeSignatures(df, BatchTables.keyColumns(df, "slot", "min_h").head))
 }

@@ -164,7 +164,5 @@ object CountMin {
   def compactSketch(spark: org.apache.spark.sql.SparkSession,
                     sketchTable: String, upToBatchId: Long): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, sketchTable, upToBatchId,
-      df => df.groupBy(df.columns.filterNot(_ == "cnt").map(col): _*)
-        .agg(sum(col("cnt")).as("cnt"))
-        .select(df.columns.map(col): _*))
+      mergeSketches)
 }

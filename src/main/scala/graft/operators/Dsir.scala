@@ -148,10 +148,14 @@ object Dsir {
     */
   def dsirCompactState(spark: org.apache.spark.sql.SparkSession,
                        table: String, upToBatchId: Long): (Int, Int) =
-    BatchTables.compactBatchPartitions(spark, table, upToBatchId, df =>
-      df.groupBy(col("b"), col("_batch_id"))
-        .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
-        .select(col("b"), col("cr"), col("ct"), col("_batch_id")))
+    BatchTables.compactBatchPartitions(spark, table, upToBatchId, bucketStats)
+
+  /** The DSIR-state merge: per-bucket (Σcr, Σct). The read and the
+    * compaction both apply it.
+    */
+  private def bucketStats(t: DataFrame): DataFrame =
+    t.groupBy(col("b"))
+      .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
 
   /** Importance weights with the bucket statistics read from the
     * maintained state table instead of recomputed: the ≤ B-row stats
@@ -166,10 +170,7 @@ object Dsir {
   def dsirWeightsFromState(docs: DataFrame, idCol: String, textCol: String,
                            table: String,
                            buckets: Int = DefaultBuckets): DataFrame = {
-    val spark = docs.sparkSession
-    val stats = spark.table(table)
-      .groupBy(col("b"))
-      .agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+    val stats = bucketStats(docs.sparkSession.table(table))
     val db = bucketCounts(docs, Some(idCol), textCol, buckets)
     scoreBuckets(db, idCol, stats, buckets)
   }

@@ -62,23 +62,31 @@ object FreqItemsState {
     * the table holds: (item, est, lb) with the top-m deterministic cut.
     */
   def summaryFromTable(spark: SparkSession, table: String,
-                       m: Int): DataFrame = {
-    val t = spark.table(table)
+                       m: Int): DataFrame =
+    combine(spark.table(table), m)
+      .select(col("item"), col("cnt").as("est"),
+        (col("cnt") - col("err")).as("lb"))
+
+  /** The merge: the per-`_src_batch` summaries in `t` combined into one
+    * (item, cnt, err) summary, top m by (cnt desc, item). An item absent
+    * from a batch is charged that batch's minimum counter as both count
+    * and error. The read and the compaction both apply it.
+    */
+  private def combine(t: DataFrame, m: Int): DataFrame = {
     val meta = t.filter(col("item").isNull)
       .select(col("_src_batch"), col("err").as("b_min"))
     val entries = t.filter(col("item").isNotNull)
       .select(col("_src_batch"), col("item"), col("cnt"), col("err"))
-    val grid = entries.select(col("item")).distinct()
+    entries.select(col("item")).distinct()
       .crossJoin(broadcast(meta))
-    grid.join(entries, Seq("_src_batch", "item"), "left")
+      .join(entries, Seq("_src_batch", "item"), "left")
       .select(col("item"),
         coalesce(col("cnt"), col("b_min")).as("c"),
         coalesce(col("err"), col("b_min")).as("e"))
       .groupBy(col("item"))
-      .agg(sum(col("c")).as("est"), sum(col("e")).as("err"))
-      .orderBy(col("est").desc, col("item"))
+      .agg(sum(col("c")).as("cnt"), sum(col("e")).as("err"))
+      .orderBy(col("cnt").desc, col("item"))
       .limit(m)
-      .select(col("item"), col("est"), (col("est") - col("err")).as("lb"))
   }
 
   /** Total stream length the table has absorbed (for total/m thresholds). */
@@ -88,39 +96,23 @@ object FreqItemsState {
 
   /** Fold batches `0..upToBatchId` into one consolidated partition whose
     * rows are the MERGED summary (entries + one metadata row: summed
-    * totals, the merged summary's own minimum counter).
+    * totals, the merged summary's own minimum counter), tagged with the
+    * consolidated id as their `_src_batch`.
     */
   def compactSummary(spark: SparkSession, table: String, upToBatchId: Long,
                      m: Int): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, table, upToBatchId, { df =>
-      val meta = df.filter(col("item").isNull)
-        .select(col("_src_batch"), col("err").as("b_min"))
+      val merged = combine(df, m)
       val totals = df.filter(col("item").isNull)
         .agg(coalesce(sum(col("cnt")), lit(0L)).as("t"))
-      val entries = df.filter(col("item").isNotNull)
-        .select(col("_src_batch"), col("item"), col("cnt"), col("err"))
-      val target = df.select(col("_batch_id")).limit(1)
-      val merged = entries.select(col("item")).distinct()
-        .crossJoin(broadcast(meta))
-        .join(entries, Seq("_src_batch", "item"), "left")
-        .select(col("item"),
-          coalesce(col("cnt"), col("b_min")).as("c"),
-          coalesce(col("err"), col("b_min")).as("e"))
-        .groupBy(col("item"))
-        .agg(sum(col("c")).as("cnt"), sum(col("e")).as("err"))
-        .orderBy(col("cnt").desc, col("item"))
-        .limit(m)
-      val itemType = entries.schema("item").dataType
       val newMin = merged
         .agg(count(lit(1)).as("n"), min(col("cnt")).as("mn"))
         .select(when(col("n") === m, col("mn")).otherwise(lit(0L)).as("mn"))
       val newMeta = totals.crossJoin(broadcast(newMin))
-        .select(lit(null).cast(itemType).as("item"),
+        .select(lit(null).cast(df.schema("item").dataType).as("item"),
           col("t").as("cnt"), col("mn").as("err"))
-      merged.select(col("item"), col("cnt"), col("err"))
-        .unionByName(newMeta)
-        .crossJoin(broadcast(target))
-        .withColumn("_src_batch", col("_batch_id"))
-        .select(df.columns.map(col): _*)
+      merged.unionByName(newMeta)
+        .crossJoin(broadcast(df.select(col("_batch_id").as("_src_batch"))
+          .limit(1)))
     })
 }

@@ -183,7 +183,5 @@ object Hll {
                        registersTable: String,
                        upToBatchId: Long): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, registersTable, upToBatchId,
-      df => df.groupBy(df.columns.filterNot(_ == "rho").map(col): _*)
-        .agg(max(col("rho")).as("rho"))
-        .select(df.columns.map(col): _*))
+      df => mergeRegisters(df, BatchTables.keyColumns(df, "bucket", "rho")))
 }

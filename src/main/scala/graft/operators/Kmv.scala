@@ -126,8 +126,7 @@ object Kmv {
                     table: String, upToBatchId: Long, groupCols: Seq[String],
                     k: Int): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, table, upToBatchId,
-      df => mergeSketches(df, groupCols :+ "_batch_id", k)
-        .select(df.columns.map(col): _*))
+      mergeSketches(_, groupCols, k))
 
   /** The pairwise overlap MATRIX over a keyed sketch frame
     * (`segCol` + `u`, one sketch per segment) — the workflow the

@@ -128,25 +128,15 @@ object LangModel {
 
   /** Fold batches `0..upToBatchId` of a [[lmMergeBatch]] table into one
     * consolidated partition: bigram rows SUM per gram, word rows SUM per
-    * word. A SUM-merge family; its crash window is the one contract in
+    * word — one aggregate, since a row's NULLs mark its kind. A SUM-merge
+    * family; its crash window is the one contract in
     * `BatchTables.compactBatchPartitions`.
     */
   def lmCompactState(spark: SparkSession, table: String,
                      upToBatchId: Long): (Int, Int) =
-    BatchTables.compactBatchPartitions(spark, table, upToBatchId, df => {
-      val bigrams = df.filter(col("gram").isNotNull)
-        .groupBy(col("gram"), col("w1"), col("_batch_id"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .select(col("gram"), col("w1"),
-          lit(null).cast("string").as("word"), col("cnt"), col("_batch_id"))
-      val words = df.filter(col("word").isNotNull)
-        .groupBy(col("word"), col("_batch_id"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .select(lit(null).cast("string").as("gram"),
-          lit(null).cast("string").as("w1"), col("word"), col("cnt"),
-          col("_batch_id"))
-      bigrams.unionByName(words)
-    })
+    BatchTables.compactBatchPartitions(spark, table, upToBatchId,
+      _.groupBy(col("gram"), col("w1"), col("word"))
+        .agg(sum(col("cnt")).as("cnt")))
 
   /** Score `docs` under the bigram model held in the maintained state
     * table: c2/c1 from exact BIGINT sums over the bigram rows, V from

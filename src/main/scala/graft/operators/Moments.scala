@@ -97,8 +97,7 @@ object Moments {
                      table: String, upToBatchId: Long,
                      groupCols: Seq[String]): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, table, upToBatchId,
-      df => mergeMoments(df, groupCols :+ "_batch_id")
-        .select(df.columns.map(col): _*))
+      mergeMoments(_, groupCols))
 
   /** Close a moment frame to the statistics (see [[bivariateStats]]). */
   def statsFromMoments(m: DataFrame, groupCols: Seq[String]): DataFrame = {

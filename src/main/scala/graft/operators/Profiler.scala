@@ -188,11 +188,11 @@ object Profiler {
     }
   }
 
-  /** The level-1 merge algebra, keyed by `keys` (adds `_batch_id` during
-    * compaction so the normalized partition column survives).
+  /** The level-1 merge algebra per (column, type, register bucket). The
+    * read and the compaction both apply it.
     */
-  private def mergeLvl1(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*)
+  private def mergeLvl1(df: DataFrame): DataFrame =
+    df.groupBy(col("col_name"), col("vtype"), col("bucket"))
       .agg(max(col("rho")).as("rho"), sum(col("cnt")).as("cnt"),
         min(col("kmn")).as("kmn"), max(col("kmx")).as("kmx"),
         min(col("dmn")).as("dmn"), max(col("dmx")).as("dmx"),
@@ -287,8 +287,7 @@ object Profiler {
   /** The maintained table's profile over all absorbed batches. */
   def profileFromTable(spark: org.apache.spark.sql.SparkSession,
                        table: String): DataFrame =
-    collapse(mergeLvl1(spark.table(table).drop("_batch_id"),
-      Seq("col_name", "vtype", "bucket")))
+    collapse(mergeLvl1(spark.table(table)))
 
   /** Fold batches `0..upToBatchId` into one consolidated partition via
     * the level-1 merge algebra. The count/min/max merge is NOT
@@ -298,9 +297,7 @@ object Profiler {
     */
   def compactProfile(spark: org.apache.spark.sql.SparkSession,
                      table: String, upToBatchId: Long): (Int, Int) =
-    BatchTables.compactBatchPartitions(spark, table, upToBatchId,
-      df => mergeLvl1(df, Seq("col_name", "vtype", "bucket", "_batch_id"))
-        .select(df.columns.map(col): _*))
+    BatchTables.compactBatchPartitions(spark, table, upToBatchId, mergeLvl1)
 
   /** Column-level PROFILE DIFF between two profile frames
     * ([[columnStats]] outputs, or [[profileFromTable]] over two

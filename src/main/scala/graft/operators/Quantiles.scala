@@ -186,7 +186,5 @@ object Quantiles {
   def compactHistogram(spark: org.apache.spark.sql.SparkSession,
                        histTable: String, upToBatchId: Long): (Int, Int) =
     BatchTables.compactBatchPartitions(spark, histTable, upToBatchId,
-      df => df.groupBy(df.columns.filterNot(_ == "cnt").map(col): _*)
-        .agg(sum(col("cnt")).as("cnt"))
-        .select(df.columns.map(col): _*))
+      df => mergeHistograms(df, BatchTables.keyColumns(df, "bucket", "cnt")))
 }

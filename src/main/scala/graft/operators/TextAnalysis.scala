@@ -276,27 +276,17 @@ object TextAnalysis {
   }
 
   /** Fold batches `0..upToBatchId` of a [[bm25MergeBatch]] table into one
-    * consolidated partition: per-term df sums, metadata rows sum (n, Σdl).
-    * A SUM-merge family; its crash window is the one contract in
+    * consolidated partition: per-term df sums, metadata rows sum (n, Σdl)
+    * — one aggregate per term, the metadata rows' NULL term their own
+    * group. A SUM-merge family; its crash window is the one contract in
     * `BatchTables.compactBatchPartitions`.
     */
   def bm25CompactState(spark: org.apache.spark.sql.SparkSession,
                        table: String, upToBatchId: Long): (Int, Int) =
-    BatchTables.compactBatchPartitions(spark, table, upToBatchId, df => {
-      val entries = df.filter(col("term").isNotNull)
-        .groupBy(col("term"), col("_batch_id"))
-        .agg(sum(col("df")).as("df"))
-        .select(col("term"), col("df"),
-          lit(null).cast("long").as("n"), lit(null).cast("long").as("sdl"),
-          col("_batch_id"))
-      val meta = df.filter(col("term").isNull)
-        .groupBy(col("_batch_id"))
-        .agg(sum(col("n")).as("n"), sum(col("sdl")).as("sdl"))
-        .select(lit(null).cast("string").as("term"),
-          lit(null).cast("long").as("df"), col("n"), col("sdl"),
-          col("_batch_id"))
-      entries.unionByName(meta)
-    })
+    BatchTables.compactBatchPartitions(spark, table, upToBatchId,
+      _.groupBy(col("term"))
+        .agg(sum(col("df")).as("df"), sum(col("n")).as("n"),
+          sum(col("sdl")).as("sdl")))
 
   /** BM25 of `docs` against `queryTerms` with the corpus statistics read
     * from the maintained state table instead of recomputed: the global

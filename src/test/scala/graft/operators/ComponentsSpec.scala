@@ -641,8 +641,12 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("job counts: connectedComponents and sssp on a fixed 20-node chain " +
       "launch exactly the pinned number of Spark jobs") {
-    import spark.implicits._
-    val sc = spark.sparkContext
+    // AQE off, as QueryProbeSpec measures: under AQE a re-plan depends on
+    // which stage finishes first, and sssp's count moved by a job
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    import s.implicits._
+    val sc = s.sparkContext
     val group = s"components-jobs-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -668,7 +672,7 @@ class ComponentsSpec extends AnyFunSuite {
       val ssspJobs = jobsOf(Components.sssp(
         chain.map { case (a, b) => (a, b, 1L) }.toDF("s", "d", "w"),
         "s", "d", "w", Seq(1L).toDF("seed"), "seed").collect())
-      assert((ccJobs, ssspJobs) === ((107, 105)))
+      assert((ccJobs, ssspJobs) === ((46, 47)))
     } finally sc.removeSparkListener(listener)
   }
 
