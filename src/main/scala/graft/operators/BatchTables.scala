@@ -100,6 +100,9 @@ private[graft] object BatchTables {
             s"INTO ${b.numBuckets} BUCKETS "
         }
         val location = fs.makeQualified(dir).toString.replace("'", "\\'")
+        // an absent location makes the DDL's relation lookup log a
+        // FileNotFoundException stack trace at WARN
+        fs.mkdirs(dir)
         spark.sql(s"CREATE TABLE $table (${schema.toNullable.toDDL}) " +
           s"USING parquet PARTITIONED BY (_batch_id) $layout" +
           s"LOCATION '$location' OPTIONS ('$OverwriteOption'='dynamic')")

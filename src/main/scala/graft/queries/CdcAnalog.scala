@@ -166,35 +166,24 @@ object CdcAnalog {
     // maintained table — never a rescan of the raw events. The oracle is
     // the one-shot daily aggregate: partial-aggregate partitioning and
     // the compaction merge must not move a single count or cent.
-    "cdc_daily_metrics_state" -> ((s, dir) => {
+    "cdc_daily_metrics_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val ev = Tables(s, dir, "events")
         .withColumn("_day", datediff(to_date($"ts"), to_date(lit("1970-01-01"))))
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_daily_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_dm_$salt")
-        .toString
-      try {
-        def merge(parity: Int, id: Long): Unit =
-          graft.cdc.Metrics.mergeBatchDaily(
-            ev.filter(pmod($"_day", lit(2)) === parity),
-            to_date($"ts"), $"event_type",
-            floor($"value" * 100).cast("long"),
-            table, s"$tmp/daily", id)
-        merge(0, 0L)
-        merge(1, 1L)
-        graft.cdc.Metrics.compactDaily(s, table, upToBatchId = 1L)
-        graft.cdc.Metrics.dailyFromTable(s, table)
-          .select($"day".cast("string").as("day"), $"event_type",
-            $"n", $"cents")
-          .orderBy($"day", $"event_type")
-          // materialized so the returned frame no longer references the
-          // fixture table dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("daily")
+      def merge(parity: Int, id: Long): Unit =
+        graft.cdc.Metrics.mergeBatchDaily(
+          ev.filter(pmod($"_day", lit(2)) === parity),
+          to_date($"ts"), $"event_type",
+          floor($"value" * 100).cast("long"),
+          table, sc.path("daily"), id)
+      merge(0, 0L)
+      merge(1, 1L)
+      graft.cdc.Metrics.compactDaily(s, table, upToBatchId = 1L)
+      graft.cdc.Metrics.dailyFromTable(s, table)
+        .select($"day".cast("string").as("day"), $"event_type",
+          $"n", $"cents")
+        .orderBy($"day", $"event_type")
     }),
 
     // TeamCompositionChanged analog (O-25): tumbling-window burst detection —
@@ -335,38 +324,27 @@ object CdcAnalog {
     // closed intervals, delete tombstones still closing). The oracle is
     // the SAME one-shot window replay as cdc_scd2_history: batch
     // partitioning must not move the answer.
-    "cdc_scd2_incr" -> ((s, dir) => {
+    "cdc_scd2_incr" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val changes = Tables(s, dir, "events")
         .withColumn("op", EventsAsChangeLog.opCol)
         .withColumn("_day", datediff(to_date($"ts"), to_date(lit("1970-01-01"))))
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_scd_hist_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_scd_$salt")
-        .toString
-      try {
-        graft.cdc.Scd.mergeBatchHistory(
-          changes.filter(pmod($"_day", lit(2)) === 1).drop("_day"),
-          Seq("user_id"), "ts", "event_id", table, s"$tmp/hist", batchId = 0L)
-        graft.cdc.Scd.compactHistory(s, table, upToBatchId = 0L,
-          Seq("user_id"), "ts", "event_id")
-        graft.cdc.Scd.mergeBatchHistory(
-          changes.filter(pmod($"_day", lit(2)) === 0).drop("_day"),
-          Seq("user_id"), "ts", "event_id", table, s"$tmp/hist", batchId = 1L)
-        graft.cdc.Scd.historyFromTable(s, table, Seq("user_id"), "ts",
-            "event_id", "op")
-          .select($"user_id", $"event_id", $"value",
-            unix_micros($"valid_from").as("valid_from_us"),
-            unix_micros($"valid_to").as("valid_to_us"),
-            $"is_current")
-          .orderBy($"user_id", $"valid_from_us", $"event_id")
-          // materialized so the returned frame no longer references the
-          // fixture table dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("hist")
+      graft.cdc.Scd.mergeBatchHistory(
+        changes.filter(pmod($"_day", lit(2)) === 1).drop("_day"),
+        Seq("user_id"), "ts", "event_id", table, sc.path("hist"), batchId = 0L)
+      graft.cdc.Scd.compactHistory(s, table, upToBatchId = 0L,
+        Seq("user_id"), "ts", "event_id")
+      graft.cdc.Scd.mergeBatchHistory(
+        changes.filter(pmod($"_day", lit(2)) === 0).drop("_day"),
+        Seq("user_id"), "ts", "event_id", table, sc.path("hist"), batchId = 1L)
+      graft.cdc.Scd.historyFromTable(s, table, Seq("user_id"), "ts",
+          "event_id", "op")
+        .select($"user_id", $"event_id", $"value",
+          unix_micros($"valid_from").as("valid_from_us"),
+          unix_micros($"valid_to").as("valid_to_us"),
+          $"is_current")
+        .orderBy($"user_id", $"valid_from_us", $"event_id")
     }),
 
     // Point-in-time snapshot over the SCD2 history (cdc.Scd.asOf): each
@@ -490,40 +468,31 @@ object CdcAnalog {
     // ts-range delta batches (binlog arrival order) with a mid-stream
     // compaction — additive deltas commute, so batching and compaction
     // provably move nothing (identical oracle to cdc_mv_retract).
-    "cdc_mv_retract_state" -> ((s, dir) => {
+    "cdc_mv_retract_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val log = graft.cdc.EventsAsChangeLog.retractable(
           Tables(s, dir, "events"))
         .localCheckpoint(true) // fixture lag window computed once, as a
                                // binlog would deliver befores natively
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_mv_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_mv_$salt")
-        .toString
-      try {
-        val groupOf = (img: org.apache.spark.sql.Column) =>
-          struct(img.getField("event_type").as("event_type"),
-            floor(img.getField("value") / 50).cast("long").as("band"))
-        val measureOf = (img: org.apache.spark.sql.Column) =>
-          floor(img.getField("value") * 100)
-        val cuts = Seq(
-          $"ts_ms" < 1705000000000L,
-          $"ts_ms" >= 1705000000000L && $"ts_ms" < 1706000000000L,
-          $"ts_ms" >= 1706000000000L)
-        cuts.zipWithIndex.foreach { case (pred, i) =>
-          graft.cdc.Retract.mergeBatchMv(log.filter(pred), groupOf,
-            measureOf, table, s"$tmp/mv", i.toLong)
-          if (i == 1) graft.cdc.Retract.compactMv(s, table, upToBatchId = 1L)
-        }
-        graft.cdc.Retract.mvFromTable(s, table)
-          .select($"event_type", $"band", $"n".as("n_live"),
-            $"total".as("cents"))
-          .orderBy($"event_type", $"band")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      val table = sc.table("mv")
+      val groupOf = (img: org.apache.spark.sql.Column) =>
+        struct(img.getField("event_type").as("event_type"),
+          floor(img.getField("value") / 50).cast("long").as("band"))
+      val measureOf = (img: org.apache.spark.sql.Column) =>
+        floor(img.getField("value") * 100)
+      val cuts = Seq(
+        $"ts_ms" < 1705000000000L,
+        $"ts_ms" >= 1705000000000L && $"ts_ms" < 1706000000000L,
+        $"ts_ms" >= 1706000000000L)
+      cuts.zipWithIndex.foreach { case (pred, i) =>
+        graft.cdc.Retract.mergeBatchMv(log.filter(pred), groupOf,
+          measureOf, table, sc.path("mv"), i.toLong)
+        if (i == 1) graft.cdc.Retract.compactMv(s, table, upToBatchId = 1L)
       }
+      graft.cdc.Retract.mvFromTable(s, table)
+        .select($"event_type", $"band", $"n".as("n_live"),
+          $"total".as("cents"))
+        .orderBy($"event_type", $"band")
     }),
   )
 

@@ -150,52 +150,35 @@ object Corpus {
     // reject a batch-1 doc matching an ADMITTED batch-0 doc) from exact
     // shingle Jaccard. The per-batch join's single delta-side exchange is
     // plan-asserted in TextDedupSpec.
-    "doc_dedup_gate" -> ((s, dir) => {
+    "doc_dedup_gate" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val docs = Tables(s, dir, "documents").select($"doc_id", $"text")
-      // per-run salted table/path: two harness processes sharing a JVM or
-      // box (bench + verify) must not corrupt each other's replay index,
-      // and the fixture cleans up after itself (the table is dropped
-      // before returning — see the inIndex checkpoint below)
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_gate_replay_idx_$salt"
-      val path = new org.apache.hadoop.fs.Path(
-        java.nio.file.Files.createTempDirectory(s"graft_gate_$salt").toString,
-        "idx")
-      val fs = path.getFileSystem(s.sessionState.newHadoopConf())
-      try {
-        // buckets=8: the gate-scale fixture (≤5k docs/batch) writes 2
-        // bucketed partitions + a compaction rewrite per execution — 32
-        // buckets spent most of the query's wall-clock committing
-        // near-empty files (VERDICT r7 #2). The 100 TB deployment sizes
-        // buckets to the corpus; the bucketed-join plan shape is identical.
-        val d1 = graft.operators.TextDedup.dedupGateBatch(
-          docs.filter($"doc_id" % 5 =!= 4), "doc_id", "text", table,
-          path.toString, batchId = 0L, threshold = 0.8, buckets = 8)
-        val d2 = graft.operators.TextDedup.dedupGateBatch(
-          docs.filter($"doc_id" % 5 === 4), "doc_id", "text", table,
-          path.toString, batchId = 1L, threshold = 0.8, buckets = 8)
-        graft.operators.TextDedup.compactGateIndex(s, table, upToBatchId = 0L)
-        val rejected = d1.select($"new_id").union(d2.select($"new_id"))
-          .distinct().withColumnRenamed("new_id", "doc_id")
-          .withColumn("_rej", lit(1))
-        // materialized (one small row per admitted doc) so the returned
-        // frame no longer references the catalog table and the fixture can
-        // be dropped in the finally
-        val inIndex = s.table(table).select($"doc_id").distinct()
-          .withColumn("_idx", lit(1)).localCheckpoint(true)
-        docs.select($"doc_id")
-          .join(rejected, Seq("doc_id"), "left")
-          .join(inIndex, Seq("doc_id"), "left")
-          .select($"doc_id",
-            when($"_rej" === 1, "rejected")
-              .when($"_idx" === 1, "admitted")
-              .otherwise("admitted_nosketch").as("status"))
-          .orderBy($"doc_id")
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        fs.delete(path.getParent, true)
-      }
+      val table = sc.table("idx")
+      // buckets=8: the gate-scale fixture (≤5k docs/batch) writes 2
+      // bucketed partitions + a compaction rewrite per execution — 32
+      // buckets spent most of the query's wall-clock committing
+      // near-empty files (VERDICT r7 #2). The 100 TB deployment sizes
+      // buckets to the corpus; the bucketed-join plan shape is identical.
+      val d1 = graft.operators.TextDedup.dedupGateBatch(
+        docs.filter($"doc_id" % 5 =!= 4), "doc_id", "text", table,
+        sc.path("idx"), batchId = 0L, threshold = 0.8, buckets = 8)
+      val d2 = graft.operators.TextDedup.dedupGateBatch(
+        docs.filter($"doc_id" % 5 === 4), "doc_id", "text", table,
+        sc.path("idx"), batchId = 1L, threshold = 0.8, buckets = 8)
+      graft.operators.TextDedup.compactGateIndex(s, table, upToBatchId = 0L)
+      val rejected = d1.select($"new_id").union(d2.select($"new_id"))
+        .distinct().withColumnRenamed("new_id", "doc_id")
+        .withColumn("_rej", lit(1))
+      val inIndex = s.table(table).select($"doc_id").distinct()
+        .withColumn("_idx", lit(1))
+      docs.select($"doc_id")
+        .join(rejected, Seq("doc_id"), "left")
+        .join(inIndex, Seq("doc_id"), "left")
+        .select($"doc_id",
+          when($"_rej" === 1, "rejected")
+            .when($"_idx" === 1, "admitted")
+            .otherwise("admitted_nosketch").as("status"))
+        .orderBy($"doc_id")
     }),
 
     // Same near-dup semantics via SimHash pigeonhole banding + exact
@@ -245,7 +228,7 @@ object Corpus {
     // latest-per-id over the maintained table; the oracle is the SAME
     // one-shot recursive-CTE closure as doc_dup_clusters: batched arrival
     // order must not move a single label.
-    "doc_dup_clusters_incr" -> ((s, dir) => {
+    "doc_dup_clusters_incr" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val pairs = graft.operators.TextDedup
         .nearDuplicates(Tables(s, dir, "documents"), "doc_id", "text",
@@ -253,29 +236,18 @@ object Corpus {
         .select($"id_a", $"id_b")
         // three delta filters below must not replay the whole LSH pipeline
         .localCheckpoint(true)
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_cc_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_cc_$salt")
-        .toString
-      try {
-        (0 to 2).foreach { p =>
-          graft.operators.Components.mergeBatchEdges(
-            pairs.filter(pmod($"id_a" + $"id_b", lit(3)) === p),
-            table, s"$tmp/state", batchId = p.toLong)
-          if (p == 1)
-            graft.operators.Components
-              .compactComponents(s, table, upToBatchId = 1L)
-        }
-        graft.operators.Components.componentsFromTable(s, table)
-          .select($"component".as("cluster_id"), $"id".as("doc_id"))
-          .orderBy($"cluster_id", $"doc_id")
-          // materialized so the returned frame no longer references the
-          // fixture table dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      val table = sc.table("state")
+      (0 to 2).foreach { p =>
+        graft.operators.Components.mergeBatchEdges(
+          pairs.filter(pmod($"id_a" + $"id_b", lit(3)) === p),
+          table, sc.path("state"), batchId = p.toLong)
+        if (p == 1)
+          graft.operators.Components
+            .compactComponents(s, table, upToBatchId = 1L)
       }
+      graft.operators.Components.componentsFromTable(s, table)
+        .select($"component".as("cluster_id"), $"id".as("doc_id"))
+        .orderBy($"cluster_id", $"doc_id")
     }),
 
     // Canonical-document selection — the step that completes the dedup
@@ -313,7 +285,7 @@ object Corpus {
     // argmax shuffles one struct per cluster. Oracle = doc_dedup_keep's
     // one-shot closure + argmax VERBATIM — batched arrival must not move
     // a single keep choice.
-    "doc_dedup_keep_incr" -> ((s, dir) => {
+    "doc_dedup_keep_incr" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val docs = Tables(s, dir, "documents")
@@ -321,35 +293,26 @@ object Corpus {
         .nearDuplicates(docs, "doc_id", "text", threshold = 0.8)
         .select($"id_a", $"id_b")
         .localCheckpoint(true)
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_ck_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ck_$salt")
-        .toString
-      try {
-        (0 to 2).foreach { p =>
-          graft.operators.Components.mergeBatchEdges(
-            pairs.filter(pmod($"id_a" + $"id_b", lit(3)) === p),
-            table, s"$tmp/state", batchId = p.toLong)
-          if (p == 1)
-            graft.operators.Components
-              .compactComponents(s, table, upToBatchId = 1L)
-        }
-        val clusters = graft.operators.Components.componentsFromTable(s, table)
-        val withLen = clusters
-          .join(docs.select($"doc_id".as("id"), length($"text").as("len")),
-            "id")
-        withLen
-          .withColumn("rk", row_number().over(
-            Window.partitionBy($"component").orderBy($"len".desc, $"id")))
-          .groupBy($"component".as("cluster_id"))
-          .agg(max(when($"rk" === 1, $"id")).as("keep_id"),
-            count(lit(1)).as("n_members"))
-          .orderBy($"cluster_id")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      val table = sc.table("state")
+      (0 to 2).foreach { p =>
+        graft.operators.Components.mergeBatchEdges(
+          pairs.filter(pmod($"id_a" + $"id_b", lit(3)) === p),
+          table, sc.path("state"), batchId = p.toLong)
+        if (p == 1)
+          graft.operators.Components
+            .compactComponents(s, table, upToBatchId = 1L)
       }
+      val clusters = graft.operators.Components.componentsFromTable(s, table)
+      val withLen = clusters
+        .join(docs.select($"doc_id".as("id"), length($"text").as("len")),
+          "id")
+      withLen
+        .withColumn("rk", row_number().over(
+          Window.partitionBy($"component").orderBy($"len".desc, $"id")))
+        .groupBy($"component".as("cluster_id"))
+        .agg(max(when($"rk" === 1, $"id")).as("keep_id"),
+          count(lit(1)).as("n_members"))
+        .orderBy($"cluster_id")
     }),
 
     // Corpus-level resemblance sketch (operators.CorpusSketch): pairwise
@@ -417,31 +380,18 @@ object Corpus {
     // those same centroids (searchAgainstIndex probes what it persisted,
     // unlike ivfTopK which re-derives means from labels) — so the index
     // lifecycle build→persist→search is correctness-gated, not just the
-    // rerank. Salted fixture table/path, self-cleaning, like
-    // doc_dedup_gate.
-    "knn_ivf_index" -> ((s, dir) => {
+    // rerank.
+    "knn_ivf_index" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val emb = Tables(s, dir, "embeddings")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_ivf_idx_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ivf_$salt")
-        .toString
-      try {
-        graft.operators.AnnIndex.ivfIndex(emb, "vec_id", "embedding",
-          k = 8, indexTable = table, indexPath = s"$tmp/idx", iters = 3)
-        graft.operators.AnnIndex.searchAgainstIndex(s, table,
-            emb.filter($"vec_id" === 0L).select($"vec_id", $"embedding"),
-            "vec_id", "embedding", k = 10, nprobe = 3)
-          .select($"vec_id", $"sim")
-          .orderBy($"sim".desc, $"vec_id")
-          // materialized (10 rows) so the returned frame no longer
-          // references the fixture tables dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        s.sql(s"DROP TABLE IF EXISTS ${table}_centroids")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("idx")
+      graft.operators.AnnIndex.ivfIndex(emb, "vec_id", "embedding",
+        k = 8, indexTable = table, indexPath = sc.path("idx"), iters = 3)
+      graft.operators.AnnIndex.searchAgainstIndex(s, table,
+          emb.filter($"vec_id" === 0L).select($"vec_id", $"embedding"),
+          "vec_id", "embedding", k = 10, nprobe = 3)
+        .select($"vec_id", $"sim")
+        .orderBy($"sim".desc, $"vec_id")
     }),
 
     // IVF index DELTA INGEST (operators.AnnIndex.appendToIndex): the
@@ -453,33 +403,21 @@ object Corpus {
     // probes. The oracle replays the k-means build over the prefix, then
     // assigns the WHOLE corpus against the final centroids — exactly what
     // build + append materialize.
-    "knn_ivf_append" -> ((s, dir) => {
+    "knn_ivf_append" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val emb = Tables(s, dir, "embeddings")
       val cut = emb.count() * 4 / 5
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_ivfa_idx_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_ivfa_$salt")
-        .toString
-      try {
-        graft.operators.AnnIndex.ivfIndex(emb.filter($"vec_id" < cut),
-          "vec_id", "embedding", k = 8, indexTable = table,
-          indexPath = s"$tmp/idx", iters = 3)
-        graft.operators.AnnIndex.appendToIndex(s, table,
-          emb.filter($"vec_id" >= cut), "vec_id", "embedding")
-        graft.operators.AnnIndex.searchAgainstIndex(s, table,
-            emb.filter($"vec_id" === 0L).select($"vec_id", $"embedding"),
-            "vec_id", "embedding", k = 10, nprobe = 3)
-          .select($"vec_id", $"sim")
-          .orderBy($"sim".desc, $"vec_id")
-          // materialized (10 rows) so the returned frame no longer
-          // references the fixture tables dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        s.sql(s"DROP TABLE IF EXISTS ${table}_centroids")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("idx")
+      graft.operators.AnnIndex.ivfIndex(emb.filter($"vec_id" < cut),
+        "vec_id", "embedding", k = 8, indexTable = table,
+        indexPath = sc.path("idx"), iters = 3)
+      graft.operators.AnnIndex.appendToIndex(s, table,
+        emb.filter($"vec_id" >= cut), "vec_id", "embedding")
+      graft.operators.AnnIndex.searchAgainstIndex(s, table,
+          emb.filter($"vec_id" === 0L).select($"vec_id", $"embedding"),
+          "vec_id", "embedding", k = 10, nprobe = 3)
+        .select($"vec_id", $"sim")
+        .orderBy($"sim".desc, $"vec_id")
     }),
 
     // Scalar int8 quantization (operators.Quantize): per-dim affine codec
@@ -644,31 +582,21 @@ object Corpus {
     // emb_decontaminate EXACTLY, so this gate reuses its oracle; the
     // pruned-nprobe recall is pinned in CurationSpec on a planted
     // paraphrase set.
-    "emb_decontaminate_ann" -> ((s, dir) => {
+    "emb_decontaminate_ann" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val e = Tables(s, dir, "embeddings")
       val bench = e.filter($"vec_id" % 20 === 0)
         .select(($"vec_id" / 20).cast("long").as("vec_id"), $"embedding")
       val train = e.filter($"vec_id" % 20 =!= 0)
         .select($"vec_id", $"embedding")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_annd_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_annd_$salt")
-        .toString
-      try {
-        graft.operators.AnnIndex.ivfIndex(bench, "vec_id", "embedding",
-          k = 8, table, s"$tmp/idx")
-        graft.operators.Curation.decontaminateSemanticAnn(train, "vec_id",
-            "embedding", table, minSim = 0.45, nprobe = 8)
-          .select($"train_id", ($"bench_id" * 20).as("bench_id"),
-            round($"sim", 6).as("sim"))
-          .orderBy($"train_id", $"bench_id")
-          .localCheckpoint(true)
-      } finally {
-        Seq(table, s"${table}_centroids").foreach(t =>
-          s.sql(s"DROP TABLE IF EXISTS $t"))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("idx")
+      graft.operators.AnnIndex.ivfIndex(bench, "vec_id", "embedding",
+        k = 8, table, sc.path("idx"))
+      graft.operators.Curation.decontaminateSemanticAnn(train, "vec_id",
+          "embedding", table, minSim = 0.45, nprobe = 8)
+        .select($"train_id", ($"bench_id" * 20).as("bench_id"),
+          round($"sim", 6).as("sim"))
+        .orderBy($"train_id", $"bench_id")
     }),
 
     "emb_decontaminate" -> ((s, dir) => {
@@ -708,27 +636,18 @@ object Corpus {
     // one-shot word counts, so the corpus-health fit refreshes from a
     // vocabulary-sized state read after every absorbed batch — the
     // result is the one-shot doc_zipf VERBATIM (gate reuses its oracle).
-    "doc_zipf_state" -> ((s, dir) => {
+    "doc_zipf_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val docs = Tables(s, dir, "documents")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_zipf_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_zs_$salt")
-        .toString
-      try {
-        val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
-          16, 10).cast("long"), lit(3))
-        for (i <- 0 until 3)
-          graft.operators.LangModel.lmMergeBatch(
-            docs.filter(part === i), "doc_id", "text",
-            table, s"$tmp/state", i.toLong)
-        graft.operators.LangModel.lmCompactState(s, table, 1L)
-        graft.operators.TextAnalysis.zipfFromState(s, table, topN = 500)
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
+        16, 10).cast("long"), lit(3))
+      for (i <- 0 until 3)
+        graft.operators.LangModel.lmMergeBatch(
+          docs.filter(part === i), "doc_id", "text",
+          table, sc.path("state"), i.toLong)
+      graft.operators.LangModel.lmCompactState(s, table, 1L)
+      graft.operators.TextAnalysis.zipfFromState(s, table, topN = 500)
     }),
 
     // deterministic global corpus shuffle (Curation.shuffleShards):
@@ -767,32 +686,23 @@ object Corpus {
     // gram scan. Exact-integer stats + the shared scoring chain make
     // state ≡ one-shot bit-exact; the oracle is doc_dsir_weights'
     // replay VERBATIM.
-    "doc_dsir_state" -> ((s, dir) => {
+    "doc_dsir_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val docs = Tables(s, dir, "documents")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_dsir_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_dsir_$salt")
-        .toString
-      try {
-        val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
-          16, 10).cast("long"), lit(3))
-        for (i <- 0 until 3) {
-          val slice = docs.filter(part === i)
-          graft.operators.Dsir.dsirMergeBatch(slice, "text",
-            Some(slice.filter(
-              $"source".isin("src0", "src1", "src2", "src3"))),
-            "text", table, s"$tmp/state", i.toLong)
-        }
-        graft.operators.Dsir.dsirCompactState(s, table, 1L)
-        graft.operators.Dsir
-          .dsirWeightsFromState(docs, "doc_id", "text", table)
-          .orderBy($"doc_id")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      val table = sc.table("state")
+      val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
+        16, 10).cast("long"), lit(3))
+      for (i <- 0 until 3) {
+        val slice = docs.filter(part === i)
+        graft.operators.Dsir.dsirMergeBatch(slice, "text",
+          Some(slice.filter(
+            $"source".isin("src0", "src1", "src2", "src3"))),
+          "text", table, sc.path("state"), i.toLong)
       }
+      graft.operators.Dsir.dsirCompactState(s, table, 1L)
+      graft.operators.Dsir
+        .dsirWeightsFromState(docs, "doc_id", "text", table)
+        .orderBy($"doc_id")
     }),
 
     // DSIR importance RESAMPLING: Gumbel top-64 over key =
@@ -924,34 +834,25 @@ object Corpus {
     // state + ONE filtered scan. The result must be the one-shot
     // doc_bm25_topk VERBATIM (shared IEEE chain, exact-integer global
     // stats) — the gate reuses that oracle.
-    "doc_bm25_state" -> ((s, dir) => {
+    "doc_bm25_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val docs = Tables(s, dir, "documents")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_bm25_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_bm25_$salt")
-        .toString
-      try {
-        val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
-          16, 10).cast("long"), lit(3))
-        for (i <- 0 until 3)
-          graft.operators.TextAnalysis.bm25MergeBatch(
-            docs.filter(part === i), "doc_id", "text",
-            table, s"$tmp/state", i.toLong)
-        graft.operators.TextAnalysis.bm25CompactState(s, table, 1L)
-        val scored = graft.operators.TextAnalysis.bm25FromState(
-          docs, "doc_id", "text", Seq("vector", "join", "scan"), table)
-        scored.orderBy($"bm25".desc, $"doc_id").limit(20)
-          .withColumn("rnk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy($"bm25".desc, $"doc_id")).cast("bigint"))
-          .select($"doc_id", $"rnk", round($"bm25", 6).as("bm25"))
-          .orderBy($"rnk")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
+        16, 10).cast("long"), lit(3))
+      for (i <- 0 until 3)
+        graft.operators.TextAnalysis.bm25MergeBatch(
+          docs.filter(part === i), "doc_id", "text",
+          table, sc.path("state"), i.toLong)
+      graft.operators.TextAnalysis.bm25CompactState(s, table, 1L)
+      val scored = graft.operators.TextAnalysis.bm25FromState(
+        docs, "doc_id", "text", Seq("vector", "join", "scan"), table)
+      scored.orderBy($"bm25".desc, $"doc_id").limit(20)
+        .withColumn("rnk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy($"bm25".desc, $"doc_id")).cast("bigint"))
+        .select($"doc_id", $"rnk", round($"bm25", 6).as("bm25"))
+        .orderBy($"rnk")
     }),
 
     // The bigram LM as MAINTAINED state (LangModel.lmMergeBatch /
@@ -962,29 +863,20 @@ object Corpus {
     // the docs being scored. Over the absorbed corpus the result is the
     // one-shot doc_lm_perplexity VERBATIM (shared IEEE chain, exact
     // integer counts) — the gate reuses that oracle.
-    "doc_lm_state" -> ((s, dir) => {
+    "doc_lm_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val docs = Tables(s, dir, "documents")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_lm_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_lm_$salt")
-        .toString
-      try {
-        val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
-          16, 10).cast("long"), lit(3))
-        for (i <- 0 until 3)
-          graft.operators.LangModel.lmMergeBatch(
-            docs.filter(part === i), "doc_id", "text",
-            table, s"$tmp/state", i.toLong)
-        graft.operators.LangModel.lmCompactState(s, table, 1L)
-        graft.operators.LangModel
-          .bigramPerplexityFromState(docs, "doc_id", "text", table)
-          .orderBy($"doc_id")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
+        16, 10).cast("long"), lit(3))
+      for (i <- 0 until 3)
+        graft.operators.LangModel.lmMergeBatch(
+          docs.filter(part === i), "doc_id", "text",
+          table, sc.path("state"), i.toLong)
+      graft.operators.LangModel.lmCompactState(s, table, 1L)
+      graft.operators.LangModel
+        .bigramPerplexityFromState(docs, "doc_id", "text", table)
+        .orderBy($"doc_id")
     }),
 
     // Bigram novelty against a maintained reference state
@@ -996,27 +888,18 @@ object Corpus {
     // (n_bigrams, unseen) integers + the round-6 ratio from state + ONE
     // gram scan — the n-gram memorization/contamination check run
     // against state instead of a corpus rescan.
-    "doc_lm_novelty" -> ((s, dir) => {
+    "doc_lm_novelty" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val docs = Tables(s, dir, "documents")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_lm_nov_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_nov_$salt")
-        .toString
-      try {
-        val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
-          16, 10).cast("long"), lit(200))
-        graft.operators.LangModel.lmMergeBatch(
-          docs.filter(part === 0), "doc_id", "text", table, s"$tmp/state", 0L)
-        graft.operators.LangModel.lmCompactState(s, table, 0L)
-        graft.operators.LangModel
-          .noveltyFromState(docs, "doc_id", "text", table)
-          .orderBy($"doc_id")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      val part = pmod(conv(substring(md5($"doc_id".cast("string")), 1, 6),
+        16, 10).cast("long"), lit(200))
+      graft.operators.LangModel.lmMergeBatch(
+        docs.filter(part === 0), "doc_id", "text", table, sc.path("state"), 0L)
+      graft.operators.LangModel.lmCompactState(s, table, 0L)
+      graft.operators.LangModel
+        .noveltyFromState(docs, "doc_id", "text", table)
+        .orderBy($"doc_id")
     }),
 
     // Reciprocal-rank fusion (Fusion.rrfFuse): hybrid ranking from the

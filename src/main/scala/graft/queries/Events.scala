@@ -16,6 +16,47 @@ object Events {
   private val GAP_30M_US = 1800000000L
   private val WIN_10M_US = 600000000L
 
+  /** The crash-replay stream of the production-shaped monitors: `first`
+    * lands as parquet and one AvailableNow run of a checkpointed stream
+    * absorbs it through the per-batch hook `maintain`; `second` is then
+    * appended, the restarted stream crashes once after `maintain` and
+    * before its commit, and a third run replays that batch, whose state
+    * writes must dynamic-overwrite their own partitions. Returns the
+    * batch ids that absorbed `first` and those that absorbed `second`.
+    */
+  private def crashReplay(sc: Scratch, first: DataFrame, second: DataFrame)(
+      maintain: (DataFrame, Long) => Unit): (Seq[Long], Seq[Long]) = {
+    val in = sc.path("in")
+    val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
+    val boom = new java.util.concurrent.atomic.AtomicInteger(0)
+    def runStream(crashOnce: Boolean): Unit = {
+      val q = first.sparkSession.readStream.schema(first.schema).parquet(in)
+        .writeStream
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", sc.path("ckpt"))
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          if (!b.isEmpty) {
+            maintain(b, id)
+            seen.synchronized { seen += id }
+            if (crashOnce && boom.getAndIncrement() == 0)
+              throw new RuntimeException(
+                "simulated crash between maintenance and commit")
+          }
+          ()
+        }
+        .start()
+      try q.awaitTermination(240000)
+      catch { case e: Exception if crashOnce => () }
+    }
+    first.write.parquet(in)
+    runStream(crashOnce = false)
+    val batchesA = seen.toSeq
+    second.write.mode("append").parquet(in)
+    runStream(crashOnce = true) // crashes after the state writes
+    runStream(crashOnce = false) // replay completes the batch
+    (batchesA, seen.toSeq.diff(batchesA))
+  }
+
   val queries: Map[String, Q] = Map(
     // Backward as-of join: each purchase matched to the user's latest click
     // at or before it (kdb-style). One shuffle on user_id. Clicks are
@@ -461,34 +502,25 @@ object Events {
     // merged ≡ one-shot EXACTLY — the oracle replays the one-shot
     // bottom-k over the whole stream and the hash pins the maintained
     // table's sketch rows (n_sk, u_max integer-exact) and estimate.
-    "evt_kmv_state" -> ((s, dir) => {
+    "evt_kmv_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val k = 256
       val ev = Tables(s, dir, "events").filter($"event_type" === "click")
         .withColumn("ud",
           expr("user_id * 100000 + unix_micros(ts) div 86400000000"))
         .withColumn("_day", expr("unix_micros(ts) div 86400000000"))
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_kmv_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_kmv_$salt")
-        .toString
-      try {
-        graft.operators.Kmv.mergeBatch(ev.filter(pmod($"_day", lit(2)) === 0),
-          Nil, "ud", k, table, s"$tmp/state", batchId = 0L)
-        graft.operators.Kmv.mergeBatch(ev.filter(pmod($"_day", lit(2)) === 1),
-          Nil, "ud", k, table, s"$tmp/state", batchId = 1L)
-        graft.operators.Kmv.compactSketch(s, table, upToBatchId = 1L, Nil, k)
-        val sk = graft.operators.Kmv.sketchFromTable(s, table, Nil, k)
-          .localCheckpoint(true)
-        val est = graft.operators.Kmv.estimateFromSketch(sk, Nil, k)
-        sk.agg(count(lit(1)).as("n_sk"), max($"u").as("u_max"))
-          .crossJoin(est.select(round($"estimate", 4).as("est_click_days")))
-          .select($"est_click_days", $"n_sk", $"u_max")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      graft.operators.Kmv.mergeBatch(ev.filter(pmod($"_day", lit(2)) === 0),
+        Nil, "ud", k, table, sc.path("state"), batchId = 0L)
+      graft.operators.Kmv.mergeBatch(ev.filter(pmod($"_day", lit(2)) === 1),
+        Nil, "ud", k, table, sc.path("state"), batchId = 1L)
+      graft.operators.Kmv.compactSketch(s, table, upToBatchId = 1L, Nil, k)
+      val sk = graft.operators.Kmv.sketchFromTable(s, table, Nil, k)
+        .localCheckpoint(true)
+      val est = graft.operators.Kmv.estimateFromSketch(sk, Nil, k)
+      sk.agg(count(lit(1)).as("n_sk"), max($"u").as("u_max"))
+        .crossJoin(est.select(round($"estimate", 4).as("est_click_days")))
+        .select($"est_click_days", $"n_sk", $"u_max")
     }),
 
     // Count-Min frequency estimates for the top-20 most active users
@@ -655,35 +687,24 @@ object Events {
     // minimum is 0, so the combine is EXACT and the oracle is plain
     // counting — a wrong batch minimum, a double-counted replay, or a
     // broken compaction merge all shift the hash.
-    "evt_freq_items_state" -> ((s, dir) => {
+    "evt_freq_items_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val ev = Tables(s, dir, "events")
         .withColumn("_day", datediff(to_date($"ts"), to_date(lit("1970-01-01"))))
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_fi_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_fi_$salt")
-        .toString
-      try {
-        graft.operators.FreqItemsState.mergeBatch(
-          ev.filter(pmod($"_day", lit(2)) === 0), "user_id", 4096,
-          table, s"$tmp/state", batchId = 0L)
-        graft.operators.FreqItemsState.mergeBatch(
-          ev.filter(pmod($"_day", lit(2)) === 1), "user_id", 4096,
-          table, s"$tmp/state", batchId = 1L)
-        graft.operators.FreqItemsState.compactSummary(s, table,
-          upToBatchId = 1L, m = 4096)
-        graft.operators.FreqItemsState.summaryFromTable(s, table, 4096)
-          .select($"item".as("user_id"), $"est".as("est_cnt"),
-            $"lb".as("lb_cnt"))
-          .filter($"lb_cnt" > 66)
-          .orderBy($"user_id")
-          // materialized so the returned frame no longer references the
-          // fixture table dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      graft.operators.FreqItemsState.mergeBatch(
+        ev.filter(pmod($"_day", lit(2)) === 0), "user_id", 4096,
+        table, sc.path("state"), batchId = 0L)
+      graft.operators.FreqItemsState.mergeBatch(
+        ev.filter(pmod($"_day", lit(2)) === 1), "user_id", 4096,
+        table, sc.path("state"), batchId = 1L)
+      graft.operators.FreqItemsState.compactSummary(s, table,
+        upToBatchId = 1L, m = 4096)
+      graft.operators.FreqItemsState.summaryFromTable(s, table, 4096)
+        .select($"item".as("user_id"), $"est".as("est_cnt"),
+          $"lb".as("lb_cnt"))
+        .filter($"lb_cnt" > 66)
+        .orderBy($"user_id")
     }),
 
     // Cumulative distinct users to date (Hll.cumulativeEstimate) — the
@@ -850,31 +871,22 @@ object Events {
     // rescans raw data. Counter-sum merges of disjoint batches equal the
     // one-shot histograms exactly, so the one-shot oracle gates the
     // whole maintain-then-compare path bit-for-bit.
-    "evt_drift_state" -> ((s, dir) => {
+    "evt_drift_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val ev = Tables(s, dir, "events").filter($"value".isNotNull)
         .withColumn("v", floor($"value" * 100).cast("long"))
         .filter($"v" >= 1)
       val mid = lit("2024-01-16 00:00:00").cast("timestamp")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_drift_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_drift_$salt")
-        .toString
-      try {
-        graft.operators.Quantiles.mergeBatch(ev.filter($"ts" < mid),
-          Seq("event_type"), "v", table, s"$tmp/hist", batchId = 0L)
-        graft.operators.Quantiles.mergeBatch(ev.filter($"ts" >= mid),
-          Seq("event_type"), "v", table, s"$tmp/hist", batchId = 1L)
-        graft.operators.Drift
-          .driftFromTable(s, table, Seq("event_type"), Seq(0L), Seq(1L))
-          .select($"event_type", $"n_a", $"n_b", $"buckets",
-            $"ks_num", $"ks", $"tv_num", $"tv", round($"psi", 6).as("psi"))
-          .orderBy($"event_type")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val table = sc.table("state")
+      graft.operators.Quantiles.mergeBatch(ev.filter($"ts" < mid),
+        Seq("event_type"), "v", table, sc.path("hist"), batchId = 0L)
+      graft.operators.Quantiles.mergeBatch(ev.filter($"ts" >= mid),
+        Seq("event_type"), "v", table, sc.path("hist"), batchId = 1L)
+      graft.operators.Drift
+        .driftFromTable(s, table, Seq("event_type"), Seq(0L), Seq(1L))
+        .select($"event_type", $"n_a", $"n_b", $"buckets",
+          $"ks_num", $"ks", $"tv_num", $"tv", round($"psi", 6).as("psi"))
+        .orderBy($"event_type")
     }),
 
     // The drift monitor run WHOLE, production-shaped: a real Structured
@@ -889,61 +901,25 @@ object Events {
     // rows alone. The one-shot evt_drift_value oracle gates the whole
     // maintain-crash-replay-compare path bit-for-bit in its integer
     // columns.
-    "cdc_drift_monitor" -> ((s, dir) => {
+    "cdc_drift_monitor" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val ev = Tables(s, dir, "events").filter($"value".isNotNull)
         .withColumn("v", floor($"value" * 100).cast("long"))
         .filter($"v" >= 1)
         .select($"event_type", $"v", $"ts")
       val mid = lit("2024-01-16 00:00:00").cast("timestamp")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_mon_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_mon_$salt")
-        .toString
-      val streamDir = s"$tmp/in"
-      try {
-        val feed = ev.select($"event_type", $"v")
-        val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
-        val boom = new java.util.concurrent.atomic.AtomicInteger(0)
-        def runStream(crashOnce: Boolean): Unit = {
-          val q = s.readStream.schema(feed.schema).parquet(streamDir)
-            .writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              if (!b.isEmpty) {
-                graft.operators.Quantiles.mergeBatch(b, Seq("event_type"),
-                  "v", table, s"$tmp/hist", id)
-                seen.synchronized { seen += id }
-                if (crashOnce && boom.getAndIncrement() == 0)
-                  throw new RuntimeException(
-                    "simulated crash between maintenance and commit")
-              }
-              ()
-            }
-            .start()
-          try q.awaitTermination(240000)
-          catch { case e: Exception if crashOnce => () }
-        }
-        ev.filter($"ts" < mid).select($"event_type", $"v")
-          .write.parquet(streamDir)
-        runStream(crashOnce = false)
-        val batchesA = seen.toSeq
-        ev.filter($"ts" >= mid).select($"event_type", $"v")
-          .write.mode("append").parquet(streamDir)
-        runStream(crashOnce = true) // crashes after the state write
-        runStream(crashOnce = false) // replay completes the batch
-        val batchesB = seen.toSeq.diff(batchesA)
-        graft.operators.Drift
-          .driftFromTable(s, table, Seq("event_type"), batchesA, batchesB)
-          .select($"event_type", $"n_a", $"n_b", $"buckets",
-            $"ks_num", $"ks", $"tv_num", $"tv", round($"psi", 6).as("psi"))
-          .orderBy($"event_type")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      val table = sc.table("hist")
+      val (batchesA, batchesB) = crashReplay(sc,
+          ev.filter($"ts" < mid).select($"event_type", $"v"),
+          ev.filter($"ts" >= mid).select($"event_type", $"v")) { (b, id) =>
+        graft.operators.Quantiles.mergeBatch(b, Seq("event_type"),
+          "v", table, sc.path("hist"), id)
       }
+      graft.operators.Drift
+        .driftFromTable(s, table, Seq("event_type"), batchesA, batchesB)
+        .select($"event_type", $"n_a", $"n_b", $"buckets",
+          $"ks_num", $"ks", $"tv_num", $"tv", round($"psi", 6).as("psi"))
+        .orderBy($"event_type")
     }),
 
     // The DATA-QUALITY RUNBOOK run whole, production-shaped (the
@@ -959,7 +935,7 @@ object Events {
     // epochs (Drift.driftFromTable), the verdict an exact integer
     // comparison (tv > 0.2 ⇔ 5·tv_num > 2·n_a·n_b). No raw rescan
     // anywhere; the one-shot oracle gates the whole loop.
-    "cdc_dq_runbook" -> ((s, dir) => {
+    "cdc_dq_runbook" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       import graft.operators.{Checks, Drift, Quantiles}
       val ev = Tables(s, dir, "events").filter($"value".isNotNull)
@@ -967,66 +943,32 @@ object Events {
         .filter($"v" >= 1)
         .select($"event_type", $"v", $"ts")
       val mid = lit("2024-01-16 00:00:00").cast("timestamp")
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val suiteTable = s"graft_dq_suite_$salt"
-      val histTable = s"graft_dq_hist_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_dq_$salt")
-        .toString
-      val streamDir = s"$tmp/in"
+      val suiteTable = sc.table("suite")
+      val histTable = sc.table("hist")
       val scalars = Seq(
         Checks.notNull("event_type"),
         Checks.inRange("v", lit(1L), lit(2000L)),
         Checks.matches("event_type", "^[a-z_]+$"))
-      try {
-        val seen = scala.collection.mutable.LinkedHashSet.empty[Long]
-        val boom = new java.util.concurrent.atomic.AtomicInteger(0)
-        def runStream(crashOnce: Boolean): Unit = {
-          val q = s.readStream.schema(ev.schema).parquet(streamDir)
-            .writeStream
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              if (!b.isEmpty) {
-                Checks.mergeBatchSuite(b, scalars, "ts", suiteTable,
-                  s"$tmp/suite", id)
-                Quantiles.mergeBatch(b.select($"event_type", $"v"),
-                  Seq("event_type"), "v", histTable, s"$tmp/hist", id)
-                seen.synchronized { seen += id }
-                if (crashOnce && boom.getAndIncrement() == 0)
-                  throw new RuntimeException(
-                    "simulated crash between maintenance and commit")
-              }
-              ()
-            }
-            .start()
-          try q.awaitTermination(240000)
-          catch { case e: Exception if crashOnce => () }
-        }
-        ev.filter($"ts" < mid).write.parquet(streamDir)
-        runStream(crashOnce = false)
-        val batchesA = seen.toSeq
-        ev.filter($"ts" >= mid).write.mode("append").parquet(streamDir)
-        runStream(crashOnce = true) // crashes after BOTH state writes
-        runStream(crashOnce = false) // replay completes the batch
-        val batchesB = seen.toSeq.diff(batchesA)
-        val suite = Checks.suiteFromTable(s, suiteTable,
-          asOfUs = 1706745600000000L, // 2024-02-01, the q30 idiom
-          maxLagUs = 7L * 86400000000L)
-        val drift = Drift
-          .driftFromTable(s, histTable, Seq("event_type"), batchesA, batchesB)
-          .select(lit("drift").as("check_name"),
-            $"event_type".as("target"), $"n_b".as("total"),
-            when(lit(5L) * $"tv_num" > lit(2L) * $"n_a" * $"n_b", 1L)
-              .otherwise(0L).as("violations"))
-          .withColumn("passed", $"violations" === 0L)
-        suite.unionByName(drift)
-          .orderBy($"check_name", $"target")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $suiteTable")
-        s.sql(s"DROP TABLE IF EXISTS $histTable")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      // the crash lands after BOTH state writes
+      val (batchesA, batchesB) = crashReplay(sc,
+          ev.filter($"ts" < mid), ev.filter($"ts" >= mid)) { (b, id) =>
+        Checks.mergeBatchSuite(b, scalars, "ts", suiteTable,
+          sc.path("suite"), id)
+        Quantiles.mergeBatch(b.select($"event_type", $"v"),
+          Seq("event_type"), "v", histTable, sc.path("hist"), id)
       }
+      val suite = Checks.suiteFromTable(s, suiteTable,
+        asOfUs = 1706745600000000L, // 2024-02-01, the q30 idiom
+        maxLagUs = 7L * 86400000000L)
+      val drift = Drift
+        .driftFromTable(s, histTable, Seq("event_type"), batchesA, batchesB)
+        .select(lit("drift").as("check_name"),
+          $"event_type".as("target"), $"n_b".as("total"),
+          when(lit(5L) * $"tv_num" > lit(2L) * $"n_a" * $"n_b", 1L)
+            .otherwise(0L).as("violations"))
+        .withColumn("passed", $"violations" === 0L)
+      suite.unionByName(drift)
+        .orderBy($"check_name", $"target")
     }),
   )
 

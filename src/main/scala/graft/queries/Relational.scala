@@ -250,38 +250,25 @@ object Relational {
     // exchanges on the bucketed sides (plan-asserted in BucketingSpec;
     // this gate pins the RESULTS, q3's shape through the bucketed path).
     // The at-scale story: the one organized write amortizes the fact
-    // shuffle across every later join/agg on the key. Salted table names
-    // + self-cleanup, the knn_ivf_index fixture discipline.
-    "q14_bucketed_join" -> ((s, dir) => {
+    // shuffle across every later join/agg on the key.
+    "q14_bucketed_join" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val liT = s"graft_bkt_li_$salt"
-      val ordT = s"graft_bkt_ord_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_bkt_$salt")
-        .toString
-      try {
-        graft.operators.Bucketing.bucketTable(
-          Tables(s, dir, "lineitem")
-            .select($"l_orderkey", $"l_extendedprice", $"l_discount"),
-          liT, s"$tmp/li", "l_orderkey", buckets = 8)
-        graft.operators.Bucketing.bucketTable(
-          Tables(s, dir, "orders").select($"o_orderkey", $"o_orderpriority"),
-          ordT, s"$tmp/ord", "o_orderkey", buckets = 8)
-        graft.operators.Bucketing
-          .coLocatedJoin(s, liT, ordT, "l_orderkey", "o_orderkey")
-          .groupBy($"o_orderkey", $"o_orderpriority")
-          .agg(round(sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
-            .cast("decimal(28,6)")), 2).cast("double").as("revenue"))
-          .orderBy($"revenue".desc, $"o_orderkey")
-          .limit(10)
-          // materialized (10 rows) so the returned frame no longer
-          // references the fixture tables dropped below
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $liT")
-        s.sql(s"DROP TABLE IF EXISTS $ordT")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      val liT = sc.table("li")
+      val ordT = sc.table("ord")
+      graft.operators.Bucketing.bucketTable(
+        Tables(s, dir, "lineitem")
+          .select($"l_orderkey", $"l_extendedprice", $"l_discount"),
+        liT, sc.path("li"), "l_orderkey", buckets = 8)
+      graft.operators.Bucketing.bucketTable(
+        Tables(s, dir, "orders").select($"o_orderkey", $"o_orderpriority"),
+        ordT, sc.path("ord"), "o_orderkey", buckets = 8)
+      graft.operators.Bucketing
+        .coLocatedJoin(s, liT, ordT, "l_orderkey", "o_orderkey")
+        .groupBy($"o_orderkey", $"o_orderpriority")
+        .agg(round(sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
+          .cast("decimal(28,6)")), 2).cast("double").as("revenue"))
+        .orderBy($"revenue".desc, $"o_orderkey")
+        .limit(10)
     }),
 
     // One-pass dataset profiler (operators.Profiler): per-column rows,
@@ -1024,7 +1011,7 @@ object Relational {
     // label, which is where the warm fallback differs from the cold
     // oracle's identity fallback). Integer argmax end to end — the
     // oracle unrolls both phases.
-    "q26_communities_incr" -> ((s, dir) => {
+    "q26_communities_incr" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val li = Tables(s, dir, "lineitem")
       def sym(o: org.apache.spark.sql.DataFrame) = {
@@ -1035,20 +1022,13 @@ object Relational {
           .union(e.select($"b".as("src"), $"a".as("dst")))
       }
       val ord = Tables(s, dir, "orders")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lpa_incr").toString
-      try {
-        graft.operators.Communities.labelPropagation(
-            sym(ord.filter($"o_orderdate" < "1996-01-01")), "src", "dst",
-            rounds = 2)
-          .write.parquet(s"$tmp/labels")
-        graft.operators.Communities.labelPropagationResume(sym(ord),
-            "src", "dst", s.read.parquet(s"$tmp/labels"), rounds = 1)
-          .orderBy($"node")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      graft.operators.Communities.labelPropagation(
+          sym(ord.filter($"o_orderdate" < "1996-01-01")), "src", "dst",
+          rounds = 2)
+        .write.parquet(sc.path("labels"))
+      graft.operators.Communities.labelPropagationResume(sym(ord),
+          "src", "dst", s.read.parquet(sc.path("labels")), rounds = 1)
+        .orderBy($"node")
     }),
 
     // Fuzzy entity resolution: sorted-neighborhood record linkage
@@ -1087,7 +1067,7 @@ object Relational {
     // the hash gates the entire persist-and-resume path. At 100 TB this
     // replaces the full per-refresh recompute: the daily job is ONE
     // round from yesterday's fixed point, not `iterations` from uniform.
-    "q16_pagerank_incr" -> ((s, dir) => {
+    "q16_pagerank_incr" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val li = Tables(s, dir, "lineitem")
       def sym(o: org.apache.spark.sql.DataFrame) = {
@@ -1098,20 +1078,13 @@ object Relational {
           .union(e.select($"b".as("src"), $"a".as("dst")))
       }
       val ord = Tables(s, dir, "orders")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_pr_incr").toString
-      try {
-        graft.operators.PageRank.pageRank(
-            sym(ord.filter($"o_orderdate" < "1996-01-01")), "src", "dst",
-            iterations = 2)
-          .write.parquet(s"$tmp/ranks")
-        graft.operators.PageRank.pageRankResume(sym(ord), "src", "dst",
-            s.read.parquet(s"$tmp/ranks"), iterations = 1)
-          .orderBy($"node")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-      }
+      graft.operators.PageRank.pageRank(
+          sym(ord.filter($"o_orderdate" < "1996-01-01")), "src", "dst",
+          iterations = 2)
+        .write.parquet(sc.path("ranks"))
+      graft.operators.PageRank.pageRankResume(sym(ord), "src", "dst",
+          s.read.parquet(sc.path("ranks")), iterations = 1)
+        .orderBy($"node")
     }),
 
     // The dangling-mass variant over the UNsymmetrized bipartite trade
@@ -1162,29 +1135,21 @@ object Relational {
     // compaction folds them, and the read-time sum closes to statistics
     // EXACTLY equal to the one-shot — integer moment sums are
     // associative, so the oracle is q18's one-shot replay verbatim.
-    "q20_regr_state" -> ((s, dir) => {
+    "q20_regr_state" -> ((s, dir) => Scratch(s) { sc =>
       import s.implicits._
       val base = Tables(s, dir, "lineitem").select($"l_returnflag",
         floor($"l_quantity").cast("long").as("x"),
         floor($"l_extendedprice".cast("decimal(12,2)")).cast("long").as("y"),
         pmod($"l_orderkey", lit(2)).as("_par"))
-      val salt = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      val table = s"graft_mom_state_$salt"
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_mom_$salt")
-        .toString
-      try {
-        graft.operators.Moments.mergeBatch(base.filter($"_par" === 0),
-          Seq("l_returnflag"), "x", "y", table, s"$tmp/state", batchId = 0L)
-        graft.operators.Moments.mergeBatch(base.filter($"_par" === 1),
-          Seq("l_returnflag"), "x", "y", table, s"$tmp/state", batchId = 1L)
-        graft.operators.Moments.compactMoments(s, table, upToBatchId = 1L,
-          Seq("l_returnflag"))
-        graft.operators.Moments.statsFromTable(s, table, Seq("l_returnflag"))
-          .orderBy($"l_returnflag")
-          .localCheckpoint(true)
-      } finally {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-      }
+      val table = sc.table("state")
+      graft.operators.Moments.mergeBatch(base.filter($"_par" === 0),
+        Seq("l_returnflag"), "x", "y", table, sc.path("state"), batchId = 0L)
+      graft.operators.Moments.mergeBatch(base.filter($"_par" === 1),
+        Seq("l_returnflag"), "x", "y", table, sc.path("state"), batchId = 1L)
+      graft.operators.Moments.compactMoments(s, table, upToBatchId = 1L,
+        Seq("l_returnflag"))
+      graft.operators.Moments.statsFromTable(s, table, Seq("l_returnflag"))
+        .orderBy($"l_returnflag")
     }),
 
     "q19_basket_triangles" -> ((s, dir) => {

@@ -29,7 +29,19 @@ class QueriesSpec extends AnyFunSuite {
   // (the r14 q45/q46 lesson) — internal wide-decimal arithmetic is fine.
   private val wideDecimalExempt = Set("probe_decimal_out") // the probe IS the experiment
 
+  /** The session catalog's tables and the `graft_*` entries of the JVM's
+    * temp dir: what a query's scratch state would leave behind.
+    */
+  private def scratchLeftovers(): (Set[String], Set[String]) = {
+    val catalog = spark.sessionState.catalog
+    val tables = catalog.listDatabases().flatMap(catalog.listTables(_))
+      .map(_.unquotedString).toSet
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    (tables, tmp.list().filter(_.startsWith("graft_")).toSet)
+  }
+
   test("every query runs on sf0.001; no wide-decimal output columns") {
+    val (tablesBefore, dirsBefore) = scratchLeftovers()
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
       withClue(s"query $name: ") {
@@ -48,6 +60,11 @@ class QueriesSpec extends AnyFunSuite {
         }
       }
     }
+    val (tablesAfter, dirsAfter) = scratchLeftovers()
+    assert(tablesAfter -- tablesBefore === Set.empty[String],
+      "catalog tables left behind")
+    assert(dirsAfter -- dirsBefore === Set.empty[String],
+      "temp dirs left behind")
   }
 
   test("every query has an oracle") {

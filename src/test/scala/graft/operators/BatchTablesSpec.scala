@@ -468,4 +468,46 @@ class BatchTablesSpec extends AnyFunSuite {
       assert(partitions(spark.newSession(), t) == Map(0L -> docIds(1)))
     } finally dropAll(t)
   }
+
+  test("creating a table at a path that does not exist yet logs no " +
+      "FileNotFoundException") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("bt_fresh").toString
+    val t = "graft_bt_fresh"
+    dropAll(t)
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    val level = rootLogger.getLevel
+    val warns = new ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("bt-fresh-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warns.add(e.toImmutable)
+    }
+    capture.start()
+    rootLogger.addAppender(capture, Level.WARN, null)
+    if (level.isMoreSpecificThan(Level.ERROR)) rootLogger.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    try {
+      BatchTables.ensureBatchTable(s,
+        rows(s, 0).withColumn("_batch_id", lit(-1L)).schema,
+        t, s"$root/fresh/$t")
+    } finally {
+      rootLogger.removeAppender(capture.getName)
+      rootLogger.setLevel(level)
+      ctx.updateLoggers()
+      capture.stop()
+      dropAll(t)
+    }
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    val missing = warns.asScala.filter(e =>
+      causes(e.getThrown).exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
+        e.getMessage.getFormattedMessage.contains("FileNotFoundException"))
+    assert(missing.isEmpty, missing.map(e =>
+      s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}").mkString("\n"))
+  }
 }
