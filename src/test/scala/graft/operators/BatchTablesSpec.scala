@@ -501,6 +501,7 @@ class BatchTablesSpec extends AnyFunSuite {
       ctx.updateLoggers()
       capture.stop()
       dropAll(t)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
     def causes(e: Throwable): Seq[Throwable] =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
