@@ -57,4 +57,42 @@ class MetricsSpec extends AnyFunSuite {
     // (SalaryAdjusted), attendance (LeaveRequested)
     assert(vols == Map("employee" -> 2L, "compensation" -> 1L, "attendance" -> 1L))
   }
+
+  test("maintained daily metrics: a (day, event_type) group split across " +
+      "two batches reads as the one-shot aggregate, before and after " +
+      "compaction") {
+    import spark.implicits._
+    val t = "graft_metrics_daily_split"
+    val path = java.nio.file.Files.createTempDirectory("metrics_daily").toString
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    // (day, eventType, cents) per batch: day 1's A and day 2's B span
+    // both batches with different counts, so a merge other than a sum
+    // (max, min, any row) reads a different n or cents
+    val batches = Seq(
+      Seq((1, "A", 100L), (1, "A", 250L), (1, "B", 5L), (2, "B", 7L)),
+      Seq((1, "A", 40L), (2, "B", 1L), (2, "B", 2L), (2, "B", 3L), (3, "C", 9L)))
+      .map(_.toDF("d", "eventType", "cents")
+        .select(timestamp_millis($"d" * 86400000L + Fixtures.T0).as("timestamp"),
+          $"eventType", $"cents"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("day", "event_type", "n", "cents").collect().map(_.toString).sorted.toSeq
+    try {
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Metrics.mergeBatchDaily(b, to_date($"timestamp"), $"eventType",
+          $"cents", t, path, i.toLong)
+      }
+      val want = rows(batches.reduce(_ union _)
+        .groupBy(to_date($"timestamp").as("day"), $"eventType".as("event_type"))
+        .agg(count(lit(1)).as("n"), sum($"cents").cast("long").as("cents")))
+      assert(want.size == 4)
+      assert(rows(Metrics.dailyFromTable(spark, t)) == want)
+      Metrics.compactDaily(spark, t, 1L)
+      assert(spark.table(t).select("_batch_id").distinct().as[Long].collect()
+        .toSeq == Seq(-2L))
+      assert(rows(Metrics.dailyFromTable(spark, t)) == want)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    }
+  }
 }

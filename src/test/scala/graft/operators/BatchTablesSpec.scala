@@ -511,4 +511,26 @@ class BatchTablesSpec extends AnyFunSuite {
     assert(missing.isEmpty, missing.map(e =>
       s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}").mkString("\n"))
   }
+
+  test("a _batch_id table's files are zstd-compressed, its consolidated " +
+      "partition too, whatever the writing session's codec") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.parquet.compression.codec", "gzip")
+    val root = Files.createTempDirectory("bt_codec").toString
+    val t = "graft_bt_codec"
+    val path = s"$root/$t"
+    dropAll(t)
+    try {
+      for (b <- 0L to 2L) BatchTables.writeBatch(rows(s, b), b, t, path)
+      def codecs = graft.ParquetFooters.codecs(path)
+      assert(codecs.nonEmpty && codecs.values.forall(_ == Set("ZSTD")), codecs)
+      BatchTables.compactBatchPartitions(s, t, 1L, identity)
+      assert(batchIds(s, t) == Set(-2L, 2L))
+      assert(codecs.keys.exists(_.startsWith("_batch_id=-2/")), codecs.keys)
+      assert(codecs.values.forall(_ == Set("ZSTD")), codecs)
+    } finally {
+      dropAll(t)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
 }

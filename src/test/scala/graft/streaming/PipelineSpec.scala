@@ -716,10 +716,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("publish markers stay bounded: watermark semantics + GC of old markers") {
     val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
-    for (seg <- 1 to 4)
-      Ledger.writeSegment(ledger, "hrdb", "employees", f"$seg%06d.jsonl",
-        Seq(Fixtures.env("employees", "c", "null",
-          Fixtures.emp(id = seg, num = s"EMP$seg"), Fixtures.T0 + seg * 1000L)))
+    employeeSegments(ledger, 4)
     val q = Pipeline.run(spark, ledger, root, ckpt, maxFilesPerTrigger = Some(1))
     q.awaitTermination(120000)
     // 4 batches ran, but at most the last two marker files survive
@@ -729,5 +726,46 @@ class PipelineSpec extends AnyFunSuite {
     assert(markers.length <= 2 && markers.contains("3"), markers.mkString(","))
     // and every batch's events are still publish-visible via the watermark
     assert(Pipeline.readPublished(spark, root).count() == 4)
+  }
+
+  /** A ledger of `n` one-event `employees` segments: with
+    * `maxFilesPerTrigger = 1`, `n` batches of the same shape.
+    */
+  private def employeeSegments(ledger: String, n: Int): Unit =
+    for (seg <- 1 to n)
+      Ledger.writeSegment(ledger, "hrdb", "employees", f"$seg%06d.jsonl",
+        Seq(Fixtures.env("employees", "c", "null",
+          Fixtures.emp(id = seg, num = s"EMP$seg"), Fixtures.T0 + seg * 1000L)))
+
+  test("every parquet file of both sink trees is zstd-compressed") {
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    employeeSegments(ledger, 2)
+    Pipeline.run(spark, ledger, root, ckpt, maxFilesPerTrigger = Some(1))
+      .awaitTermination(120000)
+    assert(Pipeline.publishedBatchIds(spark, root) == Seq(0L, 1L))
+    for (tree <- Seq(Pipeline.storeDir(root), Pipeline.publishDir(root))) {
+      val codecs = graft.ParquetFooters.codecs(tree)
+      // each batch wrote its own files in this tree
+      assert(Seq(0, 1).forall(b => codecs.keys.exists(_.contains(s"_batch_id=$b/"))),
+        s"$tree: ${codecs.keys}")
+      assert(codecs.values.forall(_ == Set("ZSTD")), s"$tree: $codecs")
+    }
+  }
+
+  test("batches of the same shape compile no new code: the sink write " +
+      "stage is reused across batches") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (ledger, root, ckpt) = (tmp("ledger"), tmp("sink"), tmp("ckpt"))
+    employeeSegments(ledger, 3)
+    // Janino compiles so far, sampled after each batch's data commit
+    val compiles = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val q = Pipeline.run(spark, ledger, root, ckpt, maxFilesPerTrigger = Some(1),
+      failpoint = id => compiles.put(id,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount))
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty && compiles.size == 3, compiles)
+    // batches 1 and 2 reuse batch 0's classes (a batch-id literal inlined
+    // into the write stage compiled 1-2 classes per batch)
+    assert(compiles.get(2L) == compiles.get(0L), compiles)
   }
 }
